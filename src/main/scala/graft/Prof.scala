@@ -22,10 +22,8 @@ object Prof {
         streamline.util.Knobs.fastTmp + s"/ck_prof_$runToken")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-micro-batch cost split for EVERY streaming query of the run
-    // (the witnesses with custom drains never pass through runToTable's
-    // verbose hook): a session-wide progress listener under the same
-    // opt-in flag.
+    // Per-micro-batch cost split for EVERY streaming query of the run:
+    // a session-wide progress listener under an opt-in flag.
     if (sys.env.get("GRAFT_STREAM_VERBOSE").contains("true"))
       spark.streams.addListener(
         new org.apache.spark.sql.streaming.StreamingQueryListener {

@@ -2879,49 +2879,40 @@ object Aggregates {
   private[streamline] def streamGrowthDrain(spark: SparkSession,
                                             stage: String): DataFrame = {
     import spark.implicits._
-    val ckpt = streamline.util.Knobs.fastTmp +
-      s"/ck_growthacc_${java.util.UUID.randomUUID().toString.take(8)}"
     var seen: DataFrame = null // accumulated distinct (user_id, day)
     var cls: DataFrame = null // accumulated per-pair verdicts
-    streamline.stream.Streams.withStreamConfs(spark) {
-      try {
-        val q = spark.readStream.schema("user_id LONG, day LONG")
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) =>
-              val batch = df.toDF().distinct()
-              val newPairs = (if (seen == null) batch
-                else batch.join(seen, Seq("user_id", "day"), "left_anti"))
-                .localCheckpoint(true)
-              // union INCLUDES this batch: a same-batch (u, d−1) must
-              // count as prev-day presence, and first days are final
-              // because staging is day-ordered
-              val union = (if (seen == null) newPairs
-                else seen.unionByName(newPairs)).localCheckpoint(true)
-              val firsts = union.groupBy($"user_id")
-                .agg(min($"day").as("f"))
-              val prev = union.select($"user_id",
-                ($"day" + lit(1L)).as("day"), lit(1L).as("wp"))
-              val classified = newPairs
-                .join(prev, Seq("user_id", "day"), "left")
-                .join(firsts, "user_id")
-                .select($"user_id", $"day",
-                  when($"f" === $"day", lit("new"))
-                    .when($"wp".isNotNull, lit("retained"))
-                    .otherwise(lit("resurrected")).as("cls"))
-                .localCheckpoint(true)
-              cls = if (cls == null) classified
-                else cls.unionByName(classified)
-              seen = union
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally streamline.stream.Streams.deleteRec(new java.io.File(ckpt))
-    }
+    streamline.stream.Streams.drain(spark, spark.readStream
+      .schema("user_id LONG, day LONG")
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+      .writeStream.outputMode("append")
+      .foreachBatch {
+        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+         _: Long) =>
+        val batch = df.toDF().distinct()
+        val newPairs = (if (seen == null) batch
+          else batch.join(seen, Seq("user_id", "day"), "left_anti"))
+          .localCheckpoint(true)
+        // union INCLUDES this batch: a same-batch (u, d−1) must
+        // count as prev-day presence, and first days are final
+        // because staging is day-ordered
+        val union = (if (seen == null) newPairs
+          else seen.unionByName(newPairs)).localCheckpoint(true)
+        val firsts = union.groupBy($"user_id")
+          .agg(min($"day").as("f"))
+        val prev = union.select($"user_id",
+          ($"day" + lit(1L)).as("day"), lit(1L).as("wp"))
+        val classified = newPairs
+          .join(prev, Seq("user_id", "day"), "left")
+          .join(firsts, "user_id")
+          .select($"user_id", $"day",
+            when($"f" === $"day", lit("new"))
+              .when($"wp".isNotNull, lit("retained"))
+              .otherwise(lit("resurrected")).as("cls"))
+          .localCheckpoint(true)
+        cls = if (cls == null) classified
+          else cls.unionByName(classified)
+        seen = union
+      })
     require(seen != null, "stream fed no batches (stale checkpoint?)")
     val byDay = cls.groupBy($"day").agg(count(lit(1)).as("active"),
         sum(when($"cls" === "new", 1L).otherwise(0L)).as("new_users"),

@@ -155,19 +155,12 @@ object Iterate {
     * cost) and AQE off by default (Knobs.iterAqe — a superstep's plan
     * shape is fixed and tiny, so AQE's materialize-and-replan rounds
     * are pure per-superstep latency; measured ~18% of warm loop time). */
-  private def withIterConfs[A](spark: SparkSession)(body: => A): A = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.iterPartitions(spark).toString)
-    spark.conf.set("spark.sql.adaptive.enabled",
-      streamline.util.Knobs.iterAqe(spark).toString)
-    try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
+  private def withIterConfs[A](spark: SparkSession)(body: => A): A =
+    SkewJoin.withConfs(spark, Seq(
+      "spark.sql.shuffle.partitions" ->
+        streamline.util.Knobs.iterPartitions(spark).toString,
+      "spark.sql.adaptive.enabled" ->
+        streamline.util.Knobs.iterAqe(spark).toString))(body)
 
   /** Broadcast wrap for per-superstep state tables (Knobs.iterBroadcast
     * scaladoc: map-side joins against the partition-local edge cache at
@@ -1249,16 +1242,12 @@ object Iterate {
   private[streamline] def feedbackCc(spark: SparkSession,
                                      stage: String): DataFrame = {
     import spark.implicits._
-    // JVM-unique checkpoint (the runToTable discipline): a reused
-    // checkpoint would replay committed offsets and feed no batches.
-    val ckpt = streamline.util.Knobs.fastTmp +
-      s"/ck_iterstream_${java.util.UUID.randomUUID().toString.take(8)}"
     var labels: DataFrame = null
-    val q = spark.readStream.schema("src LONG, dst LONG")
+    streamline.stream.Streams.drain(spark, spark.readStream
+      .schema("src LONG, dst LONG")
       .option("maxFilesPerTrigger", "1")
       .parquet(stage)
       .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
         // per-batch timing under the same opt-in flag as fixpoint's laps
         val verbose = sys.props.get("graft.iter.verbose")
@@ -1301,13 +1290,7 @@ object Iterate {
             lap("done")
             out
           }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    // finally: a failed drain must not leak the JVM-unique checkpoint
-    // under Knobs.fastTmp (same discipline as the Streams drains)
-    try q.awaitTermination()
-    finally streamline.stream.Streams.deleteRec(new java.io.File(ckpt))
+      })
     require(labels != null, "stream fed no batches (stale checkpoint?)")
     labels
   }

@@ -544,10 +544,7 @@ object Relational {
   private def sinkDynamicOverwrite(spark: SparkSession,
                                    dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("dynover", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("dynover", dir)
     val ev = Tables.events(spark, dir)
       // FLOOR division (subtract pmod first — DIV alone truncates
       // toward zero): keeps day bucketing aligned with the oracle's

@@ -719,55 +719,39 @@ object Dedup {
     * `base` index, and accumulates the per-batch verdicts. */
   private[streamline] def streamIncrementalDrain(
       spark: SparkSession, stage: String, base: DataFrame): DataFrame = {
-    // JVM-unique checkpoint (the runToTable discipline): a reused
-    // checkpoint would replay committed offsets and feed no batches.
-    val ckpt = streamline.util.Knobs.fastTmp +
-      s"/ck_dedupinc_${java.util.UUID.randomUUID().toString.take(8)}"
     // AtomicReference: foreachBatch runs on the streaming-execution
     // thread; the post-awaitTermination read is on the caller thread.
     // The handoff needs an explicit memory barrier (r18 ADVICE).
     val acc = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
     // The probe inside foreachBatch is STATELESS batch work — the
-    // small state-store partition count withStreamConfs pins (sized to
+    // small state-store partition count the drain pins (sized to
     // per-partition state-store fixed cost) starves its six keyed
     // joins of parallelism for no state in return. Capture the
-    // session's batch shuffle sizing here and restore it around each
+    // session's batch shuffle sizing here and scope it around each
     // probe; batches run sequentially on the execution thread, and the
     // streaming plan itself (file scan -> foreachBatch) has no
     // exchange, so the engine never reads the conf mid-flight.
-    val probeParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // withStreamConfs = the one shared witness lifecycle (small
-    // state-store partition count, checkpoint checksum manager off,
-    // both restored even if plan construction or start() throws).
-    streamline.stream.Streams.withStreamConfs(spark) {
-      try {
-        val q = spark.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // materialize within the batch scope — the batch df is not
-            // valid after the micro-batch commits. The shingled delta
-            // is checkpointed FIRST (r22): the probe references it in
-            // three join sites (md5 probe, gram explode, verify
-            // re-attach), each of which would otherwise re-read the
-            // shard and re-run the interpreted shingle lambdas.
-            val inner = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", probeParts)
-            val verdicts = try {
-              val delta = incShingled(df.toDF()).localCheckpoint(true)
-              incrementalProbe(spark, delta, base).localCheckpoint(true)
-            } finally
-              spark.conf.set("spark.sql.shuffle.partitions", inner)
-            acc.updateAndGet(prev =>
-              if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally streamline.stream.Streams.deleteRec(new java.io.File(ckpt))
-    }
+    val probeParts = Seq("spark.sql.shuffle.partitions" ->
+      spark.conf.get("spark.sql.shuffle.partitions"))
+    streamline.stream.Streams.drain(spark, spark.readStream
+      .schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(stage)
+      .writeStream.outputMode("append")
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        // materialize within the batch scope — the batch df is not
+        // valid after the micro-batch commits. The shingled delta
+        // is checkpointed FIRST (r22): the probe references it in
+        // three join sites (md5 probe, gram explode, verify
+        // re-attach), each of which would otherwise re-read the
+        // shard and re-run the interpreted shingle lambdas.
+        val verdicts = streamline.batch.SkewJoin.withConfs(spark, probeParts) {
+          val delta = incShingled(df.toDF()).localCheckpoint(true)
+          incrementalProbe(spark, delta, base).localCheckpoint(true)
+        }
+        acc.updateAndGet(prev =>
+          if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
+      })
     require(acc.get() != null, "stream fed no batches (stale checkpoint?)")
     acc.get()
   }

@@ -647,35 +647,24 @@ object Similarity {
     * streamIncrementalDrain discipline). */
   private[streamline] def streamEmbedDrain(spark: SparkSession,
       stage: String, baseIdx: DataFrame): DataFrame = {
-    val ckpt = streamline.util.Knobs.fastTmp +
-      s"/ck_dedupembs_${java.util.UUID.randomUUID().toString.take(8)}"
     // AtomicReference: foreachBatch runs on the streaming-execution
     // thread; the post-awaitTermination read is on the caller thread.
     // The handoff needs an explicit memory barrier (r18 ADVICE).
     val acc = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    streamline.stream.Streams.withStreamConfs(spark) {
-      try {
-        val q = spark.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // materialize within the batch scope — the batch df is not
-            // valid after the micro-batch commits
-            val verdicts =
-              embedProbe(spark, signBanded(spark, df.toDF()), baseIdx)
-                .localCheckpoint(true)
-            acc.updateAndGet(prev =>
-              if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally
-        streamline.stream.Streams.deleteRec(new java.io.File(ckpt))
-    }
+    streamline.stream.Streams.drain(spark, spark.readStream
+      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(stage)
+      .writeStream.outputMode("append")
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        // materialize within the batch scope — the batch df is not
+        // valid after the micro-batch commits
+        val verdicts =
+          embedProbe(spark, signBanded(spark, df.toDF()), baseIdx)
+            .localCheckpoint(true)
+        acc.updateAndGet(prev =>
+          if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
+      })
     require(acc.get() != null, "stream fed no batches (stale checkpoint?)")
     acc.get()
   }
@@ -1355,32 +1344,22 @@ object Similarity {
     * streamIncrementalDrain discipline). */
   private[streamline] def streamPhashDrain(spark: SparkSession,
       stage: String, baseIdx: DataFrame): DataFrame = {
-    val ckpt = streamline.util.Knobs.fastTmp +
-      s"/ck_dedupph_${java.util.UUID.randomUUID().toString.take(8)}"
     // AtomicReference: foreachBatch runs on the streaming-execution
     // thread; the post-awaitTermination read is on the caller thread.
     // The handoff needs an explicit memory barrier (r18 ADVICE).
     val acc = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    streamline.stream.Streams.withStreamConfs(spark) {
-      try {
-        val q = spark.readStream.schema("doc_id LONG")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val verdicts =
-              phashProbe(spark, phashBands(spark, df.toDF()), baseIdx)
-                .localCheckpoint(true)
-            acc.updateAndGet(prev =>
-              if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally
-        streamline.stream.Streams.deleteRec(new java.io.File(ckpt))
-    }
+    streamline.stream.Streams.drain(spark, spark.readStream
+      .schema("doc_id LONG")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(stage)
+      .writeStream.outputMode("append")
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val verdicts =
+          phashProbe(spark, phashBands(spark, df.toDF()), baseIdx)
+            .localCheckpoint(true)
+        acc.updateAndGet(prev =>
+          if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
+      })
     require(acc.get() != null, "stream fed no batches (stale checkpoint?)")
     acc.get()
   }

@@ -4,7 +4,7 @@ import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import streamline.Q
 
 /** §2.16 connected streams / broadcast-state pattern.
@@ -194,10 +194,7 @@ object Connect {
   private def streamConnectBroadcast(spark: SparkSession,
                                      dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("connbc", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("connbc", dir)
     val (ruleDir, stage, ckpt, out) =
       (s"$root/rules", s"$root/in", s"$root/ck", s"$root/out")
     val events = streamline.Tables.events(spark, dir)
@@ -211,24 +208,19 @@ object Connect {
     val b = events.agg(min($"ts"), max($"ts")).head()
     val cut = new java.sql.Timestamp(
       (b.getTimestamp(0).getTime + b.getTimestamp(1).getTime) / 2)
-    def drain(): Unit = {
-      val q = spark.readStream.schema(views.schema)
+    def drain(): Unit =
+      Streams.drain(spark, spark.readStream.schema(views.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           // the broadcast-state refresh point: reload the CURRENT rules
           val r = spark.read
             .schema("rule_id LONG, r_ts_us LONG, threshold DOUBLE")
             .parquet(ruleDir)
           applyRules(df, r).write.mode("append").parquet(out): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        }, checkpoint = Some(ckpt)): Unit
     // Interleaved staging: rules first (a rule precedes every data row
     // it can match), then the matching half of the data.
     rules.where($"r_ts_us" < lit(cut.getTime * 1000L))

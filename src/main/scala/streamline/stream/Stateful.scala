@@ -84,11 +84,10 @@ object Stateful {
       .groupBy(window($"ts", "1 hour"))
       .agg(count(lit(1)).as("n"))
       .select($"window.start".cast("timestamp_ntz").as("w_start"), $"n")
-    // Few-row witness: 4 state-store partitions, not the session default
-    // (round 1 paid 14 s of per-partition fixed cost for 4 rows).
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    // Few-row witness: the knob's state-store partition count, not the
+    // session default (round 1 paid 14 s of per-partition fixed cost
+    // for 4 rows).
+    Streams.withStreamConfs(spark) {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("update").start()
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -100,7 +99,7 @@ object Stateful {
       input.addData((ts("2024-03-01 09:30:00"), 9L))
       q.processAllAvailable()
       q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(name)
       .groupBy($"w_start").agg(max($"n").as("n"))
       .orderBy($"w_start")
@@ -287,9 +286,7 @@ object Stateful {
         .groupBy(window($"ts", "1 hour"))
         .agg(count(lit(1)).as("n"))
         .select($"window.start".cast("timestamp_ntz").as("w_start"), $"n")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Streams.withStreamConfs(spark) {
       val strict = windowed("10 minutes").writeStream.format("memory")
         .queryName(s"late_strict_$tag").outputMode("update").start()
       val lenient = windowed("1 day").writeStream.format("memory")
@@ -303,7 +300,7 @@ object Stateful {
       input.addData((ts("2024-03-01 09:30:00"), 9L))
       strict.processAllAvailable(); lenient.processAllAvailable()
       strict.stop(); lenient.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     def finalCounts(name: String) = spark.table(name)
       .groupBy($"w_start").agg(max($"n").as("n"))
     finalCounts(s"late_lenient_$tag").as("l")

@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryProgress, Trigger}
 import streamline.{Q, Tables}
 import streamline.util.Det._
 
@@ -18,7 +19,10 @@ import streamline.util.Det._
   * returned as a batch DataFrame. Because Structured Streaming's
   * unified model guarantees the finite-input streaming result equals
   * the batch result, the DuckDB oracle is the batch-equivalent SQL —
-  * exactly the hybrid-engine property this module witnesses.
+  * exactly the hybrid-engine property this module witnesses. Every
+  * finite run, here and in the llm/batch foreachBatch witnesses, goes
+  * through the one lifecycle [[drain]] (conf scope, trigger,
+  * checkpoint, cleanup).
   *
   * Scale posture: all aggregations are keyed (window × type, user), so
   * state is hash-partitioned across executors; watermarks bound state
@@ -61,17 +65,6 @@ object Streams {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 
-  /** Run a streaming pipeline to completion (AvailableNow) into a
-    * memory sink; return the sink contents as a batch DataFrame.
-    *
-    * State-store partitioning: a streaming query pins its state-store
-    * partition count to `spark.sql.shuffle.partitions` at start, and
-    * every micro-batch then pays a fixed per-partition state-store cost.
-    * At harness scale that fixed cost dominated round 1 (~60% of bench
-    * with 32 partitions), so streaming queries run with a small count —
-    * `graft.stream.statePartitions` (Knobs), the one knob to size to
-    * the executor count on a real cluster. The conf is restored
-    * afterwards so batch queries keep the session default. */
   /** Spark 4.1's checkpoint file-checksum manager pairs every WAL/state
     * write with a checksum write on a shared bounded pool; under
     * concurrent multi-column-family RocksDB snapshot zips (observed
@@ -85,58 +78,63 @@ object Streams {
   private val checksumKey =
     "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
-  /** Pins the streaming-witness session confs — small state-store
-    * partition count, checksum manager off (scaladocs above) — around
-    * `body`, restoring BOTH in a finally so a failure anywhere in plan
+  /** Pins the streaming-witness session confs around `body`, restored
+    * in SkewJoin.withConfs' finally so a failure anywhere in plan
     * construction, start() or the drain cannot leak the overrides into
-    * subsequent batch queries. The single streaming lifecycle shared
-    * by the memory-sink runners here and the foreachBatch drain
-    * (llm.Dedup.streamIncrementalDrain), so the discipline cannot
-    * drift between hand-kept copies. */
-  private[streamline] def withStreamConfs[T](spark: SparkSession)
-                                            (body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevCk = spark.conf.getOption(checksumKey)
-    spark.conf.set(checksumKey, "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevCk match {
-        case Some(v) => spark.conf.set(checksumKey, v)
-        case None    => spark.conf.unset(checksumKey)
-      }
-    }
+    * subsequent batch queries:
+    *  - state-store partitioning: a streaming query pins its
+    *    state-store partition count to `spark.sql.shuffle.partitions`
+    *    at first start, and every micro-batch then pays a fixed
+    *    per-partition state-store cost. At harness scale that fixed
+    *    cost dominated (~60% of bench with 32 partitions), so streaming
+    *    queries run with `graft.stream.statePartitions` (Knobs), the
+    *    one knob to size to the executor count on a real cluster;
+    *  - the checksum manager off (checksumKey above).
+    * `extra` is applied after both, so a caller's explicit partition
+    * count wins. */
+  private[streamline] def withStreamConfs[T](spark: SparkSession,
+      extra: Seq[(String, String)] = Nil)(body: => T): T =
+    streamline.batch.SkewJoin.withConfs(spark, Seq(
+      "spark.sql.shuffle.partitions" ->
+        streamline.util.Knobs.statePartitions(spark).toString,
+      checksumKey -> "false") ++ extra)(body)
+
+  /** The one finite-stream lifecycle: runs `writer` to completion under
+    * `Trigger.AvailableNow` inside [[withStreamConfs]] (plus `confs`)
+    * and returns the query's progress. `await` is the wait between
+    * start and cleanup; a query still active after it is stopped.
+    *
+    * Checkpoint: by default a JVM-unique directory on the fast
+    * ephemeral root (Knobs.fastTmp: every micro-batch fsyncs its
+    * offset/commit WAL and state files, which rides the throttled
+    * block device otherwise), deleted afterwards — a REUSED path would
+    * replay committed offsets and silently emit nothing, and a query
+    * given no location would leave a directory under the session's
+    * `spark.sql.streaming.checkpointLocation` per execution. A caller
+    * that restarts from, or reads, its checkpoint passes it and keeps
+    * it. Production queries point this at reliable shared storage. */
+  private[streamline] def drain[T](spark: SparkSession,
+      writer: DataStreamWriter[T], confs: Seq[(String, String)] = Nil,
+      checkpoint: Option[String] = None,
+      await: StreamingQuery => Unit = _.awaitTermination())
+      : Seq[StreamingQueryProgress] = {
+    val ckpt = checkpoint.getOrElse(
+      s"${streamline.util.Knobs.fastTmp}/ck_${jvmToken}_${seq.incrementAndGet()}")
+    try withStreamConfs(spark, confs) {
+      val q = writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      try await(q) finally if (q.isActive) q.stop()
+      q.recentProgress.toSeq
+    } finally if (checkpoint.isEmpty) deleteRec(new java.io.File(ckpt))
   }
 
+  /** Run a streaming pipeline to completion into a memory sink; return
+    * the sink contents as a batch DataFrame. */
   def runToTable(spark: SparkSession, base: String, mode: String,
                  stream: DataFrame): DataFrame = {
     val name = s"${base}_${seq.incrementAndGet()}"
-    // Explicit checkpoint on the fast ephemeral root (Knobs.fastTmp):
-    // every micro-batch fsyncs its offset/commit WAL and state files,
-    // which rides the throttled block device otherwise. JVM-unique
-    // token: a REUSED checkpoint path would replay committed offsets
-    // and silently emit nothing; deleted after the run. Production
-    // queries point this at reliable shared storage instead.
-    val ckpt = s"${streamline.util.Knobs.fastTmp}/ck_${jvmToken}_$name"
-    withStreamConfs(spark) {
-      try {
-        val q = stream.writeStream
-          .format("memory").queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Micro-batch cost breakdown, for perf triage only.
-        if (sys.env.get("GRAFT_STREAM_VERBOSE").contains("true"))
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream] $name batch=${p.batchId} " +
-              s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-          }
-      } finally deleteRec(new java.io.File(ckpt))
-    }
+    drain(spark, stream.writeStream.format("memory").queryName(name)
+      .outputMode(mode))
     spark.table(name)
   }
 
@@ -158,26 +156,16 @@ object Streams {
   def runToTableCaughtUp(spark: SparkSession, base: String, mode: String,
                          stream: DataFrame): DataFrame = {
     val name = s"${base}_${seq.incrementAndGet()}"
-    val ckpt = s"${streamline.util.Knobs.fastTmp}/ck_${jvmToken}_$name"
-    withStreamConfs(spark) {
-      try {
-        val q = stream.writeStream
-          .format("memory").queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          var drained = false
-          // awaitTermination(250) doubles as the poll interval and the
-          // exit path if the engine does terminate on its own.
-          while (!drained && !q.awaitTermination(250)) {
-            val p = q.lastProgress
-            drained = p != null && p.batchId > 0 && p.numInputRows == 0
-          }
-        } finally if (q.isActive) q.stop()
-      } finally deleteRec(new java.io.File(ckpt))
-    }
+    drain(spark, stream.writeStream.format("memory").queryName(name)
+      .outputMode(mode), await = { q =>
+      var drained = false
+      // awaitTermination(250) doubles as the poll interval and the
+      // exit path if the engine does terminate on its own.
+      while (!drained && !q.awaitTermination(250)) {
+        val p = q.lastProgress
+        drained = p != null && p.batchId > 0 && p.numInputRows == 0
+      }
+    })
     spark.table(name)
   }
 
@@ -413,43 +401,30 @@ object Streams {
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider"))
 
-  /** The provider override set shared by the RocksDB witnesses: the
-    * backend class plus checksum-manager-off (RocksDB snapshot zips
-    * starve the shared checksum pool — checksumKey scaladoc, the
-    * withStreamConfs discipline). ONE definition so the drains cannot
-    * drift (r16 review: three hand-rolled copies of the same
-    * save/set/restore block), applied through SkewJoin.withConfs'
-    * exception-safe restore. */
+  /** The state-store backend override of the RocksDB witnesses, passed
+    * to [[drain]] as an extra conf (its scope restores it). */
   private def providerConfs(providerClass: Option[String])
       : Seq[(String, String)] =
-    providerClass.toSeq.flatMap(p => Seq(
-      "spark.sql.streaming.stateStore.providerClass" -> p,
-      checksumKey -> "false"))
+    providerClass.toSeq.map("spark.sql.streaming.stateStore.providerClass" -> _)
+
+  /** An explicit state-partition count for [[drain]], overriding the
+    * knob: the rescale and rewrite oracles assert the counts they run
+    * with, and evolve keeps the count of its rewrite path. */
+  private def partsConf(parts: Int): Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> parts.toString)
 
   private[streamline] def recoveryDrain(spark: SparkSession, dir: String,
-      tag: String, providerClass: Option[String]): DataFrame =
-    streamline.batch.SkewJoin.withConfs(spark,
-      Seq("spark.sql.shuffle.partitions" ->
-        streamline.util.Knobs.statePartitions(spark).toString) ++
-        providerConfs(providerClass)) {
-      recoveryBody(spark, dir, tag)
-    }
-
-  private def recoveryBody(spark: SparkSession, dir: String,
-                           tag: String): DataFrame = {
+      tag: String, providerClass: Option[String]): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir(tag, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh(tag, dir)
     val (stage, ckpt, out) = (s"$root/in", s"$root/ck", s"$root/out")
     val events = Tables.events(spark, dir)
     // Two-scalar bounds collect (metadata-scale): the split point.
     val b = events.agg(min($"ts"), max($"ts")).head()
     val cut = new java.sql.Timestamp(
       (b.getTimestamp(0).getTime + b.getTimestamp(1).getTime) / 2)
-    def drain(): Unit = {
-      val q = spark.readStream.schema(events.schema)
+    def run(): Unit =
+      drain(spark, spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1") // several micro-batches/run
         .parquet(stage)
         .withWatermark("ts", "10 minutes")
@@ -459,20 +434,15 @@ object Streams {
           $"sum_val", $"n")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           df.withColumn("batch_id", lit(id))
             .write.mode("append").parquet(out): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        }, providerConfs(providerClass), Some(ckpt)): Unit
     events.where($"ts" < lit(cut)).repartition(2).write.parquet(stage)
-    drain() // run 1: early half only, then STOP
+    run() // run 1: early half only, then STOP
     events.where($"ts" >= lit(cut)).repartition(2)
       .write.mode("append").parquet(stage)
-    drain() // run 2: RESTART from the same checkpoint, drain the rest
+    run() // run 2: RESTART from the same checkpoint, drain the rest
     spark.read.parquet(out)
       .select($"w_start", $"event_type", $"sum_val", $"n")
       .orderBy($"w_start", $"event_type")
@@ -514,33 +484,15 @@ object Streams {
         "RocksDBStateStoreProvider"))
 
   private def stateReaderDrain(spark: SparkSession, dir: String,
-      tag: String, providerClass: Option[String]): DataFrame =
-    streamline.batch.SkewJoin.withConfs(spark,
-      providerConfs(providerClass)) {
-      stateReaderBody(spark, dir, tag)
-    }
-
-  private def stateReaderBody(spark: SparkSession, dir: String,
-                              tag: String): DataFrame = {
+      tag: String, providerClass: Option[String]): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir(tag, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
-    val ckpt = s"$root/ck"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    try {
-      val q = eventsStream(spark, dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window($"ts", "1 day"), $"event_type")
-        .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("noop").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val ckpt = s"${streamline.util.Scratch.fresh(tag, dir)}/ck"
+    drain(spark, eventsStream(spark, dir)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 day"), $"event_type")
+      .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"))
+      .writeStream.outputMode("append").format("noop"),
+      providerConfs(providerClass), Some(ckpt))
     // Buffer layout (pinned by the probe in SURVEY §7 r9 notes):
     // key = the groupBy key struct, value = the agg buffer (sum
     // decimal, isEmpty, count).
@@ -582,19 +534,14 @@ object Streams {
     * in SURVEY §2.9.) */
   private def streamRescale(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("rescale", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("rescale", dir)
     val (stage, ckpt, out) = (s"$root/in", s"$root/ck", s"$root/out")
     val events = Tables.events(spark, dir)
     val b = events.agg(min($"ts"), max($"ts")).head()
     val cut = new java.sql.Timestamp(
       (b.getTimestamp(0).getTime + b.getTimestamp(1).getTime) / 2)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    def drain(parts: Int): Long = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      val q = spark.readStream.schema(events.schema)
+    def run(parts: Int): Long =
+      drain(spark, spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
         .withWatermark("ts", "10 minutes")
@@ -604,25 +551,17 @@ object Streams {
           $"sum_val", $"n")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           df.withColumn("batch_id", lit(id))
             .write.mode("append").parquet(out): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq
+        }, partsConf(parts), Some(ckpt))
         .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
         .map(_.numShufflePartitions).maxOption.getOrElse(0L)
-    }
-    val partsRun2 = try {
-      events.where($"ts" < lit(cut)).repartition(2).write.parquet(stage)
-      drain(2) // run 1: state partitioned 2-way, checkpointed
-      events.where($"ts" >= lit(cut)).repartition(2)
-        .write.mode("append").parquet(stage)
-      drain(5) // run 2: session says 5 — checkpoint must win
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    events.where($"ts" < lit(cut)).repartition(2).write.parquet(stage)
+    run(2) // run 1: state partitioned 2-way, checkpointed
+    events.where($"ts" >= lit(cut)).repartition(2)
+      .write.mode("append").parquet(stage)
+    val partsRun2 = run(5) // run 2: session says 5 — checkpoint must win
     spark.read.parquet(out)
       .select($"w_start", $"event_type", $"sum_val", $"n")
       .withColumn("n_state_parts", lit(partsRun2))
@@ -683,17 +622,13 @@ object Streams {
   private def streamStateRewrite(spark: SparkSession,
                                  dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("staterewrite", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("staterewrite", dir)
     val (stage1, ck1) = (s"$root/in1", s"$root/ck1")
     val (stage2, ck2, out) = (s"$root/in2", s"$root/ck2", s"$root/out")
     val events = Tables.events(spark, dir)
     val b = events.agg(min($"ts"), max($"ts")).head()
     val cut = new java.sql.Timestamp(
       (b.getTimestamp(0).getTime + b.getTimestamp(1).getTime) / 2)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // (ts, event_type, value, cnt): the carrier schema both the real
     // rows (cnt = 1) and the state-rewrite rows (cnt = partial count)
     // flow through, so ONE query shape serves replay and continuation.
@@ -712,11 +647,10 @@ object Streams {
         org.apache.spark.sql.types.DecimalType(28, 4)),
       org.apache.spark.sql.types.StructField("cnt",
         org.apache.spark.sql.types.LongType)))
-    def drain(stage: String, ckpt: String, parts: Int,
-              schema: org.apache.spark.sql.types.StructType,
-              nExpr: org.apache.spark.sql.Column): Long = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      val q = spark.readStream.schema(schema)
+    def run(stage: String, ckpt: String, parts: Int,
+            schema: org.apache.spark.sql.types.StructType,
+            nExpr: org.apache.spark.sql.Column): Long =
+      drain(spark, spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
         .withWatermark("ts", "10 minutes")
@@ -726,42 +660,34 @@ object Streams {
           $"sum_val", $"n")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           df.write.mode("append").parquet(out): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq
+        }, partsConf(parts), Some(ckpt))
         .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
         .map(_.numShufflePartitions).maxOption.getOrElse(0L)
-    }
-    val partsRun2 = try {
-      // single-file stages throughout (r19 judge item 4, the evolve
-      // discipline): multi-batch incrementality is recovery/rescale's
-      // witness — rewrite pins state migration + the new partition
-      // count, and every extra micro-batch is a fixed state-commit
-      // cost across all state partitions. Output-invariant: the final
-      // watermark (and hence the closed-window set) depends only on
-      // max(ts), not on batching.
-      events.where($"ts" < lit(cut)).coalesce(1).write.parquet(stage1)
-      drain(stage1, ck1, 2, events.schema, count(lit(1))) // checkpoint A
-      // -- the offline rewrite: state of A -> carrier rows -> B -------
-      val carriers = spark.read.format("statestore").load(ck1)
-        .select($"key.window.start".as("ts"),
-          $"key.event_type".as("event_type"),
-          $"value.sum".cast("decimal(28,4)").as("value"),
-          $"value.count".as("cnt"))
-      carriers.coalesce(1).write.parquet(stage2)
-      drain(stage2, ck2, 5, carrierSchema, sum($"cnt")) // rebuild at 5
-      // -- continuation: remaining input as cnt = 1 carriers ----------
-      events.where($"ts" >= lit(cut))
-        .select($"ts", $"event_type",
-          $"value".cast("decimal(28,4)").as("value"), lit(1L).as("cnt"))
-        .coalesce(1).write.mode("append").parquet(stage2)
-      drain(stage2, ck2, 5, carrierSchema, sum($"cnt"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // single-file stages throughout (r19 judge item 4, the evolve
+    // discipline): multi-batch incrementality is recovery/rescale's
+    // witness — rewrite pins state migration + the new partition
+    // count, and every extra micro-batch is a fixed state-commit
+    // cost across all state partitions. Output-invariant: the final
+    // watermark (and hence the closed-window set) depends only on
+    // max(ts), not on batching.
+    events.where($"ts" < lit(cut)).coalesce(1).write.parquet(stage1)
+    run(stage1, ck1, 2, events.schema, count(lit(1))) // checkpoint A
+    // -- the offline rewrite: state of A -> carrier rows -> B -------
+    val carriers = spark.read.format("statestore").load(ck1)
+      .select($"key.window.start".as("ts"),
+        $"key.event_type".as("event_type"),
+        $"value.sum".cast("decimal(28,4)").as("value"),
+        $"value.count".as("cnt"))
+    carriers.coalesce(1).write.parquet(stage2)
+    run(stage2, ck2, 5, carrierSchema, sum($"cnt")) // rebuild at 5
+    // -- continuation: remaining input as cnt = 1 carriers ----------
+    events.where($"ts" >= lit(cut))
+      .select($"ts", $"event_type",
+        $"value".cast("decimal(28,4)").as("value"), lit(1L).as("cnt"))
+      .coalesce(1).write.mode("append").parquet(stage2)
+    val partsRun2 = run(stage2, ck2, 5, carrierSchema, sum($"cnt"))
     spark.read.parquet(out)
       .select($"w_start", $"event_type", $"sum_val", $"n")
       .withColumn("n_state_parts", lit(partsRun2))
@@ -808,17 +734,13 @@ object Streams {
   private def streamStateEvolve(spark: SparkSession,
                                 dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("stateevolve", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("stateevolve", dir)
     val (stage1, ck1) = (s"$root/in1", s"$root/ck1")
     val (stage2, ck2, out) = (s"$root/in2", s"$root/ck2", s"$root/out")
     val events = Tables.events(spark, dir)
     val b = events.agg(min($"ts"), max($"ts")).head()
     val cut = new java.sql.Timestamp(
       (b.getTimestamp(0).getTime + b.getTimestamp(1).getTime) / 2)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // decimal sum carrier (exact at any magnitude — see the rewrite's
     // carrierSchema note + CarrierRoundtripSpec); mv stays double (it
     // is the raw per-row input of the NEW max column, not a partial)
@@ -833,84 +755,70 @@ object Streams {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("mv",
         org.apache.spark.sql.types.DoubleType)))
+    // run 1: the ORIGINAL (sum, count) job over the early half.
+    // Single-batch drains throughout this witness: multi-batch
+    // incrementality is recovery/rescale/rewrite's job; evolve pins
+    // schema validation + migration, and each extra micro-batch is
+    // a fixed startup cost x4 queries.
+    events.where($"ts" < lit(cut)).coalesce(1).write.parquet(stage1)
+    drain(spark, spark.readStream.schema(events.schema)
+      .parquet(stage1)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 day"), $"event_type")
+      .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"))
+      .writeStream.outputMode("append").format("noop"),
+      partsConf(2), Some(ck1))
+    // carriers BEFORE the poisoned restart attempt (paranoia — the
+    // failed attempt must not be able to touch what we migrate)
+    spark.read.format("statestore").load(ck1)
+      .select($"key.window.start".as("ts"),
+        $"key.event_type".as("event_type"),
+        $"value.sum".cast("decimal(28,4)").as("value"),
+        $"value.count".as("cnt"),
+        lit(null).cast("double").as("mv"))
+      .coalesce(1).write.parquet(stage2)
+    // the NAIVE widened restart on ck1 — must throw schema-incompat.
+    // One unseen row staged first: with no uncommitted files,
+    // AvailableNow plans ZERO batches, the stateful operator never
+    // opens its store, and validation never runs (observed: the
+    // restart "succeeds" vacuously). The row is only ever committed
+    // if the restart is wrongly accepted — which the oracle fails
+    // loudly anyway.
+    events.where($"ts" >= lit(cut)).orderBy($"ts", $"event_id").limit(1)
+      .coalesce(1).write.mode("append").parquet(stage1)
     val rejected = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      // run 1: the ORIGINAL (sum, count) job over the early half.
-      // Single-batch drains throughout this witness: multi-batch
-      // incrementality is recovery/rescale/rewrite's job; evolve pins
-      // schema validation + migration, and each extra micro-batch is
-      // a fixed startup cost x4 queries.
-      events.where($"ts" < lit(cut)).coalesce(1).write.parquet(stage1)
-      val run1 = spark.readStream.schema(events.schema)
+      drain(spark, spark.readStream.schema(events.schema)
         .parquet(stage1)
         .withWatermark("ts", "10 minutes")
         .groupBy(window($"ts", "1 day"), $"event_type")
-        .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck1)
-        .format("noop").trigger(Trigger.AvailableNow()).start()
-      run1.awaitTermination()
-      // carriers BEFORE the poisoned restart attempt (paranoia — the
-      // failed attempt must not be able to touch what we migrate)
-      spark.read.format("statestore").load(ck1)
-        .select($"key.window.start".as("ts"),
-          $"key.event_type".as("event_type"),
-          $"value.sum".cast("decimal(28,4)").as("value"),
-          $"value.count".as("cnt"),
-          lit(null).cast("double").as("mv"))
-        .coalesce(1).write.parquet(stage2)
-      // the NAIVE widened restart on ck1 — must throw schema-incompat.
-      // One unseen row staged first: with no uncommitted files,
-      // AvailableNow plans ZERO batches, the stateful operator never
-      // opens its store, and validation never runs (observed: the
-      // restart "succeeds" vacuously). The row is only ever committed
-      // if the restart is wrongly accepted — which the oracle fails
-      // loudly anyway.
-      events.where($"ts" >= lit(cut)).orderBy($"ts", $"event_id").limit(1)
-        .coalesce(1).write.mode("append").parquet(stage1)
-      try {
-        val qBad = spark.readStream.schema(events.schema)
-          .parquet(stage1)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window($"ts", "1 day"), $"event_type")
-          .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"),
-            max($"value").as("max_val"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ck1)
-          .format("noop").trigger(Trigger.AvailableNow()).start()
-        qBad.awaitTermination()
-        false // accepted — the witness reports it (oracle pins true)
-      } catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse("") +
-            Option(e.getCause).flatMap(c => Option(c.getMessage))
-              .getOrElse("")
-          // only a schema-compatibility refusal counts
-          if (!msg.toLowerCase.contains("schema")) throw e
-          true
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    // the migration: rewrite into ck2 with the WIDENED aggregate
-    def drainEvolved(): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
-        val q = spark.readStream.schema(carrierSchema)
-          .parquet(stage2)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window($"ts", "1 day"), $"event_type")
-          .agg(dsum("value").as("sum_val"), sum($"cnt").as("n"),
-            max($"mv").as("max_val"))
-          .select(tsOut($"window.start").as("w_start"), $"event_type",
-            $"sum_val", $"n", $"max_val")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ck2)
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            df.write.mode("append").parquet(out): Unit
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"),
+          max($"value").as("max_val"))
+        .writeStream.outputMode("append").format("noop"),
+        partsConf(2), Some(ck1))
+      false // accepted — the witness reports it (oracle pins true)
+    } catch {
+      case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse("") +
+          Option(e.getCause).flatMap(c => Option(c.getMessage))
+            .getOrElse("")
+        // only a schema-compatibility refusal counts
+        if (!msg.toLowerCase.contains("schema")) throw e
+        true
     }
+    // the migration: rewrite into ck2 with the WIDENED aggregate
+    def drainEvolved(): Unit =
+      drain(spark, spark.readStream.schema(carrierSchema)
+        .parquet(stage2)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window($"ts", "1 day"), $"event_type")
+        .agg(dsum("value").as("sum_val"), sum($"cnt").as("n"),
+          max($"mv").as("max_val"))
+        .select(tsOut($"window.start").as("w_start"), $"event_type",
+          $"sum_val", $"n", $"max_val")
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          df.write.mode("append").parquet(out): Unit
+        }, partsConf(2), Some(ck2)): Unit
     drainEvolved() // carriers only: rebuilds state, emits nothing
     events.where($"ts" >= lit(cut))
       .select($"ts", $"event_type",
@@ -970,17 +878,11 @@ object Streams {
   private def streamLateMetric(spark: SparkSession,
                                dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("latemetric", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("latemetric", dir)
     val (stage, ckpt) = (s"$root/in", s"$root/ck")
     val events = Tables.events(spark, dir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    def drain(): Long = {
-      val q = spark.readStream.schema(events.schema)
+    def run(): Long =
+      drain(spark, spark.readStream.schema(events.schema)
         .parquet(stage)
         .withWatermark("ts", "10 minutes")
         // event-time column in the dedup key ⇒ state evicts by
@@ -988,25 +890,17 @@ object Streams {
         .dropDuplicates("event_id", "ts")
         .writeStream
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .format("noop")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq
+        .format("noop"), checkpoint = Some(ckpt))
         .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
         .map(_.numRowsDroppedByWatermark).sum
-    }
-    val dropped = try {
-      // each half as ONE file = one micro-batch, so run 2's rows are
-      // all judged against the restored run-1 watermark, nothing else
-      events.where(pmod($"event_id", lit(2)) === 0)
-        .coalesce(1).write.parquet(stage)
-      drain() // run 1: baseline watermark, no drops (wm starts at 0)
-      events.where(pmod($"event_id", lit(2)) === 1)
-        .coalesce(1).write.mode("append").parquet(stage)
-      drain() // run 2: odd half vs restored watermark → the drops
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // each half as ONE file = one micro-batch, so run 2's rows are
+    // all judged against the restored run-1 watermark, nothing else
+    events.where(pmod($"event_id", lit(2)) === 0)
+      .coalesce(1).write.parquet(stage)
+    run() // run 1: baseline watermark, no drops (wm starts at 0)
+    events.where(pmod($"event_id", lit(2)) === 1)
+      .coalesce(1).write.mode("append").parquet(stage)
+    val dropped = run() // run 2: odd half vs restored watermark → the drops
     val total = events.count()
     Seq((total, dropped)).toDF("n_events", "n_dropped")
   }
@@ -1121,16 +1015,10 @@ object Streams {
     * oracles differ exactly by least↔greatest. */
   private def streamWmMax(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.multipleWatermarkPolicy"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "max")
+    streamline.batch.SkewJoin.withConfs(spark,
+        Seq("spark.sql.streaming.multipleWatermarkPolicy" -> "max")) {
       runToTable(spark, "wm_max", "append", wmPolicyAgg(spark, dir))
-        .orderBy($"w_start", $"event_type")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    }.orderBy($"w_start", $"event_type")
   }
 
   private val streamWmMaxSql = """
@@ -1222,33 +1110,16 @@ object Streams {
   private def streamSketch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import streamline.agg.ThetaSketchDistinct.theta_distinct
-    val root = streamline.util.Scratch.dir("sketch", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
-    val agg = eventsStream(spark, dir)
+    val root = streamline.util.Scratch.fresh("sketch", dir)
+    drain(spark, eventsStream(spark, dir)
       .groupBy($"event_type")
       .agg(theta_distinct($"user_id").as("approx_users"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    val ckpt = s"${streamline.util.Knobs.fastTmp}/ck_${jvmToken}_sketch_" +
-      seq.incrementAndGet()
-    try {
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          df.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(root): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      deleteRec(new java.io.File(ckpt))
-    }
+      .writeStream
+      .outputMode("update")
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        df.withColumn("batch_id", lit(id))
+          .write.mode("append").parquet(root): Unit
+      })
     spark.read.parquet(root)
       .groupBy($"event_type")
       .agg(max_by($"approx_users", $"batch_id").as("approx_users"))
@@ -1956,24 +1827,14 @@ object Streams {
     * source projection itself (a lossless sink round-trip). */
   private def sinkForeachBatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = streamline.util.Scratch.dir("feb", dir)
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    val st = eventsStream(spark, dir)
+    val tmp = streamline.util.Scratch.fresh("feb", dir)
+    drain(spark, eventsStream(spark, dir)
       .select($"event_id", $"event_type", $"value")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = st.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          df.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(tmp): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        df.withColumn("batch_id", lit(id))
+          .write.mode("append").parquet(tmp): Unit
+      })
     spark.read.parquet(tmp)
       .select($"event_id", $"event_type", $"value")
       .orderBy($"event_id")
@@ -1998,8 +1859,7 @@ object Streams {
     * Double.toString parses back to the identical bits. */
   private def sinkForeach(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = streamline.util.Scratch.dir("feach", dir)
-    deleteRec(new java.io.File(tmp))
+    val tmp = streamline.util.Scratch.fresh("feach", dir)
     new java.io.File(tmp).mkdirs()
     val st = eventsStream(spark, dir)
       .select($"event_id", $"event_type", $"value")
@@ -2027,9 +1887,7 @@ object Streams {
         } else if (tmpF != null) tmpF.delete(): Unit
       }
     }
-    val q = st.writeStream.foreach(writer)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(spark, st.writeStream.foreach(writer))
     spark.read
       .schema("event_id BIGINT, event_type STRING, value DOUBLE")
       .csv(tmp)
@@ -2056,23 +1914,14 @@ object Streams {
     * one tiny file per batch (compacted every 10). */
   private def sinkStreamFiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = streamline.util.Scratch.dir("stream_files", dir)
-    deleteRec(new java.io.File(out))
-    val ckpt = s"${streamline.util.Knobs.fastTmp}/ck_${jvmToken}_files_" +
-      seq.incrementAndGet()
-    val proj = eventsStream(spark, dir)
+    val out = streamline.util.Scratch.fresh("stream_files", dir)
+    drain(spark, eventsStream(spark, dir)
       .where($"event_type" === "purchase")
       .select($"event_id", $"user_id", tsSec($"ts").as("t"),
         asDouble(dec("value")).as("value"))
-    try {
-      val q = proj.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRec(new java.io.File(ckpt))
+      .writeStream.format("parquet")
+      .option("path", out)
+      .outputMode("append"))
     spark.read.parquet(out).orderBy($"event_id")
   }
 
@@ -2155,48 +2004,37 @@ object Streams {
     * re-merge and double-count n_upserts. */
   private def sinkUpsert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("upsert", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("upsert", dir)
+    def exists(p: String) = new java.io.File(p).exists()
     @volatile var lastGen = 0L
-    val st = eventsStream(spark, dir)
+    drain(spark, eventsStream(spark, dir)
       .where($"event_type" === "purchase")
       .select($"user_id", $"ts", $"event_id", $"value")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    try {
-      val q = st.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val s = df.sparkSession
-          val batch = df.withColumn("n_upserts", lit(1L))
-          val cur = s"$root/g$id"
-          val merged0 =
-            if (fs.exists(new org.apache.hadoop.fs.Path(cur)))
-              s.read.parquet(cur).unionByName(batch)
-            else batch
-          merged0.groupBy($"user_id")
-            .agg(
-              max_by(struct($"ts", $"event_id", $"value"),
-                struct($"ts", $"event_id")).as("last"),
-              sum($"n_upserts").as("n_upserts"))
-            .select($"user_id", $"last.ts".as("ts"),
-              $"last.event_id".as("event_id"), $"last.value".as("value"),
-              $"n_upserts")
-            .write.mode("overwrite").parquet(s"$root/g${id + 1}")
-          lastGen = id + 1
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        val s = df.sparkSession
+        val batch = df.withColumn("n_upserts", lit(1L))
+        val cur = s"$root/g$id"
+        val merged0 =
+          if (exists(cur)) s.read.parquet(cur).unionByName(batch)
+          else batch
+        merged0.groupBy($"user_id")
+          .agg(
+            max_by(struct($"ts", $"event_id", $"value"),
+              struct($"ts", $"event_id")).as("last"),
+            sum($"n_upserts").as("n_upserts"))
+          .select($"user_id", $"last.ts".as("ts"),
+            $"last.event_id".as("event_id"), $"last.value".as("value"),
+            $"n_upserts")
+          .write.mode("overwrite").parquet(s"$root/g${id + 1}")
+        lastGen = id + 1
+      })
     // Zero micro-batches (an empty purchase set) never writes g1, and
     // lastGen stays 0 with no g0 on disk — an upsert table with no
     // upserts is EMPTY, not an error.
-    val lastPath = new org.apache.hadoop.fs.Path(s"$root/g$lastGen")
+    val lastPath = s"$root/g$lastGen"
     val sink =
-      if (fs.exists(lastPath)) spark.read.parquet(lastPath.toString)
+      if (exists(lastPath)) spark.read.parquet(lastPath)
       else Seq.empty[(Long, java.sql.Timestamp, Long, Double, Long)]
         .toDF("user_id", "ts", "event_id", "value", "n_upserts")
     sink
@@ -2292,39 +2130,26 @@ object Streams {
     * a table rewrite. */
   private def sinkCdc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("cdc", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("cdc", dir)
+    def exists(p: String) = new java.io.File(p).exists()
     @volatile var lastGen = 0L
-    val st = eventsStream(spark, dir)
+    drain(spark, eventsStream(spark, dir)
       .select($"user_id", $"ts", $"event_id",
         when(pmod($"event_id", lit(7L)) === 0, "D").otherwise("U")
           .as("op"),
         $"value")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    try {
-      val q = st.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val s = df.sparkSession
-          val cur = s"$root/g$id"
-          val curDf =
-            if (fs.exists(new org.apache.hadoop.fs.Path(cur)))
-              Some(s.read.parquet(cur))
-            else None
-          cdcMerge(curDf, df)
-            .write.mode("overwrite").parquet(s"$root/g${id + 1}")
-          lastGen = id + 1
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    val lastPath = new org.apache.hadoop.fs.Path(s"$root/g$lastGen")
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        val s = df.sparkSession
+        val cur = s"$root/g$id"
+        val curDf = if (exists(cur)) Some(s.read.parquet(cur)) else None
+        cdcMerge(curDf, df)
+          .write.mode("overwrite").parquet(s"$root/g${id + 1}")
+        lastGen = id + 1
+      })
+    val lastPath = s"$root/g$lastGen"
     val sink =
-      if (fs.exists(lastPath)) spark.read.parquet(lastPath.toString)
+      if (exists(lastPath)) spark.read.parquet(lastPath)
       else Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, Long)]
         .toDF("user_id", "ts", "event_id", "op", "value", "n_ops")
     sink
@@ -2370,10 +2195,7 @@ object Streams {
       .groupBy(window($"p_ts", "10 seconds"), $"event_type")
       .agg(count(lit(1)).as("n"))
     val name = s"proctime_${seq.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    try {
+    withStreamConfs(spark) {
       // Update mode: proc-time windows have no watermark to close them,
       // so append mode would emit nothing — same as Flink, where a
       // processing-time window fires on the processing clock alone.
@@ -2383,7 +2205,7 @@ object Streams {
         .start()
       q.processAllAvailable()
       q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(name)
       .groupBy($"window", $"event_type").agg(max($"n").as("n"))
       .groupBy($"event_type").agg(sum($"n").as("n_events"))
@@ -2441,63 +2263,51 @@ object Streams {
       ev.repartition(2).write.parquet(tmp)
       stageDone.createNewFile(): Unit
     }
-    val root = streamline.util.Scratch.dir("retract_hist", dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val root = streamline.util.Scratch.fresh("retract_hist", dir)
+    def exists(p: String) = new java.io.File(p).exists()
     @volatile var lastGen = 0L
-    val counts = spark.readStream.schema(ev.schema)
+    drain(spark, spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp)
       .groupBy($"user_id").agg(count(lit(1)).as("cnt"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamline.util.Knobs.statePartitions(spark).toString)
-    try {
-      val q = counts.writeStream
-        .outputMode("update") // emits ONLY users whose count changed
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val s = df.sparkSession
-          val cCur = s"$root/c$id"
-          val hCur = s"$root/h$id"
-          val prevCounts =
-            if (fs.exists(new org.apache.hadoop.fs.Path(cCur)))
-              s.read.parquet(cCur)
-            else Seq.empty[(Long, Long)].toDF("user_id", "old_cnt")
-          val updates = df.select($"user_id", $"cnt")
-          val transitions = updates
-            .join(prevCounts, Seq("user_id"), "left")
-          // retraction records: −1 from the old bucket, +1 to the new
-          val deltas = transitions
-            .where($"old_cnt".isNotNull)
-            .select($"old_cnt".as("c_count"), lit(-1L).as("d"))
-            .unionByName(
-              transitions.select($"cnt".as("c_count"), lit(1L).as("d")))
-            .groupBy($"c_count").agg(sum($"d").as("d"))
-          val prevHist =
-            if (fs.exists(new org.apache.hadoop.fs.Path(hCur)))
-              s.read.parquet(hCur)
-            else Seq.empty[(Long, Long)].toDF("c_count", "n_users")
-          prevHist.join(deltas, Seq("c_count"), "full_outer")
-            .select($"c_count",
-              (coalesce($"n_users", lit(0L)) + coalesce($"d", lit(0L)))
-                .as("n_users"))
-            .where($"n_users" > 0)
-            .write.mode("overwrite").parquet(s"$root/h${id + 1}")
-          // roll the counts generation forward
-          prevCounts.join(updates, Seq("user_id"), "left_anti")
-            .select($"user_id", $"old_cnt")
-            .unionByName(updates.select($"user_id",
-              $"cnt".as("old_cnt")))
-            .write.mode("overwrite").parquet(s"$root/c${id + 1}")
-          lastGen = id + 1
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    val lastPath = new org.apache.hadoop.fs.Path(s"$root/h$lastGen")
+      .writeStream
+      .outputMode("update") // emits ONLY users whose count changed
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        val s = df.sparkSession
+        val cCur = s"$root/c$id"
+        val hCur = s"$root/h$id"
+        val prevCounts =
+          if (exists(cCur)) s.read.parquet(cCur)
+          else Seq.empty[(Long, Long)].toDF("user_id", "old_cnt")
+        val updates = df.select($"user_id", $"cnt")
+        val transitions = updates
+          .join(prevCounts, Seq("user_id"), "left")
+        // retraction records: −1 from the old bucket, +1 to the new
+        val deltas = transitions
+          .where($"old_cnt".isNotNull)
+          .select($"old_cnt".as("c_count"), lit(-1L).as("d"))
+          .unionByName(
+            transitions.select($"cnt".as("c_count"), lit(1L).as("d")))
+          .groupBy($"c_count").agg(sum($"d").as("d"))
+        val prevHist =
+          if (exists(hCur)) s.read.parquet(hCur)
+          else Seq.empty[(Long, Long)].toDF("c_count", "n_users")
+        prevHist.join(deltas, Seq("c_count"), "full_outer")
+          .select($"c_count",
+            (coalesce($"n_users", lit(0L)) + coalesce($"d", lit(0L)))
+              .as("n_users"))
+          .where($"n_users" > 0)
+          .write.mode("overwrite").parquet(s"$root/h${id + 1}")
+        // roll the counts generation forward
+        prevCounts.join(updates, Seq("user_id"), "left_anti")
+          .select($"user_id", $"old_cnt")
+          .unionByName(updates.select($"user_id",
+            $"cnt".as("old_cnt")))
+          .write.mode("overwrite").parquet(s"$root/c${id + 1}")
+        lastGen = id + 1
+      })
+    val lastPath = s"$root/h$lastGen"
     val sink =
-      if (fs.exists(lastPath)) spark.read.parquet(lastPath.toString)
+      if (exists(lastPath)) spark.read.parquet(lastPath)
       else Seq.empty[(Long, Long)].toDF("c_count", "n_users")
     sink.orderBy($"c_count")
   }

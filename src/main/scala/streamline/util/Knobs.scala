@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   *  - `graft.stream.statePartitions` — state-store partition count for
   *    streaming queries; each micro-batch pays a fixed per-partition
   *    state-store cost, so size to the executor count (harness: 4).
+  *    Applied by Streams.withStreamConfs to every drain and MemoryStream
+  *    witness; only the rescale, state-rewrite and state-evolve
+  *    witnesses pass explicit counts instead.
   *  - `graft.iter.partitions` — shuffle partition count inside iterative
   *    fixpoint loops (default: min(8, session shuffle partitions)). A
   *    superstep's label table usually shrinks far below the input scan,

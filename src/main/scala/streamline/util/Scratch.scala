@@ -48,4 +48,12 @@ object Scratch {
   def dir(name: String, srcDir: String): String =
     s"$root/graft_${name}_" +
       srcDir.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** [[dir]], wiped: the root of a witness that rebuilds its staged
+    * input, checkpoints and outputs on every execution. */
+  def fresh(name: String, srcDir: String): String = {
+    val d = dir(name, srcDir)
+    streamline.stream.Streams.deleteRec(new java.io.File(d))
+    d
+  }
 }

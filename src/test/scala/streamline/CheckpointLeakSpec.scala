@@ -1,0 +1,29 @@
+package streamline
+
+import graft.{SparkEntry, SparkSuite}
+
+/** Streaming witnesses must not leave checkpoints behind. A query
+  * started without a `checkpointLocation` gets a fresh UUID directory
+  * under the session's `spark.sql.streaming.checkpointLocation` (set by
+  * Bench, Verify and the benchmark harness), and Spark never deletes
+  * it — one leaked directory per execution of every such sink. */
+class CheckpointLeakSpec extends SparkSuite {
+
+  test("sink drains leave nothing under the session checkpoint root") {
+    val key = "spark.sql.streaming.checkpointLocation"
+    val root = java.nio.file.Files.createTempDirectory("graft_ckleak").toFile
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, root.getPath)
+      Seq("q_sink_foreachbatch", "q_sink_foreach", "q_sink_upsert",
+          "q_sink_cdc", "q_stream_retract_hist").foreach { q =>
+        SparkEntry.queries(q)(spark, sfDir).collect()
+        val left = Option(root.list()).toSeq.flatten
+        assert(left.isEmpty, s"$q left checkpoints: ${left.mkString(", ")}")
+      }
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      streamline.stream.Streams.deleteRec(root)
+    }
+  }
+}

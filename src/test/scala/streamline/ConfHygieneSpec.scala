@@ -36,7 +36,12 @@ class ConfHygieneSpec extends SparkSuite {
   private val confTouchers = Seq(
     "q_scan_metadata", "q_scan_agg_pushdown", "q_sink_dynamic_overwrite",
     "q_sink_compact", "q_iter_cc", "q_join_skew", "q_part_aqe_coalesce",
-    "q_stream_tumble", "q_stream_state_reader", "q_join_bucketed")
+    "q_stream_tumble", "q_stream_state_reader", "q_join_bucketed",
+    // drains with explicit partition counts, caller-owned checkpoints,
+    // foreachBatch sinks, the proc-time trigger and the connect drain
+    "q_stream_rescale", "q_stream_state_rewrite", "q_stream_state_evolve",
+    "q_stream_late_metric", "q_sink_upsert", "q_stream_sketch",
+    "q_stream_connect_broadcast", "q_stream_proctime")
 
   test("conf-touching queries restore every sensitive conf") {
     val before = snapshot
