@@ -2849,17 +2849,12 @@ object Aggregates {
   private def streamGrowthAccounting(spark: SparkSession,
                                      dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("growthacc", dir)
-    val stage = s"$root/in"
-    val marker = new java.io.File(root, "_DONE")
     val act0 = Tables.events(spark, dir)
       .where($"event_type" === "purchase")
       .select($"user_id",
         floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
           .cast("long").as("day"))
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val stage = streamline.util.Scratch.staged("growthacc", dir) { root =>
       val b = act0.agg(min($"day").as("lo"), max($"day").as("hi")).head()
       val (lo, span) = (b.getLong(0), b.getLong(1) - b.getLong(0) + 1)
       // four SEQUENTIAL single-file writes, one day-quartile each —
@@ -2867,9 +2862,8 @@ object Aggregates {
       for (i <- 0L until 4L)
         act0.where(call_function("div", ($"day" - lit(lo)) * lit(4L),
             lit(span)) === lit(i))
-          .coalesce(1).write.mode("append").parquet(stage)
-      marker.createNewFile(): Unit
-    }
+          .coalesce(1).write.mode("append").parquet(s"$root/in")
+    } + "/in"
     streamGrowthDrain(spark, stage).orderBy($"day")
   }
 
@@ -2879,41 +2873,32 @@ object Aggregates {
   private[streamline] def streamGrowthDrain(spark: SparkSession,
                                             stage: String): DataFrame = {
     import spark.implicits._
-    var seen: DataFrame = null // accumulated distinct (user_id, day)
-    var cls: DataFrame = null // accumulated per-pair verdicts
-    streamline.stream.Streams.drain(spark, spark.readStream
-      .schema("user_id LONG, day LONG")
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-        val batch = df.toDF().distinct()
-        val newPairs = (if (seen == null) batch
-          else batch.join(seen, Seq("user_id", "day"), "left_anti"))
-          .localCheckpoint(true)
-        // union INCLUDES this batch: a same-batch (u, d−1) must
-        // count as prev-day presence, and first days are final
-        // because staging is day-ordered
-        val union = (if (seen == null) newPairs
-          else seen.unionByName(newPairs)).localCheckpoint(true)
-        val firsts = union.groupBy($"user_id")
-          .agg(min($"day").as("f"))
-        val prev = union.select($"user_id",
-          ($"day" + lit(1L)).as("day"), lit(1L).as("wp"))
-        val classified = newPairs
-          .join(prev, Seq("user_id", "day"), "left")
-          .join(firsts, "user_id")
-          .select($"user_id", $"day",
-            when($"f" === $"day", lit("new"))
-              .when($"wp".isNotNull, lit("retained"))
-              .otherwise(lit("resurrected")).as("cls"))
-          .localCheckpoint(true)
-        cls = if (cls == null) classified
-          else cls.unionByName(classified)
-        seen = union
-      })
-    require(seen != null, "stream fed no batches (stale checkpoint?)")
+    // state: (accumulated distinct (user_id, day), per-pair verdicts)
+    val (_, cls) = streamline.stream.Streams.foldFiles[(DataFrame, DataFrame)](
+        spark, stage, "user_id LONG, day LONG") { (acc, df) =>
+      val batch = df.distinct()
+      val seen = acc.map(_._1)
+      val newPairs = seen.fold(batch)(s =>
+        batch.join(s, Seq("user_id", "day"), "left_anti")).localCheckpoint(true)
+      // union INCLUDES this batch: a same-batch (u, d−1) must
+      // count as prev-day presence, and first days are final
+      // because staging is day-ordered
+      val union = seen.fold(newPairs)(_.unionByName(newPairs))
+        .localCheckpoint(true)
+      val firsts = union.groupBy($"user_id")
+        .agg(min($"day").as("f"))
+      val prev = union.select($"user_id",
+        ($"day" + lit(1L)).as("day"), lit(1L).as("wp"))
+      val classified = newPairs
+        .join(prev, Seq("user_id", "day"), "left")
+        .join(firsts, "user_id")
+        .select($"user_id", $"day",
+          when($"f" === $"day", lit("new"))
+            .when($"wp".isNotNull, lit("retained"))
+            .otherwise(lit("resurrected")).as("cls"))
+        .localCheckpoint(true)
+      (union, acc.fold(classified)(_._2.unionByName(classified)))
+    }
     val byDay = cls.groupBy($"day").agg(count(lit(1)).as("active"),
         sum(when($"cls" === "new", 1L).otherwise(0L)).as("new_users"),
         sum(when($"cls" === "retained", 1L).otherwise(0L)).as("retained"),

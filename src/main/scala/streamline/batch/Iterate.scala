@@ -57,24 +57,12 @@ object Iterate {
     // logical plan back to a leaf — constant-size plans, constant
     // driver memory, no matter how many supersteps run. Old superstep
     // blocks are dropped by the ContextCleaner once unreferenced.
-    val verbose = sys.props.get("graft.iter.verbose")
-      .orElse(sys.env.get("GRAFT_ITER_VERBOSE")).contains("true")
-    var t0 = System.nanoTime()
-    def lap(tag: String, it: Int): Unit = if (verbose) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[iter] $tag%-10s #$it%-3d ${(t1 - t0) / 1e3}%.0f us")
-      t0 = t1
-    }
     var cur = init.localCheckpoint(true)
-    lap("init", 0)
     var m = metric(cur)
-    lap("metric", 0)
     var iters = 0
     while (iters < maxIter) {
       val next = step(cur).localCheckpoint(true)
-      lap("step", iters + 1)
       val m2 = metric(next)
-      lap("metric", iters + 1)
       iters += 1
       // On convergence return NEXT, not cur: metric equality proves only
       // that the aggregate is unchanged — returning the later superstep
@@ -119,20 +107,10 @@ object Iterate {
   def fixpointObserved(init: DataFrame, maxIter: Int,
       requireConverged: Boolean = false)(step: DataFrame => DataFrame)(
       metricCol: Column): (DataFrame, Int) = {
-    val verbose = sys.props.get("graft.iter.verbose")
-      .orElse(sys.env.get("GRAFT_ITER_VERBOSE")).contains("true")
-    var t0 = System.nanoTime()
-    def lap(tag: String, it: Int): Unit = if (verbose) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[iter] $tag%-10s #$it%-3d ${(t1 - t0) / 1e3}%.0f us")
-      t0 = t1
-    }
     var (cur, m) = ckptObserving(init, metricCol)
-    lap("init+m", 0)
     var iters = 0
     while (iters < maxIter) {
       val (next, m2) = ckptObserving(step(cur), metricCol)
-      lap("step+m", iters + 1)
       iters += 1
       if (m2 == m) return (next, iters)
       cur = next
@@ -881,8 +859,6 @@ object Iterate {
     val spark = edges0.sparkSession
     import spark.implicits._
     withIterConfs(spark) {
-      val verbose = sys.props.get("graft.iter.verbose")
-        .orElse(sys.env.get("GRAFT_ITER_VERBOSE")).contains("true")
       // Seed: the distinct edge set, its count observed on the same
       // materialization. The whole loop is driven by EDGE counts —
       // once no edges remain, every undecided vertex is a singleton
@@ -913,7 +889,6 @@ object Iterate {
         var ec = remainingEdges
         var trimIters = 0
         var trimConverged = false
-        var t0 = System.nanoTime()
         while (!trimConverged && trimIters < 200) {
           trimIters += 1
           val vBoth = e.select($"src".as("v"), lit(0).as("side"))
@@ -928,13 +903,6 @@ object Iterate {
               "left_semi")
           val (e2, n2raw) = ckptObserving(live, count(lit(1)))
           val n2 = n2raw.asInstanceOf[Long]
-          if (verbose) {
-            val t1 = System.nanoTime()
-            System.err.println(
-              f"[iter] trim       #$trimIters%-3d ${(t1 - t0) / 1e3}%.0f us" +
-                s" edges=$n2")
-            t0 = t1
-          }
           if (n2 == ec || n2 == 0) trimConverged = true
           e = e2; ec = n2
         }
@@ -1202,12 +1170,7 @@ object Iterate {
     * them. */
   private def streamIterate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("iterstream", dir)
-    val stage = s"$root/in"
-    val marker = new java.io.File(root, "_DONE")
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val stage = streamline.util.Scratch.staged("iterstream", dir) { root =>
       val month = Tables.orders(spark, dir)
         .where($"o_orderdate" >= lit("1997-01-01").cast("timestamp") &&
           $"o_orderdate" < lit("1997-02-01").cast("timestamp"))
@@ -1216,9 +1179,8 @@ object Iterate {
           ($"l_suppkey" + lit(1000000L)).as("dst"))
         .distinct()
         .repartition(3) // three files -> three micro-batches
-        .write.parquet(stage)
-      marker.createNewFile(): Unit
-    }
+        .write.parquet(s"$root/in")
+    } + "/in"
     val labels = feedbackCc(spark, stage)
     val sizes = labels.groupBy($"comp").agg(count(lit(1)).as("comp_size"))
     labels.join(sizes, "comp")
@@ -1242,57 +1204,35 @@ object Iterate {
   private[streamline] def feedbackCc(spark: SparkSession,
                                      stage: String): DataFrame = {
     import spark.implicits._
-    var labels: DataFrame = null
-    streamline.stream.Streams.drain(spark, spark.readStream
-      .schema("src LONG, dst LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // per-batch timing under the same opt-in flag as fixpoint's laps
-        val verbose = sys.props.get("graft.iter.verbose")
-          .orElse(sys.env.get("GRAFT_ITER_VERBOSE")).contains("true")
-        val t0 = System.nanoTime()
-        def lap(tag: String): Unit = if (verbose) System.err.println(
-          f"[iterstream] batch $bid $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        val batch = df.toDF()
-        labels =
-          if (labels == null) {
-            val (r, it) = connectedComponents(batch)
-            lap(s"full-cc iters=$it")
-            r.localCheckpoint(true)
-          } else {
-            val l = labels
-            // find(): contract both endpoints to their current rep.
-            // At cluster scale these are two keyed joins of the (small)
-            // batch against the label state — broadcast per the
-            // iterBroadcast knob at bounded-vertex scale, plain keyed
-            // shuffle joins in the web-graph regime.
-            def find(col: String) = stateSide(
-              l.select($"v".as(s"f_$col"), $"comp".as(s"fc_$col")))
-            val contracted = batch
-              .join(find("src"), $"src" === $"f_src", "left")
-              .join(find("dst"), $"dst" === $"f_dst", "left")
-              .select(coalesce($"fc_src", $"src").as("src"),
-                coalesce($"fc_dst", $"dst").as("dst"))
-            // CC over the contracted graph: vertices are touched reps +
-            // genuinely new ids — batch-sized, NOT state-sized.
-            val (cc, ccIters) = connectedComponents(contracted)
-            lap(s"contracted-cc iters=$ccIters")
-            val merge = cc.select($"v".as("mv"), $"comp".as("mc"))
-            // merge map is frontier-sized — broadcast it into the
-            // relabel join; untouched components coalesce through.
-            val relabeled = l.join(stateSide(merge), $"comp" === $"mv", "left")
-              .select($"v", coalesce($"mc", $"comp").as("comp"))
-            val fresh = cc.join(l.select($"v"), Seq("v"), "left_anti")
-            val out = relabeled.unionByName(fresh.select($"v", $"comp"))
-              .localCheckpoint(true)
-            lap("done")
-            out
-          }
-      })
-    require(labels != null, "stream fed no batches (stale checkpoint?)")
-    labels
+    streamline.stream.Streams.foldFiles[DataFrame](spark, stage,
+        "src LONG, dst LONG") {
+      case (None, batch) =>
+        connectedComponents(batch)._1.localCheckpoint(true)
+      case (Some(l), batch) =>
+        // find(): contract both endpoints to their current rep.
+        // At cluster scale these are two keyed joins of the (small)
+        // batch against the label state — broadcast per the
+        // iterBroadcast knob at bounded-vertex scale, plain keyed
+        // shuffle joins in the web-graph regime.
+        def find(col: String) = stateSide(
+          l.select($"v".as(s"f_$col"), $"comp".as(s"fc_$col")))
+        val contracted = batch
+          .join(find("src"), $"src" === $"f_src", "left")
+          .join(find("dst"), $"dst" === $"f_dst", "left")
+          .select(coalesce($"fc_src", $"src").as("src"),
+            coalesce($"fc_dst", $"dst").as("dst"))
+        // CC over the contracted graph: vertices are touched reps +
+        // genuinely new ids — batch-sized, NOT state-sized.
+        val cc = connectedComponents(contracted)._1
+        val merge = cc.select($"v".as("mv"), $"comp".as("mc"))
+        // merge map is frontier-sized — broadcast it into the
+        // relabel join; untouched components coalesce through.
+        val relabeled = l.join(stateSide(merge), $"comp" === $"mv", "left")
+          .select($"v", coalesce($"mc", $"comp").as("comp"))
+        val fresh = cc.join(l.select($"v"), Seq("v"), "left_anti")
+        relabeled.unionByName(fresh.select($"v", $"comp"))
+          .localCheckpoint(true)
+    }
   }
 
   // same fixed point as q_iter_cc: the stream's batching must not change

@@ -486,49 +486,37 @@ object Joins {
   /** Write orders + customer bucketed on the join key (one sorted file
     * per bucket) and register them in the session catalog.
     * Idempotent per source dir: the bucketed write models one-time
-    * ingest, so a completed scratch (marker file) is reused — on a rerun
-    * only the catalog registration happens (CREATE TABLE over the
-    * existing bucketed files), cutting ~3 s/call from the bench. The
-    * scratch path encodes the source dir so different scale factors
-    * never alias. */
+    * ingest, so it is staged once ([[streamline.util.Scratch.staged]])
+    * and a rerun only re-registers the tables (CREATE TABLE over the
+    * existing bucketed files), cutting ~3 s/call from the bench. */
   @volatile private var bucketedFor: String = ""
 
   def bucketedTables(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
     // Bucket count is the ingest-parallelism knob (`graft.bucket.count`,
-    // util/Knobs); it is baked into the scratch path so a conf change
-    // can never re-register files written with a different count.
+    // util/Knobs); it is part of the stage name so a conf change can
+    // never re-register files written with a different count.
     val nBuckets = streamline.util.Knobs.bucketCount(spark)
-    val base = s"${streamline.util.Scratch.root}/graft_bucketed/b$nBuckets/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val marker = java.nio.file.Paths.get(s"$base/_DONE")
-    if (bucketedFor == base &&
+    val name = s"bucketed_b$nBuckets"
+    if (bucketedFor == streamline.util.Scratch.dir(name, dir) &&
       spark.catalog.tableExists("graft_b_orders")) return
-    def register(name: String, sub: String, key: String,
-                 schemaDdl: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      spark.sql(s"""CREATE TABLE $name ($schemaDdl)
+    val tables = Seq(
+      ("graft_b_orders", "orders", "o_custkey", Tables.orders(spark, dir)),
+      ("graft_b_customer", "customer", "c_custkey",
+        Tables.customer(spark, dir)))
+    val base = streamline.util.Scratch.staged(name, dir) { root =>
+      tables.foreach { case (table, sub, key, df) =>
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        df.repartition(nBuckets, col(key)).write.mode("overwrite")
+          .bucketBy(nBuckets, key).sortBy(key)
+          .option("path", s"$root/$sub").saveAsTable(table)
+      }
+    }
+    tables.foreach { case (table, sub, key, df) =>
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"""CREATE TABLE $table (${df.schema.toDDL})
         USING parquet CLUSTERED BY ($key) SORTED BY ($key)
         INTO $nBuckets BUCKETS
         LOCATION '$base/$sub'""")
-    }
-    if (java.nio.file.Files.exists(marker)) {
-      register("graft_b_orders", "orders", "o_custkey",
-        Tables.orders(spark, dir).schema.toDDL)
-      register("graft_b_customer", "customer", "c_custkey",
-        Tables.customer(spark, dir).schema.toDDL)
-    } else {
-      spark.sql("DROP TABLE IF EXISTS graft_b_orders")
-      spark.sql("DROP TABLE IF EXISTS graft_b_customer")
-      Tables.orders(spark, dir).repartition(nBuckets, $"o_custkey")
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "o_custkey").sortBy("o_custkey")
-        .option("path", s"$base/orders").saveAsTable("graft_b_orders")
-      Tables.customer(spark, dir).repartition(nBuckets, $"c_custkey")
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "c_custkey").sortBy("c_custkey")
-        .option("path", s"$base/customer").saveAsTable("graft_b_customer")
-      java.nio.file.Files.createFile(marker)
     }
     bucketedFor = base
   }

@@ -321,9 +321,9 @@ object ProtoDescriptor {
     * "fetch the schema from the registry" step, shared by the batch and
     * streaming descriptor witnesses. Bytes-sized, driver-side, once per
     * plan. */
-  private def stagedRegistry(spark: SparkSession, dir: String,
-      root: String): Map[String, MessageDesc] = {
-    ProtoWire.stageNested(spark, dir, root)
+  private def stagedRegistry(spark: SparkSession,
+      dir: String): (String, Map[String, MessageDesc]) = {
+    val root = ProtoWire.stageNested(spark, dir)
     val descFile = new java.io.File(root, "schema.desc")
     if (!descFile.exists()) {
       val tmp = new java.io.File(root, ".schema.desc.tmp")
@@ -332,15 +332,14 @@ object ProtoDescriptor {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
     }
-    registry(parseDescriptorSet(
-      java.nio.file.Files.readAllBytes(descFile.toPath)))
+    (root, registry(parseDescriptorSet(
+      java.nio.file.Files.readAllBytes(descFile.toPath))))
   }
 
   private def sourceProtoDescriptor(spark: SparkSession,
                                     dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("proton", dir)
-    val reg = stagedRegistry(spark, dir, root)
+    val (root, reg) = stagedRegistry(spark, dir)
     val msg = reg("GraftEventN")
     val schema = sparkSchema(msg, reg)
     val rows = spark.read.format("binaryFile")
@@ -375,8 +374,7 @@ object ProtoDescriptor {
   private def streamProtoDescriptor(spark: SparkSession,
                                     dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("proton", dir)
-    val reg = stagedRegistry(spark, dir, root)
+    val (root, reg) = stagedRegistry(spark, dir)
     val msg = reg("GraftEventN")
     val schema = sparkSchema(msg, reg)
     val binSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -237,46 +237,42 @@ object ProtoWire {
     * a buffered file stream — constant memory per task, where the
     * earlier whole-partition ByteArrayOutputStream would hit the ~2 GB
     * JVM array limit long before the scale the operator claims — then
-    * publishes via atomic rename; a _DONE marker makes re-entry free. */
-  private def stageWrite[T](root: String,
+    * publishes via atomic rename; [[streamline.util.Scratch.staged]]
+    * makes re-entry free. Returns the stage root. */
+  private def stageWrite[T](name: String, dir: String,
       ds: org.apache.spark.sql.Dataset[T])(
-      enc: (java.io.OutputStream, T) => Unit): Unit = {
-    val marker = new java.io.File(root, "_DONE")
-    if (marker.exists()) return
-    streamline.stream.Streams.deleteRec(new java.io.File(root))
-    new java.io.File(root).mkdirs()
-    import ds.sparkSession.implicits._
-    ds.repartition(4).mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      // Attempt id in the temp name: a speculative/retried attempt for
-      // the same partition must never share a temp file with the first
-      // (interleaved writes would publish a corrupt payload through the
-      // rename); the rename itself still wins atomically either way.
-      val att = org.apache.spark.TaskContext.get().taskAttemptId()
-      val tmpF = new java.io.File(root, s".part-$pid-$att.pb.tmp")
-      val os = new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(tmpF), 1 << 16)
-      var n = 0L
-      try it.foreach { e => enc(os, e); n += 1 } finally os.close()
-      if (!tmpF.renameTo(new java.io.File(root, s"part-$pid.pb")))
-        throw new java.io.IOException(s"proto publish failed: $pid")
-      Iterator(n)
-    }.reduce(_ + _): Unit
-    marker.createNewFile(): Unit
-  }
+      enc: (java.io.OutputStream, T) => Unit): String =
+    streamline.util.Scratch.staged(name, dir) { root =>
+      import ds.sparkSession.implicits._
+      ds.repartition(4).mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        // Attempt id in the temp name: a speculative/retried attempt for
+        // the same partition must never share a temp file with the first
+        // (interleaved writes would publish a corrupt payload through the
+        // rename); the rename itself still wins atomically either way.
+        val att = org.apache.spark.TaskContext.get().taskAttemptId()
+        val tmpF = new java.io.File(root, s".part-$pid-$att.pb.tmp")
+        val os = new java.io.BufferedOutputStream(
+          new java.io.FileOutputStream(tmpF), 1 << 16)
+        var n = 0L
+        try it.foreach { e => enc(os, e); n += 1 } finally os.close()
+        if (!tmpF.renameTo(new java.io.File(root, s"part-$pid.pb")))
+          throw new java.io.IOException(s"proto publish failed: $pid")
+        Iterator(n)
+      }.reduce(_ + _): Unit
+    }
 
   // ---- the declared query ----
 
   /** Write `events` as length-delimited GraftEvent payloads (one binary
-    * file per partition, temp + atomic-rename publish, _DONE marker for
-    * idempotent re-entry), read them back through a `binaryFile` scan +
+    * file per partition, temp + atomic-rename publish, staged once
+    * for idempotent re-entry), read them back through a `binaryFile` scan +
     * the generic decoder, and emit the rows. Timestamps travel as epoch
     * SECONDS (second truncation is the events-table oracle discipline,
     * SURVEY §7.3.4) and come back as timestamp_ntz. */
   private def sourceProto(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("proto", dir)
-    stageWrite(root,
+    val root = stageWrite("proto", dir,
       Tables.events(spark, dir)
         .select($"event_id", $"user_id", $"event_type", $"value",
           unix_timestamp(date_trunc("second", $"ts")).as("ts_s"))
@@ -310,11 +306,11 @@ object ProtoWire {
     * bug can't cancel out). */
   /** Nested-topic staging, shared with q_source_proto_descriptor (the
     * descriptor path must read the IDENTICAL payloads the hand-rolled
-    * decoder reads). Idempotent via stageWrite's _DONE marker. */
-  private[streamline] def stageNested(spark: SparkSession, dir: String,
-                                      root: String): Unit = {
+    * decoder reads). Idempotent via stageWrite; returns the root. */
+  private[streamline] def stageNested(spark: SparkSession,
+                                      dir: String): String = {
     import spark.implicits._
-    stageWrite(root,
+    stageWrite("proton", dir,
       Tables.events(spark, dir)
         .select($"event_id", $"event_type",
           get_json_object($"props", "$.k").cast("long").as("pv"),
@@ -328,8 +324,7 @@ object ProtoWire {
 
   private def sourceProtoNested(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("proton", dir)
-    stageNested(spark, dir, root)
+    val root = stageNested(spark, dir)
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.pb").load(root)
       .select($"content").as[Array[Byte]]
@@ -359,8 +354,7 @@ object ProtoWire {
     * files were batched. */
   private def streamProto(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("protostream", dir)
-    stageWrite(root,
+    val root = stageWrite("protostream", dir,
       Tables.events(spark, dir)
         .select($"event_id", $"user_id", $"event_type", $"value",
           unix_timestamp(date_trunc("second", $"ts")).as("ts_s"))

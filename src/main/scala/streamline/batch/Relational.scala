@@ -67,19 +67,13 @@ object Relational {
     * the values. */
   private def scanNestedPrune(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("nested", dir)
-    val marker = new java.io.File(root, "_DONE")
-    val stage = s"$root/data"
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val stage = streamline.util.Scratch.staged("nested", dir) { root =>
       Tables.events(spark, dir)
         .select($"event_id",
           struct($"user_id".as("user"), $"event_type".as("etype"),
             $"value".as("v")).as("meta"))
-        .write.parquet(stage)
-      marker.createNewFile(): Unit
-    }
+        .write.parquet(s"$root/data")
+    } + "/data"
     spark.read.parquet(stage)
       .groupBy($"meta.etype".as("etype"))
       .agg(count(lit(1)).as("n"))
@@ -300,11 +294,7 @@ object Relational {
       {"name":"o_custkey","type":"long"},
       {"name":"o_totalprice","type":"double"},
       {"name":"o_orderstatus","type":"string"}]}"""
-    val root = streamline.util.Scratch.dir("avro", dir)
-    val marker = new java.io.File(root, "_DONE")
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val root = streamline.util.Scratch.staged("avro", dir) { root =>
       Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice",
           $"o_orderstatus")
@@ -334,7 +324,6 @@ object Relational {
             throw new java.io.IOException(s"avro publish failed: $pid")
           Iterator(n)
         }.reduce(_ + _): Unit
-      marker.createNewFile(): Unit
     }
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.avro").load(root)

@@ -590,10 +590,8 @@ object SqlApi {
     * is enabled for the block and restored exception-safe. */
   private def sqlScript(spark: SparkSession, dir: String): DataFrame = {
     Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    val key = "spark.sql.scripting.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try spark.sql("""
+    SkewJoin.withConfs(spark, Seq("spark.sql.scripting.enabled" -> "true")) {
+      spark.sql("""
       BEGIN
         DECLARE floor_bal DOUBLE DEFAULT 1.0;
         DECLARE lim BIGINT;
@@ -609,9 +607,6 @@ object SqlApi {
         FROM customer WHERE c_acctbal > floor_bal
         GROUP BY c_mktsegment ORDER BY c_mktsegment;
       END""")
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 

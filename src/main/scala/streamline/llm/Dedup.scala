@@ -683,30 +683,15 @@ object Dedup {
     // two batches still witness the incremental shape, and
     // DedupIncrementalSpec separately drives a 7-shard run through
     // the same drain to pin batching invariance). The shard count is
-    // part of the scratch name (r18 ADVICE): a machine whose scratch
-    // was staged under a different sharding gets a fresh stage rather
-    // than a _DONE marker silently pinning the old layout forever.
+    // part of the stage name (the Scratch key contract).
     val shards = 2
-    val root = streamline.util.Scratch.dir(s"dedupinc$shards", dir)
-    val stage = s"$root/in"
-    val marker = new java.io.File(root, "_DONE")
-    // r19 ADVICE: the r18 key rename (dedupinc -> dedupinc2) left
-    // old-layout stages orphaned — best-effort sweep of the legacy
-    // un-sharded scratch root. Unconditional (r20 ADVICE): a machine
-    // already staged under the NEW layout would otherwise keep the
-    // orphaned legacy directory forever (deleteRec is a no-op on a
-    // missing dir, so this costs one stat call when already clean).
-    streamline.stream.Streams.deleteRec(new java.io.File(
-      streamline.util.Scratch.dir("dedupinc", dir)))
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
-      Tables.documents(spark, dir).where($"doc_id" % 5 === 0)
-        .select($"doc_id", $"text")
-        .repartition(shards)
-        .write.parquet(stage)
-      marker.createNewFile(): Unit
-    }
+    val stage = streamline.util.Scratch.staged(s"dedupinc$shards", dir) {
+      root =>
+        Tables.documents(spark, dir).where($"doc_id" % 5 === 0)
+          .select($"doc_id", $"text")
+          .repartition(shards)
+          .write.parquet(s"$root/in")
+    } + "/in"
     val base = incShingled(Tables.documents(spark, dir))
       .where($"doc_id" % 5 =!= 0).localCheckpoint(true)
     streamIncrementalDrain(spark, stage, base).orderBy($"doc_id")
@@ -719,10 +704,6 @@ object Dedup {
     * `base` index, and accumulates the per-batch verdicts. */
   private[streamline] def streamIncrementalDrain(
       spark: SparkSession, stage: String, base: DataFrame): DataFrame = {
-    // AtomicReference: foreachBatch runs on the streaming-execution
-    // thread; the post-awaitTermination read is on the caller thread.
-    // The handoff needs an explicit memory barrier (r18 ADVICE).
-    val acc = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
     // The probe inside foreachBatch is STATELESS batch work — the
     // small state-store partition count the drain pins (sized to
     // per-partition state-store fixed cost) starves its six keyed
@@ -733,27 +714,18 @@ object Dedup {
     // exchange, so the engine never reads the conf mid-flight.
     val probeParts = Seq("spark.sql.shuffle.partitions" ->
       spark.conf.get("spark.sql.shuffle.partitions"))
-    streamline.stream.Streams.drain(spark, spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // materialize within the batch scope — the batch df is not
-        // valid after the micro-batch commits. The shingled delta
-        // is checkpointed FIRST (r22): the probe references it in
-        // three join sites (md5 probe, gram explode, verify
-        // re-attach), each of which would otherwise re-read the
-        // shard and re-run the interpreted shingle lambdas.
-        val verdicts = streamline.batch.SkewJoin.withConfs(spark, probeParts) {
-          val delta = incShingled(df.toDF()).localCheckpoint(true)
-          incrementalProbe(spark, delta, base).localCheckpoint(true)
-        }
-        acc.updateAndGet(prev =>
-          if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
-      })
-    require(acc.get() != null, "stream fed no batches (stale checkpoint?)")
-    acc.get()
+    streamline.stream.Streams.foldFiles[DataFrame](spark, stage,
+        "doc_id LONG, text STRING") { (acc, df) =>
+      // The shingled delta is checkpointed FIRST (r22): the probe
+      // references it in three join sites (md5 probe, gram explode,
+      // verify re-attach), each of which would otherwise re-read the
+      // shard and re-run the interpreted shingle lambdas.
+      val verdicts = streamline.batch.SkewJoin.withConfs(spark, probeParts) {
+        val delta = incShingled(df).localCheckpoint(true)
+        incrementalProbe(spark, delta, base).localCheckpoint(true)
+      }
+      acc.fold(verdicts)(_.unionByName(verdicts))
+    }
   }
 
   private val dedupIncrementalSql = """

@@ -625,18 +625,12 @@ object Similarity {
   private def streamDedupEmbed(spark: SparkSession,
                                dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("dedupembs", dir)
-    val stage = s"$root/in"
-    val marker = new java.io.File(root, "_DONE")
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val stage = streamline.util.Scratch.staged("dedupembs", dir) { root =>
       Tables.embeddings(spark, dir).where($"vec_id" % 5 === 0)
         .select($"vec_id", $"embedding")
         .repartition(4) // four shard files -> four micro-batches
-        .write.parquet(stage)
-      marker.createNewFile(): Unit
-    }
+        .write.parquet(s"$root/in")
+    } + "/in"
     val baseIdx = signBanded(spark, Tables.embeddings(spark, dir)
       .where($"vec_id" % 5 =!= 0)).localCheckpoint(true)
     streamEmbedDrain(spark, stage, baseIdx).orderBy($"vec_id")
@@ -646,28 +640,13 @@ object Similarity {
     * run it over a different sharding of the same delta (the
     * streamIncrementalDrain discipline). */
   private[streamline] def streamEmbedDrain(spark: SparkSession,
-      stage: String, baseIdx: DataFrame): DataFrame = {
-    // AtomicReference: foreachBatch runs on the streaming-execution
-    // thread; the post-awaitTermination read is on the caller thread.
-    // The handoff needs an explicit memory barrier (r18 ADVICE).
-    val acc = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    streamline.stream.Streams.drain(spark, spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // materialize within the batch scope — the batch df is not
-        // valid after the micro-batch commits
-        val verdicts =
-          embedProbe(spark, signBanded(spark, df.toDF()), baseIdx)
-            .localCheckpoint(true)
-        acc.updateAndGet(prev =>
-          if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
-      })
-    require(acc.get() != null, "stream fed no batches (stale checkpoint?)")
-    acc.get()
-  }
+      stage: String, baseIdx: DataFrame): DataFrame =
+    streamline.stream.Streams.foldFiles[DataFrame](spark, stage,
+        "vec_id LONG, embedding ARRAY<FLOAT>") { (acc, df) =>
+      val verdicts = embedProbe(spark, signBanded(spark, df), baseIdx)
+        .localCheckpoint(true)
+      acc.fold(verdicts)(_.unionByName(verdicts))
+    }
 
   // Bucket arithmetic interpolated from the same knob default as the
   // batch LSH oracle (the two sides cannot drift — ADVICE r11).
@@ -1317,12 +1296,7 @@ object Similarity {
   private def streamDedupPhash(spark: SparkSession,
                                dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("dedupph", dir)
-    val stage = s"$root/in"
-    val marker = new java.io.File(root, "_DONE")
-    if (!marker.exists()) {
-      streamline.stream.Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val stage = streamline.util.Scratch.staged("dedupph", dir) { root =>
       // delta = id % 20 ≤ 4: four WHOLE planted families per stride
       // (their mates arrive in the same ingest wave ⇒ kept) plus one
       // lone member-0 whose mates sit in the base (⇒ dropped) — both
@@ -1330,9 +1304,8 @@ object Similarity {
       Tables.documents(spark, dir).where($"doc_id" % 20 <= 4)
         .select($"doc_id")
         .repartition(2) // two shard files -> two micro-batches (r18)
-        .write.parquet(stage)
-      marker.createNewFile(): Unit
-    }
+        .write.parquet(s"$root/in")
+    } + "/in"
     val baseIdx = phashBands(spark, Tables.documents(spark, dir)
       .where($"doc_id" % 20 > 4).select($"doc_id"))
       .localCheckpoint(true)
@@ -1343,26 +1316,13 @@ object Similarity {
     * run it over a different sharding of the same delta (the
     * streamIncrementalDrain discipline). */
   private[streamline] def streamPhashDrain(spark: SparkSession,
-      stage: String, baseIdx: DataFrame): DataFrame = {
-    // AtomicReference: foreachBatch runs on the streaming-execution
-    // thread; the post-awaitTermination read is on the caller thread.
-    // The handoff needs an explicit memory barrier (r18 ADVICE).
-    val acc = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    streamline.stream.Streams.drain(spark, spark.readStream
-      .schema("doc_id LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val verdicts =
-          phashProbe(spark, phashBands(spark, df.toDF()), baseIdx)
-            .localCheckpoint(true)
-        acc.updateAndGet(prev =>
-          if (prev == null) verdicts else prev.unionByName(verdicts)): Unit
-      })
-    require(acc.get() != null, "stream fed no batches (stale checkpoint?)")
-    acc.get()
-  }
+      stage: String, baseIdx: DataFrame): DataFrame =
+    streamline.stream.Streams.foldFiles[DataFrame](spark, stage,
+        "doc_id LONG") { (acc, df) =>
+      val verdicts = phashProbe(spark, phashBands(spark, df), baseIdx)
+        .localCheckpoint(true)
+      acc.fold(verdicts)(_.unionByName(verdicts))
+    }
 
   private val streamDedupPhashSql = phashPairsCte.replace(
     "WITH RECURSIVE", "WITH") + """,
@@ -1460,8 +1420,9 @@ object Similarity {
     * index ([[signBanded]] — deterministic coordinate hyperplanes, so
     * the WHOLE pipeline keeps a DuckDB oracle, unlike the seeded
     * variants) is written ONCE as a parquet table
-    * `PARTITIONED BY (band, bkt)` under a `_DONE`-guarded scratch
-    * root; every later invocation probes WITHOUT retraining — the
+    * `PARTITIONED BY (band, bkt)` under a [[streamline.util.Scratch.staged]]
+    * root keyed by the band width (`graft.lsh.bandBits`); every later
+    * invocation at that width probes WITHOUT retraining — the
     * write-once/probe-forever contract of a real vector index. The
     * probe computes its own 8 (band, bucket) keys driver-side from
     * the 1-row probe vector and pushes them as PARTITION filters, so
@@ -1475,14 +1436,9 @@ object Similarity {
   private def knnPersist(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val bits = streamline.util.Knobs.lshBandBits(spark)
-    val root = streamline.util.Scratch.dir("knnidx", dir)
-    val done = new java.io.File(root, "_DONE")
-    if (!done.exists()) {
+    val root = streamline.util.Scratch.staged(s"knnidx_b$bits", dir) { r =>
       signBanded(spark, Tables.embeddings(spark, dir))
-        .write.mode("overwrite").partitionBy("band", "bkt")
-        .parquet(s"$root/index")
-      done.getParentFile.mkdirs()
-      java.nio.file.Files.createFile(done.toPath): Unit
+        .write.partitionBy("band", "bkt").parquet(s"$r/index")
     }
     val probe = Tables.embeddings(spark, dir)
       .orderBy($"vec_id".asc).limit(1)

@@ -154,11 +154,7 @@ object OffsetReplay {
 
   private def sourceOffsetReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("offreplay", dir)
-    val marker = new java.io.File(root, "_DONE")
-    if (!marker.exists()) {
-      Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val root = streamline.util.Scratch.staged("offreplay", dir) { root =>
       stage(spark, dir, root)
       val step = stepFor(endOffsets(spark, root))
       // first incarnation: batch 0 sunk+committed, batch 1 sunk, CRASH
@@ -166,7 +162,6 @@ object OffsetReplay {
       // recovery: re-delivers batch 1 (now duplicated in the sink),
       // then drains to the end
       runLoop(spark, root, step)
-      marker.createNewFile(): Unit
     }
     finalTable(spark, root)
       .select($"event_id", $"user_id", $"event_type", $"value",
@@ -264,11 +259,7 @@ object OffsetReplay {
     * isolation and an interleaved two-consumer drain. */
   private def sourceRebalance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = streamline.util.Scratch.dir("rebalance", dir)
-    val marker = new java.io.File(root, "_DONE")
-    if (!marker.exists()) {
-      Streams.deleteRec(new java.io.File(root))
-      new java.io.File(root).mkdirs()
+    val root = streamline.util.Scratch.staged("rebalance", dir) { root =>
       stage(spark, dir, root)
       val step = stepFor(endOffsets(spark, root))
       // epoch 0: A = {0,1}, B = {2,3}
@@ -277,7 +268,6 @@ object OffsetReplay {
       // rebalance: B leaves; epoch 1: A owns every partition and
       // resumes from the group's committed offsets
       runConsumer(spark, root, Set(0, 1, 2, 3), step)
-      marker.createNewFile(): Unit
     }
     finalTable(spark, root)
       .select($"event_id", $"user_id", $"event_type", $"value",

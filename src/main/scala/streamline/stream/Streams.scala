@@ -2,7 +2,7 @@ package streamline.stream
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   StreamingQueryProgress, Trigger}
@@ -22,7 +22,9 @@ import streamline.util.Det._
   * exactly the hybrid-engine property this module witnesses. Every
   * finite run, here and in the llm/batch foreachBatch witnesses, goes
   * through the one lifecycle [[drain]] (conf scope, trigger,
-  * checkpoint, cleanup).
+  * checkpoint, cleanup), and every incremental-ingest witness that
+  * folds staged files into driver-held state through foreachBatch
+  * goes through the one fold [[foldFiles]].
   *
   * Scale posture: all aggregations are keyed (window × type, user), so
   * state is hash-partitioned across executors; watermarks bound state
@@ -126,6 +128,27 @@ object Streams {
       try await(q) finally if (q.isActive) q.stop()
       q.recentProgress.toSeq
     } finally if (checkpoint.isEmpty) deleteRec(new java.io.File(ckpt))
+  }
+
+  /** The one file-stream fold (the D-Streams shape: each micro-batch a
+    * deterministic batch job over one staged file): reads the parquet
+    * files under `stage` one per micro-batch and folds each batch into
+    * driver-held state with `step` (None before the first batch),
+    * through foreachBatch under [[drain]]. `step` must materialize
+    * what it keeps — the batch frame is invalid once the micro-batch
+    * commits. foreachBatch runs on the stream thread, so the state is
+    * handed to the caller through an AtomicReference. */
+  private[streamline] def foldFiles[S](spark: SparkSession, stage: String,
+      schema: String)(step: (Option[S], DataFrame) => S): S = {
+    val acc = new java.util.concurrent.atomic.AtomicReference[Option[S]](None)
+    drain(spark, spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+      .writeStream.outputMode("append")
+      .foreachBatch { (df: Dataset[Row], _: Long) =>
+        acc.set(Some(step(acc.get(), df.toDF())))
+      })
+    acc.get().getOrElse(throw new IllegalArgumentException(
+      "stream fed no batches (stale checkpoint?)"))
   }
 
   /** Run a streaming pipeline to completion into a memory sink; return
@@ -1142,22 +1165,17 @@ object Streams {
   private def streamBackpressure(spark: SparkSession,
                                  dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = streamline.util.Scratch.dir("bp_events", dir)
     val ev = Tables.events(spark, dir)
       .select($"event_id", $"ts", $"event_type", $"value")
-    // _DONE-cached stage (r13): the staged split is a pure function of
-    // the source dir, and re-writing it cost a full events
-    // scan+shuffle+write on EVERY execution; Spark's file index
-    // ignores underscore-prefixed entries, so the marker can live
-    // inside the parquet dir (the _SUCCESS convention).
-    val stageDone = new java.io.File(tmp, "_DONE")
-    if (!stageDone.exists()) {
-      deleteRec(new java.io.File(tmp))
-      ev.repartition(4).write.parquet(tmp)
-      stageDone.createNewFile(): Unit
+    // staged once (r13): the split is a pure function of the source
+    // dir, and re-writing it cost a full events scan+shuffle+write on
+    // EVERY execution. The parquet files sit in the stage root beside
+    // `_DONE` (the file index skips underscore-prefixed names).
+    val stage = streamline.util.Scratch.staged("bp_events", dir) { root =>
+      ev.repartition(4).write.mode("overwrite").parquet(root)
     }
     val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
     val agg = src.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), dsum("value").as("sum_val"))
     runToTable(spark, "backpressure", "update", agg)
@@ -2244,30 +2262,19 @@ object Streams {
   private def streamRetractHist(spark: SparkSession,
                                 dir: String): DataFrame = {
     import spark.implicits._
-    // shard count in the scratch key (the dedupinc discipline): a
-    // machine staged under the old 4-file layout gets a fresh 2-file
-    // stage, and the legacy root is swept rather than orphaned.
-    val tmp = streamline.util.Scratch.dir("retract_ev2", dir)
     val ev = Tables.events(spark, dir).select($"event_id", $"user_id")
-    // _DONE-cached stage, same reasoning as streamBackpressure's (the
+    // staged once, same reasoning as streamBackpressure's (the
     // generations under `root` are rebuilt per run regardless — only
-    // the immutable staged INPUT is cached).
-    val stageDone = new java.io.File(tmp, "_DONE")
-    // legacy-root sweep runs UNCONDITIONALLY (r20 ADVICE): a machine
-    // already staged under the new layout would otherwise keep the
-    // orphaned old 4-file root forever; no-op when already clean.
-    deleteRec(new java.io.File(
-      streamline.util.Scratch.dir("retract_ev", dir)))
-    if (!stageDone.exists()) {
-      deleteRec(new java.io.File(tmp))
-      ev.repartition(2).write.parquet(tmp)
-      stageDone.createNewFile(): Unit
+    // the immutable staged INPUT is cached); the shard count is in the
+    // stage name (the dedupinc discipline)
+    val stage = streamline.util.Scratch.staged("retract_ev2", dir) { r =>
+      ev.repartition(2).write.mode("overwrite").parquet(r)
     }
     val root = streamline.util.Scratch.fresh("retract_hist", dir)
     def exists(p: String) = new java.io.File(p).exists()
     @volatile var lastGen = 0L
     drain(spark, spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
       .groupBy($"user_id").agg(count(lit(1)).as("cnt"))
       .writeStream
       .outputMode("update") // emits ONLY users whose count changed

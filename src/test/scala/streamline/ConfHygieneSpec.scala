@@ -23,7 +23,8 @@ class ConfHygieneSpec extends SparkSuite {
     "spark.sql.parquet.outputTimestampType",
     "spark.sql.streaming.checkpoint.fileChecksum.enabled",
     "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.coalescePartitions.enabled")
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.scripting.enabled")
 
   private def snapshot: Map[String, Option[String]] =
     sensitive.map(k => k ->
@@ -41,7 +42,10 @@ class ConfHygieneSpec extends SparkSuite {
     // foreachBatch sinks, the proc-time trigger and the connect drain
     "q_stream_rescale", "q_stream_state_rewrite", "q_stream_state_evolve",
     "q_stream_late_metric", "q_sink_upsert", "q_stream_sketch",
-    "q_stream_connect_broadcast", "q_stream_proctime")
+    "q_stream_connect_broadcast", "q_stream_proctime",
+    // the scripting-conf scope and the probe-partition scope inside a
+    // foreachBatch fold
+    "q_sql_script", "q_stream_dedup_incremental")
 
   test("conf-touching queries restore every sensitive conf") {
     val before = snapshot

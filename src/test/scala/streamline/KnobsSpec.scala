@@ -77,6 +77,51 @@ class KnobsSpec extends SparkSuite {
     assert(a.contains("graft_x_"))
   }
 
+  test("staged builds once, and a failed build leaves no marker") {
+    val src = "/knobs_spec/staged"
+    stream.Streams.deleteRec(new java.io.File(Scratch.dir("st", src)))
+    var builds = 0
+    def stage() = Scratch.staged("st", src) { root =>
+      builds += 1
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(root, "data"), "x"): Unit
+    }
+    val root = stage()
+    assert(root == Scratch.dir("st", src))
+    assert(stage() == root)
+    assert(builds == 1, s"build ran $builds times across two calls")
+    assert(new java.io.File(root, "data").exists())
+
+    // a build that throws leaves partial output but no _DONE; the next
+    // call wipes the root and rebuilds it from empty
+    stream.Streams.deleteRec(new java.io.File(root))
+    intercept[IllegalStateException] {
+      Scratch.staged("st", src) { r =>
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(r, "partial"), "x")
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(!new java.io.File(root, "_DONE").exists())
+    Scratch.staged("st", src) { r =>
+      assert(new java.io.File(r).list().isEmpty, "rebuild root not empty")
+    }
+    assert(new java.io.File(root, "_DONE").exists())
+    stream.Streams.deleteRec(new java.io.File(root))
+  }
+
+  test("foldFiles over an empty stage fails with no batches") {
+    val stage = java.nio.file.Files.createTempDirectory("graft_fold").toFile
+    try {
+      val e = intercept[IllegalArgumentException] {
+        stream.Streams.foldFiles[Long](spark, stage.getPath, "id LONG") {
+          (acc, df) => acc.getOrElse(0L) + df.count()
+        }
+      }
+      assert(e.getMessage.contains("fed no batches"))
+    } finally stream.Streams.deleteRec(stage)
+  }
+
   test("fast-tmp auto-pick guards tmpfs headroom") {
     // tmpfs is RAM — the auto-pick must refuse /dev/shm when its free
     // space is under the floor (fallback to java.io.tmpdir) and accept
