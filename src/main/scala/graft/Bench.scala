@@ -1,272 +1,62 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+/** Driver timing contract: times each selected query (all when no name
+  * is given) once, in name order, on the driver session at
+  * `SPARK_GRAFT_SF_DIR`, and prints one JSON line on stdout. */
 object Bench {
-  private val runToken = java.util.UUID.randomUUID().toString.take(8)
-
-  /** Timed fsync'd write of ~100 MB to the BLOCK DEVICE (cwd, not the
-    * tmpfs the shuffle dirs use): the harness host intermittently
-    * throttles block writes to ~40 MB/s (Knobs.fastTmp scaladoc),
-    * which inflated BENCH_r05 2× over a quiet-box run of identical
-    * code. Emitting the measured MB/s into bench.json makes a
-    * throttled run self-identifying — compare `io_probe_mb_s` across
-    * rounds before comparing totals. */
-  private def ioProbeMbS(): Double = {
-    val f = java.nio.file.Paths.get("graft_io_probe.tmp")
-    try {
-      val chunk = java.nio.ByteBuffer.allocate(4 << 20)
-      // non-constant bytes so a compressing/cow filesystem can't fake it
-      val rnd = new java.util.Random(42)
-      rnd.nextBytes(chunk.array())
-      val ch = java.nio.channels.FileChannel.open(f,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-      val t0 = System.nanoTime()
-      try {
-        var written = 0L
-        while (written < (100L << 20)) {
-          chunk.rewind()
-          written += ch.write(chunk)
-        }
-        ch.force(true)
-      } finally ch.close()
-      val dt = (System.nanoTime() - t0) / 1e9
-      100.0 / dt
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] io probe failed: $e"); -1.0
-    } finally { java.nio.file.Files.deleteIfExists(f): Unit }
-  }
-
-  /** Committed quiet per-query baseline (repo-root
-    * `bench_baseline.json`, flat name→seconds map; the `_basis_cpus`
-    * entry records the core count every min was seeded on). Missing or
-    * malformed file degrades to "no history gate" rather than
-    * failing the bench. */
-  private def loadBaseline(): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_baseline.json")), "UTF-8")
-      "\"([^\"]+)\"\\s*:\\s*([0-9][0-9.eE+-]*)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] no baseline table ($e)"); Map.empty
-    }
-
-  /** Core-basis gate on the history baseline (r17 judge item 3, pure;
-    * pinned in BenchGateSpec): a min timed at N cores is not a valid
-    * 2×/3× trigger for a run at M ≠ N cores — the first seeds for the
-    * r17 additions ran at the 4-core default and read 2–3× hot,
-    * producing the q_stream_cep_skip_past false red. The baseline file
-    * records its basis once (`_basis_cpus`, whole-file: every min is
-    * seeded from quiet full runs at the driver's 32-core config, per
-    * the committed workflow); a run on any other basis — or against a
-    * legacy file that never recorded one — gets NO history gate
-    * instead of a wrong one. The throttle gate is basis-independent
-    * and stays on either way. */
-  private[graft] def basisGated(baseline: Map[String, Double],
-      currentCpus: Int): Map[String, Double] =
-    baseline.get("_basis_cpus") match {
-      case Some(b) if b.toInt == currentCpus => baseline - "_basis_cpus"
-      case Some(b) =>
-        System.err.println(s"[bench] baseline basis ${b.toInt} cores != " +
-          s"run basis $currentCpus: history gate disabled")
-        Map.empty
-      case None =>
-        if (baseline.nonEmpty)
-          System.err.println("[bench] baseline records no _basis_cpus: " +
-            "history gate disabled")
-        Map.empty
-    }
-
-  /** Re-time suspect selection (pure; pinned in BenchGateSpec).
-    * Two gates compose:
-    *  - THROTTLE (per-window, round 11): `inThrottledWindow` says
-    *    whether the io probes bracketing a query's position read
-    *    throttled — probes now run every ~50 queries, so a throttle
-    *    burst is attributed to the queries timed INSIDE it instead of
-    *    defaming the whole run. The 10 slowest >3 s queries among
-    *    those re-run.
-    *  - HISTORY (per-query, round 10; tightened round 11): anything
-    *    reading over its committed quiet baseline by the tier ratio
-    *    AND >0.5 s re-runs — 3× for sub-2 s baselines (jitter room),
-    *    2× for >2 s baselines, where BENCH_r10 showed 1.6× throttle
-    *    inflation (q_stream_retract_hist 6.83 vs 4.15 s) sitting
-    *    invisibly under the old single 3× trigger. The floor keeps
-    *    sub-half-second jitter from burning re-time slots; it was 1 s
-    *    through r12, which let q_source_proto_nested read 3× its min
-    *    (0.71 vs 0.23 s) without ever being re-timed (VERDICT r12).
-    * History picks the 10 largest ABSOLUTE excesses (dt − baseline) —
-    * ratio alone would spend slots on 0.4 s blips. Union capped at 12.
-    * Returns (suspects, historyCount). */
-  private[graft] def pickSuspects(firstPass: Seq[(String, Double)],
-      baseline: Map[String, Double],
-      inThrottledWindow: String => Boolean): (Seq[String], Int) = {
-    val throttleSuspects = firstPass
-      .filter { case (n, dt) => dt > 3.0 && inThrottledWindow(n) }
-      .sortBy(-_._2).take(10).map(_._1)
-    def tier(b: Double): Double = if (b > 2.0) 2.0 else 3.0
-    val historySuspects = firstPass.collect {
-      case (name, dt) if dt > 0.5 &&
-        baseline.get(name).exists(b => dt > tier(b) * b) => name -> dt
-    }.sortBy { case (n, dt) => -(dt - baseline(n)) }.take(10).map(_._1)
-    ((throttleSuspects ++ historySuspects).distinct.take(12),
-      historySuspects.size)
-  }
-
-  /** A probe window is throttled when either bracketing reading is
-    * under 40 MB/s (the harness's observed throttle ceiling) or the
-    * rate HALVED across it in either direction — a throttle that ends
-    * mid-window shows as a low `before` and a recovered `after`, the
-    * mirror image of one that begins mid-window (ADVICE r11). Pure;
-    * pinned in BenchGateSpec. */
-  private[graft] def windowThrottled(before: Double, after: Double): Boolean =
-    before > 0 && after > 0 &&
-      (math.min(before, after) < 0.5 * math.max(before, after) ||
-        before < 40.0 || after < 40.0)
+  /** The driver reads a ~2,000-char tail of stdout, and sbt appends its
+    * own lines after ours: a longer line is clipped mid-JSON. */
+  private val maxLine = 1500
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val ioMbS = ioProbeMbS()
-    System.err.println(f"[bench] io probe: $ioMbS%.1f MB/s")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // tmpfs shuffle dirs + streaming checkpoints: the harness host
-      // intermittently throttles block-device writes (Knobs.fastTmp
-      // scaladoc); single-node only. JVM-unique roots (stale checkpoint
-      // reuse would replay committed offsets), removed on exit.
-      .config("spark.local.dir",
-        streamline.util.Knobs.fastTmp + s"/local_bench_$runToken")
-      .config("spark.sql.streaming.checkpointLocation",
-        streamline.util.Knobs.fastTmp + s"/ck_bench_$runToken")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JVM/codegen/parquet-footer startup costs belong to
-    // the session, not to whichever query happens to run first.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // A misspelled query name must fail loudly, not silently time an
     // empty selection and emit a valid-looking {"value":0} line.
     val unknown = args.filterNot(SparkEntry.queries.keySet)
     if (unknown.nonEmpty)
       sys.error(s"unknown queries: ${unknown.mkString(", ")}; " +
         s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val selected =
-      if (args.nonEmpty) SparkEntry.queries.filter(q => args.contains(q._1))
-      else SparkEntry.queries
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $e"); false
+    val selected = SparkEntry.queries.toSeq
+      .filter(q => args.isEmpty || args.contains(q._1)).sortBy(_._1)
+    val results = SparkEntry.withDriverSession("bench") { spark =>
+      // Untimed warm-up: JVM/codegen/parquet-footer startup costs belong
+      // to the session, not to whichever query happens to run first.
+      try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+      selected.map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        val mark = try { fn(spark, sfDir).count(); "" } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: $e"); "  (FAILED)"
+        }
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench] $name%-28s $dt%8.2f s$mark")
+        name -> dt
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-28s $dt%8.2f s${if (ok) "" else "  (FAILED)"}")
-      dt
     }
-    // Interleaved IO probes (round 11): one reading every `probeEvery`
-    // queries, not just start/end — a throttle burst is then
-    // attributable to the ~50 queries timed inside its window instead
-    // of smearing over (or hiding inside) the whole run. ~1 s per
-    // probe, ~7 probes per full run: negligible next to the queries.
-    val probeEvery = 50
-    val ordered = selected.toSeq.sortBy(_._1)
-    val probes = scala.collection.mutable.ArrayBuffer(ioMbS)
-    val firstPass = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      if (i > 0 && i % probeEvery == 0) {
-        val p = ioProbeMbS()
-        System.err.println(f"[bench] io probe (mid @$i): $p%.1f MB/s")
-        probes += p
-      }
-      name -> time(name, fn)
-    }
-    // Final probe AFTER the run: the block-device throttle can begin
-    // (or end) mid-bench; the closing reading bounds the last window.
-    val ioMbSEnd = ioProbeMbS()
-    probes += ioMbSEnd
-    System.err.println(f"[bench] io probe (end): $ioMbSEnd%.1f MB/s")
-    // Throttle-aware re-time, per WINDOW: a query is suspect when its
-    // own bracketing probes read throttled — BENCH_r07 recorded
-    // q_iter_delta at 76.6 s where a quiet box runs it in 2.6.
-    // Re-run the slowest such queries once and keep the per-query MIN:
-    // bounded extra cost, and an innocent operator stops being defamed
-    // by whichever throttle window it happened to land in.
-    val qWindow: Map[String, Int] = ordered.zipWithIndex.map {
-      case ((n, _), i) => n -> (i / probeEvery)
-    }.toMap
-    val throttledWindows = (0 until probes.size - 1)
-      .filter(w => windowThrottled(probes(w), probes(w + 1))).toSet
-    val throttled = throttledWindows.nonEmpty
-    val (suspects, nHistory) = pickSuspects(firstPass,
-      basisGated(loadBaseline(), cpus.toInt),
-      n => throttledWindows(qWindow(n)))
-    if (suspects.nonEmpty)
-      System.err.println(s"[bench] re-timing ${suspects.size} suspects " +
-        f"(probes $ioMbS%.1f -> $ioMbSEnd%.1f MB/s, throttle=$throttled, " +
-        s"history=$nHistory): ${suspects.mkString(", ")}")
-    // Keep the per-query MIN, but record BOTH timings: the re-run is
-    // warm (page cache, codegen, footers), so retimed totals carry a
-    // warm-run bias relative to non-retimed rounds — cross-round
-    // comparisons need the first-pass number too.
-    val retimed = suspects.map { name =>
-      name -> time(name, selected(name))
-    }.toMap
-    // A probe after the re-time pass: if THIS window was throttled too,
-    // the re-timed numbers carry the same inflation and the bench.json
-    // reader can see it instead of trusting a dirty re-run.
-    val ioMbSRetime = if (suspects.nonEmpty) ioProbeMbS() else ioMbSEnd
-    if (suspects.nonEmpty)
-      System.err.println(f"[bench] io probe (post-retime): $ioMbSRetime%.1f MB/s")
-    val results = firstPass.map { case (name, dt) =>
-      name -> retimed.get(name).fold(dt)(math.min(dt, _))
-    }
-    def render(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val suspectJson = suspects
-      .map(n => "\"" + n + "\":" +
-        f"[${firstPass.toMap.apply(n)}%.3f,${retimed(n)}%.3f]")
-      .mkString("{", ",", "}")
-    def line(qs: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"io_probe_mb_s":$ioMbS%.1f,"io_probe_mb_s_end":$ioMbSEnd%.1f,"throttle_retimed":$throttled,"n_history_retimed":$nHistory,"queries":$qs,"sf":"$sfDir"}"""
-    // bench.json keeps the full detail including first/retimed pairs
-    // for every suspect and each query's enclosing probe window (the
-    // run is name-sorted, so [from,to] names identify the queries a
-    // window's readings bracket); the stdout line stays compact.
-    val windowsJson = (0 until probes.size - 1).map { w =>
-      val lo = w * probeEvery
-      val hi = math.min((w + 1) * probeEvery, ordered.size) - 1
-      s"""{"from":"${ordered(lo)._1}","to":"${ordered(hi)._1}",""" +
-        f""""mb_s_before":${probes(w)}%.1f,"mb_s_after":${probes(w + 1)}%.1f,""" +
-        s""""throttled":${throttledWindows(w)}}"""
-    }.mkString("[", ",", "]")
-    val full = line(render(results)).dropRight(1) +
-      s""","retimed_first_min":$suspectJson""" +
-      f""","io_probe_mb_s_post_retime":$ioMbSRetime%.1f""" +
-      s""","io_windows":$windowsJson}"""
-    // Persist the full per-query detail to a file channel.
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), full)
+    val (stdoutLine, fullLine) = lines(results, sfDir)
+    try Files.writeString(Paths.get("bench.json"), fullLine)
     catch { case e: Throwable => System.err.println(s"[bench] bench.json write failed: $e") }
-    spark.stop()
-    Seq(s"/ck_bench_$runToken", s"/local_bench_$runToken").foreach(d =>
-      streamline.stream.Streams.deleteRec(new java.io.File(
-        streamline.util.Knobs.fastTmp + d)))
-    Console.out.flush(); System.err.flush()
-    // The driver captures only a ~2000-char TAIL of sbt stdout, and sbt
-    // appends its own "[success] …" lines after ours: a full 97-query
-    // line is ~3.5 KB and gets clipped mid-JSON (BENCH_r02/r03 both
-    // recorded "parsed": null). Emit a compact line — total + the
-    // slowest queries, trimmed until the line is safely inside the tail
-    // window — so the driver's parse always succeeds; bench.json keeps
-    // the complete breakdown.
-    val bySlowest = results.sortBy(-_._2)
-    val compact = Iterator.range(0, bySlowest.size + 1)
-      .map(k => line(render(bySlowest.take(bySlowest.size - k).sortBy(_._1))))
-      .find(_.length <= 1500)
-      .getOrElse(line("{}"))
-    println(compact)
+    System.err.flush()
+    println(stdoutLine)
     Console.out.flush()
+  }
+
+  /** The stdout line and the untrimmed line for bench.json. `value` and
+    * `n_queries` cover every query in both; the stdout line's `queries`
+    * drops the fastest entries until it fits in [[maxLine]]. */
+  private[graft] def lines(results: Seq[(String, Double)],
+      sfDir: String): (String, String) = {
+    val total = results.map(_._2).sum
+    def line(qs: Seq[(String, Double)]): String =
+      qs.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+        .mkString(f"""{"metric":"total","value":$total%.3f,"unit":"sec",""" +
+          s""""n_queries":${results.size},"queries":{""", ",",
+          s"""},"sf":"$sfDir"}""")
+    val bySlowest = results.sortBy(-_._2)
+    val trimmed = (bySlowest.size to 0 by -1).iterator
+      .map(k => line(bySlowest.take(k))).find(_.length <= maxLine)
+      .getOrElse(line(Nil))
+    (trimmed, line(results))
   }
 }

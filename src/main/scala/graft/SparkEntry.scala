@@ -37,4 +37,34 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     modules.flatMap(q => q.sql.map(s => q.name -> s)).toMap
+
+  /** Runs `body` on the session Bench and Verify drive:
+    * `local[SPARK_GRAFT_CPUS]` with as many shuffle partitions, UTC, no
+    * UI, and a JVM-unique `spark.local.dir` and streaming checkpoint
+    * root under Knobs.fastTmp (tmpfs when available: the harness host
+    * intermittently throttles block-device writes; a reused checkpoint
+    * root would replay committed offsets). Both roots are deleted
+    * after the session stops. */
+  private[graft] def withDriverSession[T](tag: String)(
+      body: SparkSession => T): T = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val token = java.util.UUID.randomUUID().toString.take(8)
+    def root(kind: String) = new java.io.File(
+      streamline.util.Knobs.fastTmp, s"${kind}_${tag}_$token")
+    val (local, ckpt) = (root("local"), root("ck"))
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", local.getPath)
+      .config("spark.sql.streaming.checkpointLocation", ckpt.getPath)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try body(spark)
+    finally {
+      spark.stop()
+      Seq(local, ckpt).foreach(streamline.stream.Streams.deleteRec)
+    }
+  }
 }

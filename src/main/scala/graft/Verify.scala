@@ -1,35 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  private val runToken = java.util.UUID.randomUUID().toString.take(8)
-
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        streamline.util.Knobs.fastTmp + s"/local_verify_$runToken")
-      .config("spark.sql.streaming.checkpointLocation",
-        streamline.util.Knobs.fastTmp + s"/ck_verify_$runToken")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Optional trailing args restrict the dump to named queries (local
-    // iteration); the driver passes none and always dumps everything.
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    SparkEntry.withDriverSession("verify") { spark =>
+      new java.io.File(outDir).mkdirs()
+      // Optional trailing args restrict the dump to named queries (local
+      // iteration); the driver passes none and always dumps everything.
+      SparkEntry.queries
+        .filter { case (name, _) => only.isEmpty || only(name) }
+        .foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -47,9 +34,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    Seq(s"/ck_verify_$runToken", s"/local_verify_$runToken").foreach(d =>
-      streamline.stream.Streams.deleteRec(new java.io.File(
-        streamline.util.Knobs.fastTmp + d)))
   }
 }

@@ -267,7 +267,7 @@ object Aggregates {
       .orderBy($"step")
   }
 
-  private val aggFunnelSql = """
+  private[streamline] val aggFunnelSql = """
     WITH e AS (SELECT user_id, event_type, ts FROM events),
     s1 AS (SELECT user_id, min(ts) AS t1 FROM e
            WHERE event_type = 'signup' GROUP BY user_id),

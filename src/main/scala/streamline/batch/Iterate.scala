@@ -1235,10 +1235,6 @@ object Iterate {
     }
   }
 
-  // same fixed point as q_iter_cc: the stream's batching must not change
-  // the answer, so the oracle IS the batch oracle.
-  private val streamIterateSql = iterCcSql
-
   /** q_iter_hits — HITS hub/authority scores (Kleinberg) on the
     * 1997-03 customer→supplier bipartite purchase graph (the
     * q_iter_pagerank fixture, kept DIRECTED: customers are hubs,
@@ -1436,7 +1432,9 @@ object Iterate {
   val all: Seq[Q] = Seq(
     Q("q_iter_katz", iterKatz _, iterKatzSql),
     Q("q_iter_hits", iterHits _, iterHitsSql),
-    Q("q_stream_iterate", streamIterate _, streamIterateSql),
+    // same fixed point as q_iter_cc: the stream's batching must not
+    // change the answer, so the oracle IS the batch oracle.
+    Q("q_stream_iterate", streamIterate _, iterCcSql),
     Q("q_iter_lpa", iterLpa _, iterLpaSql),
     Q("q_iter_kcore", iterKcore _, iterKcoreSql),
     Q("q_iter_cc", iterCc _, iterCcSql),

@@ -222,7 +222,7 @@ object Joins {
       .orderBy($"user_id", $"id1", $"id2")
   }
 
-  private val joinIntervalSql = """
+  private[streamline] val joinIntervalSql = """
     WITH e AS (SELECT event_id, user_id,
                       date_trunc('microseconds', ts) AS ts FROM events)
     SELECT e1.user_id, e1.event_id AS id1, e2.event_id AS id2,

@@ -354,15 +354,6 @@ object ProtoDescriptor {
       .orderBy($"event_id")
   }
 
-  // identical fixed point as the hand-rolled nested decoder: the
-  // descriptor path must reproduce it bit for bit.
-  private val sourceProtoDescriptorSql = """
-    SELECT event_id, event_type AS prop_k,
-      CAST(json_extract_string(props, '$.k') AS BIGINT) AS prop_v,
-      CAST(3 AS BIGINT) AS n_vals,
-      user_id + (event_id % 100) + 42 AS sum_vals
-    FROM events ORDER BY event_id"""
-
   /** q_stream_proto_descriptor — the descriptor-driven decoder under
     * MICRO-BATCH execution (schema-registry consumer shape: fetch the
     * descriptor once at plan time, then decode a file stream with the
@@ -401,9 +392,11 @@ object ProtoDescriptor {
       .orderBy($"event_id")
   }
 
+  // identical fixed point as the hand-rolled nested decoder: the
+  // descriptor path must reproduce it bit for bit.
   val all: Seq[Q] = Seq(
     Q("q_source_proto_descriptor", sourceProtoDescriptor _,
-      sourceProtoDescriptorSql),
+      ProtoWire.sourceProtoNestedSql),
     Q("q_stream_proto_descriptor", streamProtoDescriptor _,
-      sourceProtoDescriptorSql))
+      ProtoWire.sourceProtoNestedSql))
 }

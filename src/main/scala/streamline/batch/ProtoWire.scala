@@ -291,7 +291,7 @@ object ProtoWire {
       .orderBy($"event_id")
   }
 
-  private val sourceProtoSql = """
+  private[streamline] val sourceProtoSql = """
     SELECT event_id, user_id, event_type, value,
       date_trunc('second', ts) AS ts_sec
     FROM events ORDER BY event_id"""
@@ -335,7 +335,7 @@ object ProtoWire {
       .orderBy($"event_id")
   }
 
-  private val sourceProtoNestedSql = """
+  private[streamline] val sourceProtoNestedSql = """
     SELECT event_id, event_type AS prop_k,
       CAST(json_extract_string(props, '$.k') AS BIGINT) AS prop_v,
       CAST(3 AS BIGINT) AS n_vals,

@@ -1043,10 +1043,6 @@ object Relational {
       .orderBy($"s_suppkey")
   }
 
-  private val sourceCorruptSql = """
-    SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-    FROM supplier ORDER BY s_suppkey"""
-
   /** q_source_binary — whole-file binary source (`format("binaryFile")`),
     * the ingest path for multimodal shards: each file arrives as one
     * row of (path, length, content) with NO parsing, the schema the
@@ -1085,7 +1081,7 @@ object Relational {
 
   val all: Seq[Q] = Seq(
     Q("q_source_binary", sourceBinary _, sourceBinarySql),
-    Q("q_source_corrupt", sourceCorrupt _, sourceCorruptSql),
+    Q("q_source_corrupt", sourceCorrupt _, sourceJsonMultilineSql),
     Q("q_scan_parquet", scanParquet _, scanParquetSql),
     Q("q_scan_prune", scanPrune _, scanPruneSql),
     Q("q_scan_nested_prune", scanNestedPrune _, scanNestedPruneSql),

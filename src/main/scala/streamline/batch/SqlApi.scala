@@ -404,24 +404,6 @@ object SqlApi {
       GROUP BY session_window(tss, '30 minutes'), user_id
       ORDER BY user_id, s_start""")
 
-  private val sqlWindowSessionSql = """
-    WITH e AS (SELECT user_id, date_trunc('second', ts) AS t, value
-               FROM events),
-    o AS (SELECT user_id, t, value,
-            CASE WHEN lag(t) OVER w IS NULL
-                   OR t - lag(t) OVER w > INTERVAL 30 MINUTE
-                 THEN 1 ELSE 0 END AS brk
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t)),
-    s AS (SELECT user_id, t, value,
-            sum(brk) OVER (PARTITION BY user_id ORDER BY t
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM o)
-    SELECT user_id, min(t) AS s_start,
-      max(t) + INTERVAL 30 MINUTE AS s_end, count(*) AS n,
-      CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_val
-    FROM s GROUP BY user_id, sid
-    ORDER BY user_id, s_start"""
-
   /** q_sql_match — MATCH_RECOGNIZE-shaped pattern matching from the
     * SQL-text entry (Flink 1.7 SQL `MATCH_RECOGNIZE (PATTERN (A+ B)
     * DEFINE …)`): Spark has no MATCH_RECOGNIZE clause, so the same
@@ -1033,7 +1015,7 @@ object SqlApi {
     Q("q_sql_tpch22", tpch22 _, tpch22Text),
     Q("q_sql_window", sqlWindow _, sqlWindowSql),
     Q("q_sql_window_hop", sqlWindowHop _, sqlWindowHopSql),
-    Q("q_sql_window_session", sqlWindowSession _, sqlWindowSessionSql),
+    Q("q_sql_window_session", sqlWindowSession _, Windows.winSessionSql),
     Q("q_sql_window_cumulate", sqlWindowCumulate _, sqlWindowCumulateSql),
     // oracle shared with q_cep_kleene: same match language by design
     Q("q_sql_match", sqlMatch _, Cep.cepKleeneSql))

@@ -300,7 +300,7 @@ object Windows {
   // Oracle: gaps-and-islands — a session break where the gap from the
   // previous event (same user) exceeds 30 min; window end = last+gap.
   // Same spelling as the streaming twin minus the watermark HAVING.
-  private val winSessionSql = """
+  private[streamline] val winSessionSql = """
     WITH e AS (SELECT user_id, date_trunc('second', ts) AS t, value
                FROM events),
     o AS (SELECT user_id, t, value,

@@ -436,7 +436,7 @@ object Dedup {
     // Build phase (one distributed agg → driver-held filter → broadcast).
     // Capacity is an UPPER BOUND, not an exact count: benchmark doc
     // count (a doc_id-column-only scan, no shingle explode) times a
-    // per-doc distinct-shingle bound (`graft.bloom.shinglesPerDoc`).
+    // per-doc distinct-shingle bound (`Knobs.bloomShinglesPerDoc`).
     // Overshooting only widens the filter (bits ∝ capacity at fixed
     // fpp); undershooting only raises fpp — either way the verify join
     // keeps the result exact. This replaces the previous exact
@@ -446,7 +446,7 @@ object Dedup {
     val nBenchDocs = Tables.documents(spark, dir)
       .where($"doc_id" % 50 === 0).count()
     val capacity = math.max(nBenchDocs, 1L) *
-      streamline.util.Knobs.bloomShinglesPerDoc(spark)
+      streamline.util.Knobs.bloomShinglesPerDoc
     val bf = bench.stat.bloomFilter("g", capacity, 0.01)
     val bfB = spark.sparkContext.broadcast(bf)
     // Apply phase: map-side prune (codegen'd broadcast-bloom probe —

@@ -169,11 +169,6 @@ object OffsetReplay {
       .orderBy($"event_id")
   }
 
-  private val sourceOffsetReplaySql = """
-    SELECT event_id, user_id, event_type, value,
-      date_trunc('second', ts) AS ts_sec
-    FROM events ORDER BY event_id"""
-
   // ---- consumer-group rebalance (r12 verdict item 4) ----
   //
   // The second half of the Kafka contract the connector would provide:
@@ -275,11 +270,11 @@ object OffsetReplay {
       .orderBy($"event_id")
   }
 
-  // same fixed point as the replay witness: the group topology must not
-  // change the answer, so the oracle IS the batch oracle.
-  private val sourceRebalanceSql = sourceOffsetReplaySql
-
   val all: Seq[Q] = Seq(
-    Q("q_source_offset_replay", sourceOffsetReplay _, sourceOffsetReplaySql),
-    Q("q_source_rebalance", sourceRebalance _, sourceRebalanceSql))
+    // Replay and group topology must not change the answer: the oracle
+    // IS the batch decoder's.
+    Q("q_source_offset_replay", sourceOffsetReplay _,
+      streamline.batch.ProtoWire.sourceProtoSql),
+    Q("q_source_rebalance", sourceRebalance _,
+      streamline.batch.ProtoWire.sourceProtoSql))
 }

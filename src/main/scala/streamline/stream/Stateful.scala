@@ -5,7 +5,8 @@ import scala.math.BigDecimal.RoundingMode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  Trigger}
 import streamline.Q
 
 /** §2.9 keyed state + timers surface — the Flink KeyedProcessFunction /
@@ -75,34 +76,39 @@ object Stateful {
     * clears it — the simulation, not a hardcoded answer. */
   private def streamLate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    lateCounts(spark, "10 minutes").orderBy($"w_start")
+  }
+
+  /** The two-batch late-data scenario of q_stream_late and
+    * q_stream_late_side: a fresh MemoryStream fed three on-time events,
+    * then one event at 09:30, behind the watermark unless `delay`
+    * allows 2h20m of lateness. Returns the final count per 1-hour
+    * window (max over update-mode re-emissions). */
+  private def lateCounts(spark: SparkSession, delay: String): DataFrame = {
+    import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, Long)]
-    val name = s"late_${System.identityHashCode(input)}"
     val agg = input.toDF().toDF("ts", "v")
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", delay)
       .groupBy(window($"ts", "1 hour"))
       .agg(count(lit(1)).as("n"))
       .select($"window.start".cast("timestamp_ntz").as("w_start"), $"n")
-    // Few-row witness: the knob's state-store partition count, not the
-    // session default (round 1 paid 14 s of per-partition fixed cost
-    // for 4 rows).
-    Streams.withStreamConfs(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      // Batch 1: three on-time events; advances the watermark to 11:50.
-      input.addData((ts("2024-03-01 10:15:00"), 1L),
-        (ts("2024-03-01 11:10:00"), 2L), (ts("2024-03-01 12:00:00"), 3L))
-      q.processAllAvailable()
-      // Batch 2: one event at 09:30 — 2h20m behind the watermark → dropped.
-      input.addData((ts("2024-03-01 09:30:00"), 9L))
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name)
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    // The source is fed after start, so the default trigger, not
+    // AvailableNow (which would snapshot an empty source and stop).
+    Streams.runToTable(spark, "late", "update", agg,
+      trigger = Trigger.ProcessingTime(0L), await = { q =>
+        // Batch 1: three on-time events; advances a 10-minute
+        // watermark to 11:50.
+        input.addData((ts("2024-03-01 10:15:00"), 1L),
+          (ts("2024-03-01 11:10:00"), 2L), (ts("2024-03-01 12:00:00"), 3L))
+        q.processAllAvailable()
+        // Batch 2: one event at 09:30 — 2h20m behind that watermark.
+        input.addData((ts("2024-03-01 09:30:00"), 9L))
+        q.processAllAvailable()
+      })
       .groupBy($"w_start").agg(max($"n").as("n"))
-      .orderBy($"w_start")
   }
 
   private val streamLateSql = """
@@ -276,35 +282,8 @@ object Stateful {
     * watermark delay, differenced per window. */
   private def streamLateSide(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long)]
-    val tag = System.identityHashCode(input)
-    def windowed(delay: String): org.apache.spark.sql.DataFrame =
-      input.toDF().toDF("ts", "v")
-        .withWatermark("ts", delay)
-        .groupBy(window($"ts", "1 hour"))
-        .agg(count(lit(1)).as("n"))
-        .select($"window.start".cast("timestamp_ntz").as("w_start"), $"n")
-    Streams.withStreamConfs(spark) {
-      val strict = windowed("10 minutes").writeStream.format("memory")
-        .queryName(s"late_strict_$tag").outputMode("update").start()
-      val lenient = windowed("1 day").writeStream.format("memory")
-        .queryName(s"late_lenient_$tag").outputMode("update").start()
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      input.addData((ts("2024-03-01 10:15:00"), 1L),
-        (ts("2024-03-01 11:10:00"), 2L), (ts("2024-03-01 12:00:00"), 3L))
-      strict.processAllAvailable(); lenient.processAllAvailable()
-      // 09:30 arrives 2h20m behind the strict watermark: dropped there,
-      // still counted by the lenient pass.
-      input.addData((ts("2024-03-01 09:30:00"), 9L))
-      strict.processAllAvailable(); lenient.processAllAvailable()
-      strict.stop(); lenient.stop()
-    }
-    def finalCounts(name: String) = spark.table(name)
-      .groupBy($"w_start").agg(max($"n").as("n"))
-    finalCounts(s"late_lenient_$tag").as("l")
-      .join(finalCounts(s"late_strict_$tag").as("s"),
+    lateCounts(spark, "1 day").as("l")
+      .join(lateCounts(spark, "10 minutes").as("s"),
         col("l.w_start") === col("s.w_start"), "left")
       .select(col("l.w_start").as("w_start"),
         (col("l.n") - coalesce(col("s.n"), lit(0L))).as("n_late"))
@@ -445,27 +424,6 @@ object Stateful {
       .reduce(_ unionByName _)
       .orderBy($"step")
   }
-
-  private val streamFunnelSql = """
-    WITH e AS (SELECT user_id, event_type, ts FROM events),
-    s1 AS (SELECT user_id, min(ts) AS t1 FROM e
-           WHERE event_type = 'signup' GROUP BY user_id),
-    s2 AS (SELECT e.user_id, min(ts) AS t2 FROM e JOIN s1 USING (user_id)
-           WHERE event_type = 'view' AND ts > t1
-             AND ts <= t1 + INTERVAL 24 HOURS GROUP BY e.user_id),
-    s3 AS (SELECT e.user_id, min(ts) AS t3 FROM e JOIN s2 USING (user_id)
-           WHERE event_type = 'click' AND ts > t2
-             AND ts <= t2 + INTERVAL 24 HOURS GROUP BY e.user_id),
-    s4 AS (SELECT e.user_id, min(ts) AS t4 FROM e JOIN s3 USING (user_id)
-           WHERE event_type = 'purchase' AND ts > t3
-             AND ts <= t3 + INTERVAL 24 HOURS GROUP BY e.user_id)
-    SELECT * FROM (
-      SELECT 1 AS step, 'signup' AS step_type,
-        (SELECT count(*) FROM s1) AS n_users
-      UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
-      UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
-      UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4))
-    ORDER BY step"""
 
   /** q_stream_count_window — Flink `DataStream.countWindow(5)`: a window
     * type Spark has no built-in for, composed from keyed state
@@ -1117,7 +1075,24 @@ object Stateful {
           org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
           OutputMode.Update())
         .toDF()
-      val collected = Streams.runToTableCaughtUp(spark, "tws_ttl", "update", out)
+      // A stateful operator in TimeMode.ProcessingTime (TTL state,
+      // processing-time timers) reports `shouldRunAnotherBatch=true` on
+      // every batch so expiry can keep advancing, and AvailableNow
+      // obliges forever (~5 empty micro-batches/sec, 784 snapshot zips
+      // before the kill). `processAllAvailable` is no escape: under the
+      // continuous batch loop its `noNewData` signal is racy (observed
+      // both returning and hanging). Under AvailableNow every batch
+      // takes files from the start-time snapshot while any remain, so
+      // the FIRST zero-input batch after batch 0 proves the backlog is
+      // done; awaitTermination(250) doubles as the poll interval.
+      val collected = Streams.runToTable(spark, "tws_ttl", "update", out,
+        await = { q =>
+          var drained = false
+          while (!drained && !q.awaitTermination(250)) {
+            val p = q.lastProgress
+            drained = p != null && p.batchId > 0 && p.numInputRows == 0
+          }
+        })
       val w = Window.partitionBy($"user_id").orderBy($"n_events".desc)
       collected
         .withColumn("rn", row_number().over(w))
@@ -1243,7 +1218,8 @@ object Stateful {
     Q("q_stream_zscore", streamZscore _, streamZscoreSql),
     Q("q_stream_attrib", streamAttrib _, streamAttribSql),
     Q("q_stream_count_window", streamCountWindow _, streamCountWindowSql),
-    Q("q_stream_funnel", streamFunnel _, streamFunnelSql),
+    Q("q_stream_funnel", streamFunnel _,
+      streamline.batch.Aggregates.aggFunnelSql),
     Q("q_stream_timeout", streamTimeout _, streamTimeoutSql),
     Q("q_join_temporal", joinTemporal _, joinTemporalSql),
     Q("q_stream_late", streamLate _, streamLateSql),

@@ -102,9 +102,11 @@ object Streams {
       checksumKey -> "false") ++ extra)(body)
 
   /** The one finite-stream lifecycle: runs `writer` to completion under
-    * `Trigger.AvailableNow` inside [[withStreamConfs]] (plus `confs`)
-    * and returns the query's progress. `await` is the wait between
-    * start and cleanup; a query still active after it is stopped.
+    * `trigger` (`Trigger.AvailableNow` unless the witness needs a
+    * schedule or feeds its source after start) inside
+    * [[withStreamConfs]] (plus `confs`) and returns the query's
+    * progress. `await` is the wait between start and cleanup; a query
+    * still active after it is stopped.
     *
     * Checkpoint: by default a JVM-unique directory on the fast
     * ephemeral root (Knobs.fastTmp: every micro-batch fsyncs its
@@ -118,13 +120,14 @@ object Streams {
   private[streamline] def drain[T](spark: SparkSession,
       writer: DataStreamWriter[T], confs: Seq[(String, String)] = Nil,
       checkpoint: Option[String] = None,
-      await: StreamingQuery => Unit = _.awaitTermination())
+      await: StreamingQuery => Unit = _.awaitTermination(),
+      trigger: Trigger = Trigger.AvailableNow())
       : Seq[StreamingQueryProgress] = {
     val ckpt = checkpoint.getOrElse(
       s"${streamline.util.Knobs.fastTmp}/ck_${jvmToken}_${seq.incrementAndGet()}")
     try withStreamConfs(spark, confs) {
       val q = writer.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+        .trigger(trigger).start()
       try await(q) finally if (q.isActive) q.stop()
       q.recentProgress.toSeq
     } finally if (checkpoint.isEmpty) deleteRec(new java.io.File(ckpt))
@@ -151,45 +154,20 @@ object Streams {
       "stream fed no batches (stale checkpoint?)"))
   }
 
-  /** Run a streaming pipeline to completion into a memory sink; return
-    * the sink contents as a batch DataFrame. */
+  /** The one memory-sink run: drains `stream` into a memory sink
+    * (`trigger` and `await` as in [[drain]]) and returns the sink
+    * contents as a batch DataFrame. The sink's temp view is dropped
+    * before returning — the DataFrame keeps the sink's rows, and a
+    * registered view would pin them for the session's lifetime. */
   def runToTable(spark: SparkSession, base: String, mode: String,
-                 stream: DataFrame): DataFrame = {
+      stream: DataFrame, trigger: Trigger = Trigger.AvailableNow(),
+      await: StreamingQuery => Unit = _.awaitTermination()): DataFrame = {
     val name = s"${base}_${seq.incrementAndGet()}"
-    drain(spark, stream.writeStream.format("memory").queryName(name)
-      .outputMode(mode))
-    spark.table(name)
-  }
-
-  /** Like runToTable, but for queries that NEVER terminate under
-    * Trigger.AvailableNow: a stateful operator in
-    * TimeMode.ProcessingTime (TTL state, processing-time timers)
-    * reports `shouldRunAnotherBatch=true` on every batch so expiry can
-    * keep advancing, and the AvailableNow executor obliges — observed
-    * as ~5 empty micro-batches/sec forever on q_stream_tws_ttl (784
-    * snapshot zips before the kill). `processAllAvailable` is no
-    * escape either: under the continuous batch loop its `noNewData`
-    * signal is racy (observed both returning and hanging across two
-    * identical runs). Production runs of such queries are continuous
-    * by design; a finite witness instead detects "sources drained"
-    * from the progress stream — under AvailableNow every batch takes
-    * files from the start-time snapshot while any remain, so the FIRST
-    * zero-input batch after batch 0 proves the backlog is done — and
-    * stops the query itself. */
-  def runToTableCaughtUp(spark: SparkSession, base: String, mode: String,
-                         stream: DataFrame): DataFrame = {
-    val name = s"${base}_${seq.incrementAndGet()}"
-    drain(spark, stream.writeStream.format("memory").queryName(name)
-      .outputMode(mode), await = { q =>
-      var drained = false
-      // awaitTermination(250) doubles as the poll interval and the
-      // exit path if the engine does terminate on its own.
-      while (!drained && !q.awaitTermination(250)) {
-        val p = q.lastProgress
-        drained = p != null && p.batchId > 0 && p.numInputRows == 0
-      }
-    })
-    spark.table(name)
+    try {
+      drain(spark, stream.writeStream.format("memory").queryName(name)
+        .outputMode(mode), await = await, trigger = trigger)
+      spark.table(name)
+    } finally { spark.catalog.dropTempView(name): Unit }
   }
 
   def deleteRec(f: java.io.File): Unit = {
@@ -941,19 +919,6 @@ object Streams {
             WHERE event_id % 2 = 1
               AND ts <= (SELECT w FROM wm)) AS n_dropped"""
 
-  // Same closed-window bound as q_stream_tumble: the restart restores
-  // the watermark, so the final one is max(all ts) − 10 min exactly as
-  // a single uninterrupted run would produce.
-  private val streamRecoverySql = """
-    WITH wm AS (SELECT date_trunc('millisecond', max(ts))
-                  - INTERVAL 10 MINUTE AS w FROM events)
-    SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS w_start, event_type,
-      CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_val,
-      count(*) AS n
-    FROM events GROUP BY 1, 2
-    HAVING w_start + INTERVAL 1 DAY <= (SELECT w FROM wm)
-    ORDER BY w_start, event_type"""
-
   /** q_stream_union — DataStream.union: two independently-constructed
     * unbounded sources (here: the click substream and the error
     * substream, each its own file-source stream) unioned into one
@@ -1554,17 +1519,6 @@ object Streams {
       .orderBy($"user_id", $"id1", $"id2")
   }
 
-  private val joinStreamStreamSql = """
-    WITH e AS (SELECT event_id, user_id,
-                      date_trunc('microseconds', ts) AS ts FROM events)
-    SELECT e1.user_id, e1.event_id AS id1, e2.event_id AS id2,
-           date_trunc('second', e1.ts) AS t1,
-           date_trunc('second', e2.ts) AS t2
-    FROM e e1 JOIN e e2
-      ON e1.user_id = e2.user_id AND e1.event_id < e2.event_id
-     AND e2.ts >= e1.ts AND e2.ts <= e1.ts + INTERVAL 10 MINUTE
-    ORDER BY e1.user_id, id1, id2"""
-
   /** q_join_stream_stream_semi — stream ⋈ stream LEFT SEMI interval
     * join: clicks that ARE followed by a purchase within 10 minutes,
     * emitted with left-side columns only (the streaming EXISTS). The
@@ -1913,9 +1867,6 @@ object Streams {
       .orderBy($"event_id")
   }
 
-  private val sinkForeachSql = """
-    SELECT event_id, event_type, value FROM events ORDER BY event_id"""
-
   /** q_sink_stream_files — the streaming FILE sink (`writeStream
     * .format("parquet")`): exactly-once file output via the
     * `_spark_metadata` commit log, the production durable sink (vs the
@@ -2212,19 +2163,12 @@ object Streams {
       .withColumn("p_ts", current_timestamp())
       .groupBy(window($"p_ts", "10 seconds"), $"event_type")
       .agg(count(lit(1)).as("n"))
-    val name = s"proctime_${seq.incrementAndGet()}"
-    withStreamConfs(spark) {
-      // Update mode: proc-time windows have no watermark to close them,
-      // so append mode would emit nothing — same as Flink, where a
-      // processing-time window fires on the processing clock alone.
-      val q = windowed.writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.ProcessingTime("500 milliseconds"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name)
+    // Update mode: proc-time windows have no watermark to close them,
+    // so append mode would emit nothing — same as Flink, where a
+    // processing-time window fires on the processing clock alone.
+    runToTable(spark, "proctime", "update", windowed,
+      trigger = Trigger.ProcessingTime("500 milliseconds"),
+      await = _.processAllAvailable())
       .groupBy($"window", $"event_type").agg(max($"n").as("n"))
       .groupBy($"event_type").agg(sum($"n").as("n_events"))
       .orderBy($"event_type")
@@ -2331,8 +2275,11 @@ object Streams {
     Q("q_stream_tumble", streamTumble _, streamTumbleSql),
     Q("q_stream_ohlc", streamOhlc _, streamOhlcSql),
     Q("q_stream_drift", streamDrift _, streamDriftSql),
-    Q("q_stream_recovery", streamRecovery _, streamRecoverySql),
-    Q("q_stream_rocksdb", streamRocksdb _, streamRecoverySql),
+    // Same closed-window bound as q_stream_tumble: the restart restores
+    // the watermark, so the final one is max(all ts) − 10 min exactly as
+    // a single uninterrupted run would produce.
+    Q("q_stream_recovery", streamRecovery _, streamTumbleSql),
+    Q("q_stream_rocksdb", streamRocksdb _, streamTumbleSql),
     Q("q_stream_rescale", streamRescale _, streamRescaleSql),
     Q("q_stream_state_rewrite", streamStateRewrite _, streamStateRewriteSql),
     Q("q_stream_state_evolve", streamStateEvolve _, streamStateEvolveSql),
@@ -2347,13 +2294,14 @@ object Streams {
     Q("q_sink_stream_files", sinkStreamFiles _, sinkStreamFilesSql),
     Q("q_stream_listener", streamListener _, streamListenerSql),
     Q("q_sink_foreachbatch", sinkForeachBatch _, sinkForeachBatchSql),
-    Q("q_sink_foreach", sinkForeach _, sinkForeachSql),
+    Q("q_sink_foreach", sinkForeach _, sinkForeachBatchSql),
     Q("q_sink_upsert", sinkUpsert _, sinkUpsertSql),
     Q("q_sink_cdc", sinkCdc _, sinkCdcSql),
     Q("q_stream_distinct", streamDistinct _, streamDistinctSql),
     Q("q_stream_backpressure", streamBackpressure _, streamBackpressureSql),
     Q("q_stream_join_agg", streamJoinAgg _, streamJoinAggSql),
-    Q("q_join_stream_stream", joinStreamStream _, joinStreamStreamSql),
+    Q("q_join_stream_stream", joinStreamStream _,
+      streamline.batch.Joins.joinIntervalSql),
     Q("q_join_stream_stream_semi", joinStreamStreamSemi _,
       joinStreamStreamSemiSql),
     Q("q_join_stream_window", joinStreamWindow _, joinStreamWindowSql),

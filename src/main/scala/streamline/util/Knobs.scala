@@ -112,8 +112,7 @@ object Knobs {
     * corpus' p99 document length in words; too high only wastes filter
     * bits (~9.6 bits/slot at 1% fpp), too low only raises fpp — the
     * exact verify join keeps correctness either way. */
-  def bloomShinglesPerDoc(spark: SparkSession): Long =
-    spark.conf.get("graft.bloom.shinglesPerDoc", "1024").toLong
+  val bloomShinglesPerDoc: Long = 1024L
 
   /** Fast ephemeral root for single-node harness I/O — shuffle local
     * dirs and streaming checkpoints. The harness host intermittently
@@ -126,10 +125,9 @@ object Knobs {
     * (`graft.fastTmp` = explicit override; unset ⇒ /dev/shm when
     * writable, else java.io.tmpdir). */
   /** tmpfs is RAM: scratch placed there competes with the JVM heap and
-    * the OS page cache. The auto-pick therefore requires this much
-    * usable space on /dev/shm (default 16 GiB — several times the
-    * harness's worst observed scratch footprint) and falls back to
-    * java.io.tmpdir below it. Resolved ONCE per JVM so a run whose
+    * the OS page cache. The auto-pick therefore requires
+    * [[fastTmpMinFreeBytes]] of usable space on /dev/shm and falls
+    * back to java.io.tmpdir below it. Resolved ONCE per JVM so a run whose
     * scratch grows never splits across two roots mid-flight; an
     * explicit `graft.fastTmp` is honored unconditionally. Durability
     * note: tmpfs does not survive a host restart — the recovery
@@ -143,12 +141,13 @@ object Knobs {
       Some(shm.getPath + "/graft")
     else None
 
-  private lazy val autoTmp: String = {
-    val minFree = sys.props.get("graft.fastTmp.minFreeBytes")
-      .map(_.toLong).getOrElse(16L << 30)
-    pickFastTmp(new java.io.File("/dev/shm"), minFree)
+  /** 16 GiB: several times the harness's worst observed scratch
+    * footprint, so tmpfs scratch never crowds out the heap. */
+  private val fastTmpMinFreeBytes: Long = 16L << 30
+
+  private lazy val autoTmp: String =
+    pickFastTmp(new java.io.File("/dev/shm"), fastTmpMinFreeBytes)
       .getOrElse(sys.props("java.io.tmpdir"))
-  }
 
   def fastTmp: String = {
     val pick = sys.props.get("graft.fastTmp").getOrElse(autoTmp)

@@ -78,19 +78,24 @@ class SurveyCoverageSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
   }
 
-  /** Second drift axis (r14 judge): a query declared without a
-    * `bench_baseline.json` min is invisible to the bench history gate,
-    * so a perf regression in it can never trip. Every declared key
-    * must seed its min (from a quiet full run) in the same change. */
-  test("every declared query key has a bench_baseline.json min") {
-    val text = java.nio.file.Files.readString(
-      java.nio.file.Path.of("bench_baseline.json"))
-    // Keys in the JSON object are unique and quoted; substring match on
-    // the quoted key is exact because query names are never prefixes of
-    // each other inside quotes.
-    val missing =
-      SparkEntry.queries.keySet.filterNot(k => text.contains("\"" + k + "\""))
-    assert(missing.isEmpty,
-      s"declared but no bench min seeded: ${missing.toSeq.sorted}")
+  /** One constant per oracle group: queries that share an oracle share
+    * its constant, so a fix to one cannot miss the other. Identical
+    * literals are interned by the JVM, so a runtime `eq` test cannot
+    * see a copy; the source is scanned instead. */
+  test("no two oracle constants in src/main/scala have the same text") {
+    import scala.jdk.CollectionConverters._
+    val sqlVal = "(?s)val\\s+(\\w+Sql)\\s*=\\s*\"\"\"(.*?)\"\"\"".r
+    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+    val decls = try files.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        sqlVal.findAllMatchIn(java.nio.file.Files.readString(p)).map(m =>
+          m.group(2).trim.split("\\s+").mkString(" ") ->
+            s"${p.getFileName}:${m.group(1)}")
+      } finally files.close()
+    assert(decls.size > 300, s"scan found only ${decls.size} oracle constants")
+    val copies = decls.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).sorted.mkString(" = ")).toSeq.sorted
+    assert(copies.isEmpty, s"oracle text declared twice: ${copies.mkString("; ")}")
   }
 }

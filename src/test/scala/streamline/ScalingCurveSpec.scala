@@ -16,7 +16,7 @@ class ScalingCurveSpec extends SparkSuite {
 
   private val scales = ScaleFixtures.scales
 
-  // heaviest BATCH queries (bench_baseline.json order) whose inputs
+  // heaviest BATCH queries whose inputs
   // are the blown-up tables; all pure compute (no scratch caching)
   private val heavyQueries = Seq(
     "q_llm_dedup_cluster", "q_llm_dedup_jaccard", "q_llm_dedup_span",

@@ -42,7 +42,7 @@ class TwsTtlSpec extends SparkSuite {
         .outputMode("update").start()
       // processAllAvailable is racy while the ProcessingTime-mode
       // operator spins empty expiry batches (see
-      // Streams.runToTableCaughtUp); poll the sink row count instead.
+      // Stateful.streamTwsTtl); poll the sink row count instead.
       def awaitRows(n: Int): Unit = {
         val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
         while (spark.table(name).count() < n) {
