@@ -1,40 +1,39 @@
 package streamline.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import streamline.Q
 import streamline.batch.Cep
-import streamline.batch.Cep.{CepEv, CepMatch, NfaSt}
-import streamline.util.Det.tsSec
+import streamline.batch.Cep.{CepEv, Pattern}
 
 /** §2.15 CEP on an unbounded stream — the keyed-state NFA form of the
   * reference lineage's CEP library (upstream `flink-libraries/flink-cep/`,
-  * `NFAOperator` over keyed state): the batch Kleene scan (batch/Cep.scala)
-  * re-expressed as an incremental operator whose per-key state is the NFA
-  * register plus only the not-yet-orderable suffix of events.
+  * `NFAOperator` over keyed state): each batch pattern of batch/Cep.scala
+  * run as an incremental operator whose per-key state is the pattern's
+  * state plus only the not-yet-orderable suffix of events.
   *
   * Out-of-order handling is Flink CEP's event-time contract: buffer
   * arrivals until the watermark passes them, then feed them to the
-  * automaton in (ts, id) order. The watermark is therefore also the state
-  * bound — the buffer holds at most one watermark-delay of events per key,
-  * and the NFA register itself is O(1). That pair of bounds is what lets
-  * the operator run forever at 100 TB: state is (delay-window events +
-  * constant) per key, evicted by pure watermark progress.
+  * pattern in (ts, id) order through the batch scan's fold. The watermark
+  * is therefore also the state bound — the buffer holds at most one
+  * watermark-delay of events per key, and every armed start expires at
+  * the watermark once its `within` window closed. The exception is
+  * Kleene's register, one constant-size value per key, which stays until
+  * the key's next event. So the operator can run forever at 100 TB:
+  * state is (delay-window events + window-bounded starts) per key,
+  * evicted by pure watermark progress.
   *
-  * Same automaton, same match language as `q_cep_kleene` (shared
-  * `Cep.stepNfa`); on finite input the result is the batch result
-  * restricted to matches whose purchase the final watermark has sealed —
-  * which is the oracle below.
+  * On finite input a twin's result is its batch query's result
+  * restricted to the matches the final watermark sealed — which is each
+  * oracle below. The split into micro-batches does not change it.
   */
 object CepStream {
 
-  private val withinUs = 10L * 60 * 1000 * 1000
-  private val delayMs = 10L * 60 * 1000
-
-  /** Buffered suffix + NFA register. The buffer only ever holds events
-    * strictly above the watermark at last invocation. */
-  case class CepBuf(buf: List[CepEv], n: Long, firstId: Long, firstTs: Long)
+  /** Per-key operator state: the unsealed buffer (events strictly above
+    * the watermark at the last invocation) plus the pattern's state. */
+  case class CepState[S](buf: Vector[CepEv], st: S)
 
   /** Stream row: keeps the watermarked `ts` column itself (the analyzer
     * requires the event-time column to reach the stateful operator for
@@ -45,78 +44,68 @@ object CepStream {
       math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L)
   }
 
-  /** Per-key co-process: merge the buffered suffix with this batch's
-    * arrivals, split at the current watermark, feed the sealed prefix to
-    * the NFA in (ts, id) order, and retain the unsealed suffix. A timer
-    * just above the earliest buffered event forces a drain pass when the
-    * watermark advances past it with no new data for the key (Spark fires
-    * event-time timers on `timer < watermark`;
-    * FlatMapGroupsWithStateExec.processTimedOutState). */
-  private[streamline] def updateCepStream(uid: Long, rows: Iterator[CepEv],
-      state: GroupState[CepBuf]): Iterator[CepMatch] = {
-    val prev = state.getOption.getOrElse(CepBuf(Nil, 0L, 0L, 0L))
+  /** The streaming operator of `p`, per key: merge the buffered suffix
+    * with this batch's arrivals, feed the sealed prefix (ts ≤ watermark)
+    * through the pattern's fold in (ts, id) order, then expire at the
+    * watermark — every event fed later has ts above it. The state is
+    * removed once nothing is buffered or held. Otherwise a timer just
+    * above min(buffer head, earliest expiry) forces a pass when the
+    * watermark passes it with no new data for the key (Spark fires
+    * event-time timers on `timer < watermark`,
+    * FlatMapGroupsWithStateExec.processTimedOutState, and rejects timers
+    * at or below the watermark). */
+  private[streamline] def update[S, O](p: Pattern[S, O])(uid: Long,
+      rows: Iterator[CepEv], state: GroupState[CepState[S]]): Iterator[O] = {
+    val prev = state.getOption.getOrElse(CepState(Vector.empty, p.empty))
     // No watermark in a unit-test harness ⇒ 0: everything stays buffered.
     val wmMs = try state.getCurrentWatermarkMs()
     catch { case _: UnsupportedOperationException => 0L }
     val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var st = NfaSt(prev.n, prev.firstId, prev.firstTs)
-    val out = ready.flatMap { e =>
-      val (st2, m) = Cep.stepNfa(st, e, "click", "purchase", withinUs)
-      st = st2
-      m
+    val (ready, future) = (prev.buf ++ rows)
+      .sortBy(e => (e.ts_us, e.event_id)).partition(_.ts_us <= wmUs)
+    val out = Vector.newBuilder[O]
+    val fed = ready.foldLeft(prev.st) { (s, e) =>
+      val (next, o) = p.feed(s, e)
+      out ++= o
+      next
     }
-    // A buffered-out register with an open run is prunable once the
-    // watermark passes first_ts + within: no sealed purchase can ever
-    // complete it (any later event is > wm > first+within), so holding
-    // it would contradict the documented pure-watermark state bound —
-    // the same partial-match pruning Flink CEP does when `within`
-    // expires. (A post-prune click starts a fresh anchor; the pruned
-    // run could never have matched anything anyway.)
-    val runDead = st.n > 0L && wmUs > st.firstTs + withinUs
-    if (future.isEmpty && (st.n == 0L || runDead)) state.remove()
+    val (st, expired) = p.expire(fed, uid, wmUs)
+    out ++= expired
+    if (future.isEmpty && st == p.empty) state.remove()
     else {
-      state.update(CepBuf(future, st.n, st.firstId, st.firstTs))
-      // Timers fire on strict <, so the earliest valid timer is
-      // floor_ms(ts)+1 — clamped above the current watermark (Spark
-      // rejects timers at or below it). With a non-empty buffer, fire
-      // once the watermark passes the earliest buffered event; with
-      // only an open register, fire at its `within` expiry so the dead
-      // run is pruned by pure watermark progress even if the key never
-      // sees another event.
-      val nextUs = future.headOption.map(_.ts_us)
-        .getOrElse(st.firstTs + withinUs)
-      state.setTimeoutTimestamp(math.max(nextUs / 1000L + 1L, wmMs + 1L))
+      state.update(CepState(future, st))
+      (future.headOption.map(_.ts_us) ++ p.nextExpiry(st)).minOption
+        .foreach(us => state.setTimeoutTimestamp(
+          math.max(us / 1000L + 1L, wmMs + 1L)))
     }
-    out.iterator
+    out.result().iterator
   }
 
-  /** q_stream_cep — `click+ purchase within 10 min` per user on the
-    * unbounded event stream. */
-  private def streamCep(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[CepBuf]) =>
-          updateCepStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep", "append", matches)
-      .select($"user_id", $"n_clicks", $"first_click_id", $"purchase_id",
-        tsSec(timestamp_micros($"first_ts_us")).as("first_click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"purchase_id")
-  }
+  /** The q_stream_cep* twin of `p`'s batch query: the event stream under a
+    * 10-minute watermark, keyed by user through [[update]], drained into
+    * a memory sink and projected as the batch query is. */
+  private def twin[S: TypeTag, O <: Product : TypeTag](name: String,
+      p: Pattern[S, O], sql: String): Q =
+    Q(name, (spark: SparkSession, dir: String) => {
+      import spark.implicits._
+      val matches = Streams.eventsStream(spark, dir)
+        .withWatermark("ts", "10 minutes")
+        .select($"user_id", $"event_id", $"event_type", $"ts")
+        .as[CepRow]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append,
+          GroupStateTimeout.EventTimeTimeout) {
+          (uid: Long, rows: Iterator[CepRow], state: GroupState[CepState[S]]) =>
+            update(p)(uid, rows.map(_.toEv), state)
+        }
+        .toDF()
+      p.project(Streams.runToTable(spark, name.stripPrefix("q_stream_"),
+        "append", matches))
+    }, sql)
 
   /** Oracle: the batch Kleene result (gaps-and-islands spelling, same as
     * q_cep_kleene) restricted to purchases the final watermark sealed —
-    * the streaming operator only feeds the NFA events at or below the
+    * the streaming operator only feeds the pattern events at or below the
     * watermark, and a match is emitted on its purchase event. */
   private val streamCepSql = """
     WITH e AS (SELECT user_id, event_id, event_type,
@@ -147,79 +136,6 @@ object CepStream {
       AND p.ts <= (SELECT w FROM wm)
     ORDER BY user_id, purchase_id"""
 
-  // ---------------------------------------------------------------
-  // Relaxed contiguity on the stream: `click followedBy purchase
-  // within 10 min` (batch twin q_cep_followedby, batch/Cep.scala).
-  // State per key = the unsealed event suffix PLUS the armed-clicks
-  // buffer — both watermark-bounded: an armed click either matches
-  // the next sealed purchase or is pruned once the watermark passes
-  // its `within` expiry, so the operator never holds more than one
-  // delay-plus-window of events per key on an unbounded stream.
-  // ---------------------------------------------------------------
-
-  /** Unsealed suffix + armed (click_id, click_ts_us) starts. */
-  case class FbBuf(buf: List[CepEv], pending: List[(Long, Long)])
-
-  private[streamline] def updateFollowedByStream(uid: Long,
-      rows: Iterator[CepEv],
-      state: GroupState[FbBuf]): Iterator[Cep.CepRel] = {
-    val prev = state.getOption.getOrElse(FbBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var pending = prev.pending
-    val out = ready.flatMap { e =>
-      // expired starts can never match a later (sealed, ts-ordered) b
-      pending = pending.dropWhile(_._2 < e.ts_us - withinUs)
-      if (e.event_type == "click") {
-        pending = pending :+ (e.event_id, e.ts_us); Nil
-      } else if (e.event_type == "purchase") {
-        val matched = pending.map { case (id, ts) =>
-          Cep.CepRel(e.user_id, id, e.event_id, ts, e.ts_us)
-        }
-        pending = Nil
-        matched
-      } else Nil
-    }
-    // watermark-prune: any future-fed event has ts > wm, so a start
-    // with expiry below the watermark is dead regardless of data
-    pending = pending.dropWhile(_._2 + withinUs < wmUs)
-    if (future.isEmpty && pending.isEmpty) state.remove()
-    else {
-      state.update(FbBuf(future, pending))
-      val nextUs = future.headOption.map(_.ts_us)
-        .getOrElse(pending.head._2 + withinUs)
-      state.setTimeoutTimestamp(math.max(nextUs / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  /** q_stream_cep_followedby — the relaxed-contiguity pattern on the
-    * unbounded stream; on finite input = the batch q_cep_followedby
-    * result restricted to purchases the final watermark sealed. */
-  private def streamCepFollowedBy(spark: SparkSession,
-                                  dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[FbBuf]) =>
-          updateFollowedByStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep_fb", "append", matches)
-      .select($"user_id", $"click_id", $"purchase_id",
-        tsSec(timestamp_micros($"click_ts_us")).as("click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"click_id")
-  }
-
   private val streamCepFollowedBySql = """
     WITH e AS (SELECT user_id, event_id, event_type,
                  date_trunc('microseconds', ts) AS ts FROM events),
@@ -244,67 +160,6 @@ object CepStream {
     GROUP BY c.user_id, c.click_id, c.cts
     ORDER BY user_id, click_id"""
 
-  /** followedByAny on the stream: identical sealed-prefix machinery,
-    * but a sealed purchase emits every armed in-window click WITHOUT
-    * disarming — each start keeps matching later sealed purchases
-    * until the watermark passes its `within` expiry. State stays
-    * window-bounded (a start lives exactly one window), so all-matches
-    * costs output, not state. */
-  private[streamline] def updateFollowedByAnyStream(uid: Long,
-      rows: Iterator[CepEv],
-      state: GroupState[FbBuf]): Iterator[Cep.CepRel] = {
-    val prev = state.getOption.getOrElse(FbBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var pending = prev.pending
-    val out = ready.flatMap { e =>
-      pending = pending.dropWhile(_._2 < e.ts_us - withinUs)
-      if (e.event_type == "click") {
-        pending = pending :+ (e.event_id, e.ts_us); Nil
-      } else if (e.event_type == "purchase") {
-        pending.map { case (id, ts) =>
-          Cep.CepRel(e.user_id, id, e.event_id, ts, e.ts_us)
-        } // armed starts stay — all-matches semantics
-      } else Nil
-    }
-    pending = pending.dropWhile(_._2 + withinUs < wmUs)
-    if (future.isEmpty && pending.isEmpty) state.remove()
-    else {
-      state.update(FbBuf(future, pending))
-      val nextUs = future.headOption.map(_.ts_us)
-        .getOrElse(pending.head._2 + withinUs)
-      state.setTimeoutTimestamp(math.max(nextUs / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  /** q_stream_cep_followedby_any — all-matches relaxed contiguity on
-    * the unbounded stream; on finite input = the batch
-    * q_cep_followedby_any result restricted to sealed purchases. */
-  private def streamCepFollowedByAny(spark: SparkSession,
-                                     dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[FbBuf]) =>
-          updateFollowedByAnyStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep_fba", "append", matches)
-      .select($"user_id", $"click_id", $"purchase_id",
-        tsSec(timestamp_micros($"click_ts_us")).as("click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"click_id", $"purchase_id")
-  }
-
   private val streamCepFollowedByAnySql = """
     WITH e AS (SELECT user_id, event_id, event_type,
                  date_trunc('microseconds', ts) AS ts FROM events),
@@ -326,82 +181,6 @@ object CepStream {
      AND p.pts <= c.cts + INTERVAL 10 MINUTE
     WHERE p.pts <= (SELECT w FROM wm)
     ORDER BY user_id, click_id, purchase_id"""
-
-  /** Unsealed suffix + armed (click_id, click_ts_us, captured
-    * optional-view id) for the streaming optional operator. */
-  case class OptBuf(buf: List[CepEv],
-                    pending: List[(Long, Long, Option[Long])])
-
-  private val fourHoursUs = 4L * 3600 * 1000 * 1000
-
-  /** optional on the stream — the followedBy machinery with each armed
-    * start carrying its captured optional stage: a sealed view fills
-    * every still-empty slot, a sealed purchase completes-and-disarms
-    * all (first-match spine), and the watermark prunes expired starts.
-    * State widens by one optional id per start — still
-    * window-bounded. */
-  private[streamline] def updateOptionalStream(uid: Long,
-      rows: Iterator[CepEv],
-      state: GroupState[OptBuf]): Iterator[Cep.CepOpt] = {
-    val prev = state.getOption.getOrElse(OptBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var pending = prev.pending
-    val out = ready.flatMap { e =>
-      pending = pending.dropWhile(_._2 < e.ts_us - fourHoursUs)
-      if (e.event_type == "click") {
-        pending = pending :+ ((e.event_id, e.ts_us, None)); Nil
-      } else if (e.event_type == "view") {
-        pending = pending.map {
-          case (id, ts, None) => (id, ts, Some(e.event_id))
-          case filled => filled
-        }
-        Nil
-      } else if (e.event_type == "purchase") {
-        val matched = pending.map { case (id, ts, v) =>
-          Cep.CepOpt(uid, id, v, e.event_id, ts, e.ts_us)
-        }
-        pending = Nil
-        matched
-      } else Nil
-    }
-    pending = pending.dropWhile(_._2 + fourHoursUs < wmUs)
-    if (future.isEmpty && pending.isEmpty) state.remove()
-    else {
-      state.update(OptBuf(future, pending))
-      val nextUs = future.headOption.map(_.ts_us)
-        .getOrElse(pending.head._2 + fourHoursUs)
-      state.setTimeoutTimestamp(math.max(nextUs / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  /** q_stream_cep_optional — the optional-stage pattern on the
-    * unbounded stream; on finite input = the batch q_cep_optional
-    * result restricted to sealed purchases. */
-  private def streamCepOptional(spark: SparkSession,
-                                dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[OptBuf]) =>
-          updateOptionalStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep_opt", "append", matches)
-      .select($"user_id", $"click_id", $"view_id", $"purchase_id",
-        tsSec(timestamp_micros($"click_ts_us")).as("click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"click_id")
-  }
 
   private val streamCepOptionalSql = """
     WITH e AS (SELECT user_id, event_id, event_type,
@@ -436,92 +215,6 @@ object CepStream {
       date_trunc('second', m.pts) AS purchase_ts
     FROM m ORDER BY user_id, click_id"""
 
-  /** Unsealed suffix + last n−1 clicks + armed (first_id, first_ts,
-    * third_id) triples for the streaming times(3) operator. */
-  case class TimesBuf(buf: List[CepEv], recent: List[(Long, Long)],
-                      armed: List[(Long, Long, Long)])
-
-  private val dayUs = 24L * 3600 * 1000 * 1000
-
-  /** times(3)+followedBy on the stream — the batch
-    * `runTimesFollowedBy` logic fed by the sealed prefix. State: the
-    * unsealed suffix (watermark-delay-bounded), the last two clicks
-    * (prunable once their whole-match window closes — an expired
-    * click can head no armable triple, and any triple it sits in has
-    * an even older, equally expired head), and the armed triples
-    * (window-bounded like followedBy's starts). A sealed purchase
-    * completes every armed triple and disarms all — first-match
-    * semantics, same as the batch twin. */
-  private[streamline] def updateTimesStream(uid: Long,
-      rows: Iterator[CepEv],
-      state: GroupState[TimesBuf]): Iterator[Cep.CepTimes] = {
-    val prev = state.getOption.getOrElse(TimesBuf(Nil, Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var recent = prev.recent
-    var armed = prev.armed
-    val out = ready.flatMap { e =>
-      armed = armed.dropWhile(_._2 < e.ts_us - dayUs)
-      if (e.event_type == "click") {
-        if (recent.size == 2) {
-          val (fid, fts) = recent.head
-          if (e.ts_us <= fts + dayUs)
-            armed = armed :+ ((fid, fts, e.event_id))
-        }
-        recent = (recent :+ ((e.event_id, e.ts_us))).takeRight(2)
-        Nil
-      } else if (e.event_type == "purchase") {
-        val matched = armed.map { case (fid, fts, tid) =>
-          Cep.CepTimes(uid, fid, tid, e.event_id, fts, e.ts_us)
-        }
-        armed = Nil
-        matched
-      } else Nil
-    }
-    // watermark pruning: expired triples can never complete; expired
-    // clicks can never head (or sit inside) an armable triple
-    armed = armed.dropWhile(_._2 + dayUs < wmUs)
-    recent = recent.dropWhile(_._2 + dayUs < wmUs)
-    if (future.isEmpty && armed.isEmpty && recent.isEmpty) state.remove()
-    else {
-      state.update(TimesBuf(future, recent, armed))
-      val candidates = future.headOption.map(_.ts_us).toList ++
-        armed.headOption.map(_._2 + dayUs).toList ++
-        recent.headOption.map(_._2 + dayUs).toList
-      state.setTimeoutTimestamp(
-        math.max(candidates.min / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  /** q_stream_cep_times — bounded repetition on the unbounded stream;
-    * on finite input = the batch q_cep_times result restricted to
-    * sealed purchases. */
-  private def streamCepTimes(spark: SparkSession,
-                             dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[TimesBuf]) =>
-          updateTimesStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep_times", "append", matches)
-      .select($"user_id", $"first_click_id", $"third_click_id",
-        $"purchase_id",
-        tsSec(timestamp_micros($"first_ts_us")).as("first_click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"first_click_id", $"purchase_id")
-  }
-
   private val streamCepTimesSql = """
     WITH e AS (SELECT user_id, event_id, event_type,
                  date_trunc('microseconds', ts) AS ts FROM events),
@@ -552,81 +245,9 @@ object CepStream {
     GROUP BY t.user_id, t.first_click_id, t.third_click_id, t.cts
     ORDER BY user_id, first_click_id, purchase_id"""
 
-  // ---------------------------------------------------------------
-  // Negative pattern on the stream: `click notFollowedBy purchase
-  // within 10 min` (batch twin q_cep_absence). Absence is the
-  // TIMER-driven emission pattern — a match exists precisely when
-  // NOTHING arrives, so the alert cannot be data-driven: an armed
-  // click is killed by a sealed in-window purchase, and EMITTED when
-  // the WATERMARK (or an event past its window) proves the purchase
-  // can no longer come. This is the flink ProcessFunction
-  // register-timer/clear-timer idiom (the abandoned-cart alert) on
-  // Spark's EventTimeTimeout. State is the unsealed suffix + armed
-  // clicks, both watermark-bounded as in the followedBy operator.
-  // ---------------------------------------------------------------
-
-  private[streamline] def updateAbsenceStream(uid: Long,
-      rows: Iterator[CepEv],
-      state: GroupState[FbBuf]): Iterator[Cep.CepAbs] = {
-    val prev = state.getOption.getOrElse(FbBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var pending = prev.pending
-    val out = List.newBuilder[Cep.CepAbs]
-    ready.foreach { e =>
-      // survivors: window closed strictly before this sealed event
-      // (same strict boundary as the batch scan)
-      val (survived, rest) = pending.span(_._2 < e.ts_us - withinUs)
-      survived.foreach { case (id, ts) => out += Cep.CepAbs(uid, id, ts) }
-      pending = rest
-      if (e.event_type == "purchase") pending = Nil
-      else if (e.event_type == "click")
-        pending = pending :+ (e.event_id, e.ts_us)
-    }
-    // timer path: the watermark alone proves absence once it passes an
-    // armed click's window end — any later-fed event has ts > wm
-    val (proven, keep) = pending.span(_._2 + withinUs < wmUs)
-    proven.foreach { case (id, ts) => out += Cep.CepAbs(uid, id, ts) }
-    pending = keep
-    if (future.isEmpty && pending.isEmpty) state.remove()
-    else {
-      state.update(FbBuf(future, pending))
-      val candidates = future.headOption.map(_.ts_us).toList ++
-        pending.headOption.map(_._2 + withinUs).toList
-      state.setTimeoutTimestamp(
-        math.max(candidates.min / 1000L + 1L, wmMs + 1L))
-    }
-    out.result().iterator
-  }
-
-  /** q_stream_cep_absence — abandoned-cart alerts on the unbounded
-    * stream; on finite input = the batch q_cep_absence result
-    * restricted to clicks whose window end the final watermark
-    * strictly passed (the only ones whose absence is PROVEN — later
-    * data could still kill the rest). */
-  private def streamCepAbsence(spark: SparkSession,
-                               dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[FbBuf]) =>
-          updateAbsenceStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep_abs", "append", matches)
-      .select($"user_id", $"click_id",
-        tsSec(timestamp_micros($"click_ts_us")).as("click_ts"))
-      .orderBy($"user_id", $"click_id")
-  }
-
+  /** Absence is proven only for clicks whose window end the final
+    * watermark strictly passed — later data could still kill the
+    * rest. */
   private val streamCepAbsenceSql = """
     WITH e AS (SELECT user_id, event_id, event_type,
                  date_trunc('microseconds', ts) AS ts FROM events),
@@ -649,169 +270,6 @@ object CepStream {
         AND p.pts <= c.cts + INTERVAL 10 MINUTE)
       AND c.cts + INTERVAL 10 MINUTE < (SELECT w FROM wm)
     ORDER BY user_id, click_id"""
-
-  // ---------------------------------------------------------------
-  // After-match skip strategies + greedy/until on the stream (batch
-  // twins q_cep_greedy/noskip/skip_to_next/skip_past/until): the same
-  // sealed-prefix machinery as every relaxed operator above, with the
-  // armed starts carrying their captured run length. ONE update
-  // function executes all four strategy twins — greedy and the skip
-  // strategy are closure parameters, exactly like the batch runner —
-  // and `until` adds the open/closed bit. State stays window-bounded
-  // (a start lives at most one 1-day window past its arrival); the
-  // strategies change which completions EMIT at a sealed purchase,
-  // never what is held, so the emission policy is a zero-state-cost
-  // parameter.
-  // ---------------------------------------------------------------
-
-  /** Unsealed suffix + armed (click_id, click_ts_us, n_captured). */
-  case class RunBuf(buf: List[CepEv], armed: List[(Long, Long, Long)])
-
-  /** Unsealed suffix + armed starts widened by the until open bit. */
-  case class UntilBuf(buf: List[CepEv],
-                      armed: List[(Long, Long, Long, Boolean)])
-
-  private[streamline] def updateOneOrMoreStream(uid: Long,
-      rows: Iterator[CepEv], state: GroupState[RunBuf], greedy: Boolean,
-      skip: Cep.AfterMatchSkip): Iterator[Cep.CepRun] = {
-    val prev = state.getOption.getOrElse(RunBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var armed = prev.armed
-    val out = ready.flatMap { e =>
-      armed = armed.dropWhile(_._2 < e.ts_us - dayUs)
-      if (e.event_type == "click") {
-        armed = armed.map { case (id, ts, n) => (id, ts, n + 1) } :+
-          ((e.event_id, e.ts_us, 1L))
-        Nil
-      } else if (e.event_type == "purchase") {
-        val starts = skip match {
-          case Cep.SkipPastLastEvent => armed.headOption.toList
-          case _                     => armed
-        }
-        val matched = starts.flatMap { case (id, ts, n) =>
-          val ks: Seq[Long] =
-            if (greedy) Seq(n)
-            else skip match {
-              case Cep.SkipToNext => Seq(1L)
-              case _              => 1L to n
-            }
-          ks.map(k => Cep.CepRun(uid, id, k, e.event_id, ts, e.ts_us))
-        }
-        armed = Nil
-        matched
-      } else Nil
-    }
-    armed = armed.dropWhile(_._2 + dayUs < wmUs)
-    if (future.isEmpty && armed.isEmpty) state.remove()
-    else {
-      state.update(RunBuf(future, armed))
-      val nextUs = future.headOption.map(_.ts_us)
-        .getOrElse(armed.head._2 + dayUs)
-      state.setTimeoutTimestamp(math.max(nextUs / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  private[streamline] def updateUntilStream(uid: Long,
-      rows: Iterator[CepEv],
-      state: GroupState[UntilBuf]): Iterator[Cep.CepRun] = {
-    val prev = state.getOption.getOrElse(UntilBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.toList).sortBy(e => (e.ts_us, e.event_id))
-    val (ready, future) = all.partition(_.ts_us <= wmUs)
-    var armed = prev.armed
-    val out = ready.flatMap { e =>
-      armed = armed.dropWhile(_._2 < e.ts_us - dayUs)
-      if (e.event_type == "click") {
-        armed = armed.map {
-          case (id, ts, n, true) => (id, ts, n + 1, true)
-          case closed            => closed
-        } :+ ((e.event_id, e.ts_us, 1L, true))
-        Nil
-      } else if (e.event_type == "view") {
-        armed = armed.map { case (id, ts, n, _) => (id, ts, n, false) }
-        Nil
-      } else if (e.event_type == "purchase") {
-        val matched = armed.map { case (id, ts, n, _) =>
-          Cep.CepRun(uid, id, n, e.event_id, ts, e.ts_us)
-        }
-        armed = Nil
-        matched
-      } else Nil
-    }
-    armed = armed.dropWhile(_._2 + dayUs < wmUs)
-    if (future.isEmpty && armed.isEmpty) state.remove()
-    else {
-      state.update(UntilBuf(future, armed))
-      val nextUs = future.headOption.map(_.ts_us)
-        .getOrElse(armed.head._2 + dayUs)
-      state.setTimeoutTimestamp(math.max(nextUs / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  private def runStream(spark: SparkSession, dir: String, name: String,
-                        greedy: Boolean,
-                        skip: Cep.AfterMatchSkip): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[RunBuf]) =>
-          updateOneOrMoreStream(uid, rows.map(_.toEv), state, greedy, skip)
-      }
-      .toDF()
-    Streams.runToTable(spark, name, "append", matches)
-      .select($"user_id", $"first_click_id", $"n_clicks", $"purchase_id",
-        tsSec(timestamp_micros($"first_ts_us")).as("first_click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"first_click_id", $"n_clicks", $"purchase_id")
-  }
-
-  /** q_stream_cep_greedy / noskip / skip_to_next / skip_past — the
-    * after-match-skip family incrementally; on finite input = the
-    * batch twin restricted to purchases the final watermark sealed. */
-  private def streamCepGreedy(spark: SparkSession, dir: String): DataFrame =
-    runStream(spark, dir, "cep_greedy", greedy = true, Cep.NoSkip)
-  private def streamCepNoSkip(spark: SparkSession, dir: String): DataFrame =
-    runStream(spark, dir, "cep_noskip", greedy = false, Cep.NoSkip)
-  private def streamCepSkipToNext(spark: SparkSession,
-                                  dir: String): DataFrame =
-    runStream(spark, dir, "cep_stn", greedy = false, Cep.SkipToNext)
-  private def streamCepSkipPast(spark: SparkSession,
-                                dir: String): DataFrame =
-    runStream(spark, dir, "cep_sp", greedy = true, Cep.SkipPastLastEvent)
-
-  /** q_stream_cep_until — run-extent truncation incrementally. */
-  private def streamCepUntil(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val matches = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[CepRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[CepRow], state: GroupState[UntilBuf]) =>
-          updateUntilStream(uid, rows.map(_.toEv), state)
-      }
-      .toDF()
-    Streams.runToTable(spark, "cep_until", "append", matches)
-      .select($"user_id", $"first_click_id", $"n_clicks", $"purchase_id",
-        tsSec(timestamp_micros($"first_ts_us")).as("first_click_ts"),
-        tsSec(timestamp_micros($"purchase_ts_us")).as("purchase_ts"))
-      .orderBy($"user_id", $"first_click_id", $"n_clicks", $"purchase_id")
-  }
 
   /** The batch family's shared spine CTEs with the sealed-purchase
     * restriction (sealing is a pure ts cutoff, so filtering before
@@ -890,18 +348,17 @@ object CepStream {
     ORDER BY user_id, first_click_id, n_clicks, purchase_id"""
 
   val all: Seq[Q] = Seq(
-    Q("q_stream_cep", streamCep _, streamCepSql),
-    Q("q_stream_cep_greedy", streamCepGreedy _, streamCepGreedySql),
-    Q("q_stream_cep_noskip", streamCepNoSkip _, streamCepNoSkipSql),
-    Q("q_stream_cep_skip_to_next", streamCepSkipToNext _,
+    twin("q_stream_cep", Cep.kleene, streamCepSql),
+    twin("q_stream_cep_greedy", Cep.greedy, streamCepGreedySql),
+    twin("q_stream_cep_noskip", Cep.noSkip, streamCepNoSkipSql),
+    twin("q_stream_cep_skip_to_next", Cep.skipToNext,
       streamCepSkipToNextSql),
-    Q("q_stream_cep_skip_past", streamCepSkipPast _, streamCepSkipPastSql),
-    Q("q_stream_cep_until", streamCepUntil _, streamCepUntilSql),
-    Q("q_stream_cep_followedby", streamCepFollowedBy _,
-      streamCepFollowedBySql),
-    Q("q_stream_cep_followedby_any", streamCepFollowedByAny _,
+    twin("q_stream_cep_skip_past", Cep.skipPast, streamCepSkipPastSql),
+    twin("q_stream_cep_until", Cep.until, streamCepUntilSql),
+    twin("q_stream_cep_followedby", Cep.followedBy, streamCepFollowedBySql),
+    twin("q_stream_cep_followedby_any", Cep.followedByAny,
       streamCepFollowedByAnySql),
-    Q("q_stream_cep_times", streamCepTimes _, streamCepTimesSql),
-    Q("q_stream_cep_optional", streamCepOptional _, streamCepOptionalSql),
-    Q("q_stream_cep_absence", streamCepAbsence _, streamCepAbsenceSql))
+    twin("q_stream_cep_times", Cep.times, streamCepTimesSql),
+    twin("q_stream_cep_optional", Cep.optional, streamCepOptionalSql),
+    twin("q_stream_cep_absence", Cep.absence, streamCepAbsenceSql))
 }

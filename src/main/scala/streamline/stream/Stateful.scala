@@ -845,24 +845,21 @@ object Stateful {
     * backend-swap check. */
   private def streamTws(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    streamline.batch.SkewJoin.withConfs(spark, Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      val out = Streams.eventsStream(spark, dir)
-        .select($"user_id", $"value").as[EvRow]
-        .groupByKey(_.user_id)
-        .transformWithState(new TwsCount,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-        .toDF()
-      val collected = Streams.runToTable(spark, "tws", "update", out)
-      val w = Window.partitionBy($"user_id").orderBy($"n_events".desc)
-      collected
-        .withColumn("rn", row_number().over(w))
-        .where($"rn" === 1)
-        .select($"user_id", $"n_events", $"sum_val")
-        .orderBy($"user_id")
-    }
+    val out = Streams.eventsStream(spark, dir)
+      .select($"user_id", $"value").as[EvRow]
+      .groupByKey(_.user_id)
+      .transformWithState(new TwsCount,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF()
+    val collected = Streams.runToTable(spark, "tws", "update", out,
+      confs = Seq(Streams.rocksDb))
+    val w = Window.partitionBy($"user_id").orderBy($"n_events".desc)
+    collected
+      .withColumn("rn", row_number().over(w))
+      .where($"rn" === 1)
+      .select($"user_id", $"n_events", $"sum_val")
+      .orderBy($"user_id")
   }
 
   case class TwtOut(user_id: Long, n_events: Long, sum_val: Double,
@@ -938,20 +935,17 @@ object Stateful {
     * it did. */
   private def streamTwsTimer(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    streamline.batch.SkewJoin.withConfs(spark, Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      val out = Streams.eventsStream(spark, dir)
-        .withWatermark("ts", "10 minutes")
-        .select($"user_id", $"ts", $"value").as[ToRow]
-        .groupByKey(_.user_id)
-        .transformWithState(new TwsIdleFlush,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF()
-      Streams.runToTable(spark, "tws_timer", "append", out)
-        .orderBy($"user_id")
-    }
+    val out = Streams.eventsStream(spark, dir)
+      .withWatermark("ts", "10 minutes")
+      .select($"user_id", $"ts", $"value").as[ToRow]
+      .groupByKey(_.user_id)
+      .transformWithState(new TwsIdleFlush,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+      .toDF()
+    Streams.runToTable(spark, "tws_timer", "append", out,
+      confs = Seq(Streams.rocksDb))
+      .orderBy($"user_id")
   }
 
   private val streamTwsTimerSql = """
@@ -1021,25 +1015,22 @@ object Stateful {
     * so max(n) recovers the final snapshot under any batch split. */
   private def streamTwsMap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    streamline.batch.SkewJoin.withConfs(spark, Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      val out = Streams.eventsStream(spark, dir)
-        .select($"user_id", $"event_type", $"value").as[TmRow]
-        .groupByKey(_.user_id)
-        .transformWithState(new TwsTypeCount,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-        .toDF()
-      val collected = Streams.runToTable(spark, "tws_map", "update", out)
-      val w = Window.partitionBy($"user_id", $"event_type")
-        .orderBy($"n".desc)
-      collected
-        .withColumn("rn", row_number().over(w))
-        .where($"rn" === 1)
-        .select($"user_id", $"event_type", $"n", $"sum_val")
-        .orderBy($"user_id", $"event_type")
-    }
+    val out = Streams.eventsStream(spark, dir)
+      .select($"user_id", $"event_type", $"value").as[TmRow]
+      .groupByKey(_.user_id)
+      .transformWithState(new TwsTypeCount,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF()
+    val collected = Streams.runToTable(spark, "tws_map", "update", out,
+      confs = Seq(Streams.rocksDb))
+    val w = Window.partitionBy($"user_id", $"event_type")
+      .orderBy($"n".desc)
+    collected
+      .withColumn("rn", row_number().over(w))
+      .where($"rn" === 1)
+      .select($"user_id", $"event_type", $"n", $"sum_val")
+      .orderBy($"user_id", $"event_type")
   }
 
   private val streamTwsMapSql = """
@@ -1063,43 +1054,39 @@ object Stateful {
     * inter-batch sleep, count restarts). */
   private def streamTwsTtl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    streamline.batch.SkewJoin.withConfs(spark, Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      val out = Streams.eventsStream(spark, dir)
-        .select($"user_id", $"value").as[EvRow]
-        .groupByKey(_.user_id)
-        .transformWithState(
-          new TwsCount(org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofHours(1))),
-          org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-          OutputMode.Update())
-        .toDF()
-      // A stateful operator in TimeMode.ProcessingTime (TTL state,
-      // processing-time timers) reports `shouldRunAnotherBatch=true` on
-      // every batch so expiry can keep advancing, and AvailableNow
-      // obliges forever (~5 empty micro-batches/sec, 784 snapshot zips
-      // before the kill). `processAllAvailable` is no escape: under the
-      // continuous batch loop its `noNewData` signal is racy (observed
-      // both returning and hanging). Under AvailableNow every batch
-      // takes files from the start-time snapshot while any remain, so
-      // the FIRST zero-input batch after batch 0 proves the backlog is
-      // done; awaitTermination(250) doubles as the poll interval.
-      val collected = Streams.runToTable(spark, "tws_ttl", "update", out,
-        await = { q =>
-          var drained = false
-          while (!drained && !q.awaitTermination(250)) {
-            val p = q.lastProgress
-            drained = p != null && p.batchId > 0 && p.numInputRows == 0
-          }
-        })
-      val w = Window.partitionBy($"user_id").orderBy($"n_events".desc)
-      collected
-        .withColumn("rn", row_number().over(w))
-        .where($"rn" === 1)
-        .select($"user_id", $"n_events", $"sum_val")
-        .orderBy($"user_id")
-    }
+    val out = Streams.eventsStream(spark, dir)
+      .select($"user_id", $"value").as[EvRow]
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new TwsCount(org.apache.spark.sql.streaming.TTLConfig(
+          java.time.Duration.ofHours(1))),
+        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+        OutputMode.Update())
+      .toDF()
+    // A stateful operator in TimeMode.ProcessingTime (TTL state,
+    // processing-time timers) reports `shouldRunAnotherBatch=true` on
+    // every batch so expiry can keep advancing, and AvailableNow
+    // obliges forever (~5 empty micro-batches/sec, 784 snapshot zips
+    // before the kill). `processAllAvailable` is no escape: under the
+    // continuous batch loop its `noNewData` signal is racy (observed
+    // both returning and hanging). Under AvailableNow every batch
+    // takes files from the start-time snapshot while any remain, so
+    // the FIRST zero-input batch after batch 0 proves the backlog is
+    // done; awaitTermination(250) doubles as the poll interval.
+    val collected = Streams.runToTable(spark, "tws_ttl", "update", out,
+      await = { q =>
+        var drained = false
+        while (!drained && !q.awaitTermination(250)) {
+          val p = q.lastProgress
+          drained = p != null && p.batchId > 0 && p.numInputRows == 0
+        }
+      }, confs = Seq(Streams.rocksDb))
+    val w = Window.partitionBy($"user_id").orderBy($"n_events".desc)
+    collected
+      .withColumn("rn", row_number().over(w))
+      .where($"rn" === 1)
+      .select($"user_id", $"n_events", $"sum_val")
+      .orderBy($"user_id")
   }
 
   case class TlRow(user_id: Long, ts_us: Long, event_id: Long,
@@ -1168,25 +1155,22 @@ object Stateful {
     * order. */
   private def streamTwsList(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    streamline.batch.SkewJoin.withConfs(spark, Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      val out = Streams.eventsStream(spark, dir)
-        .select($"user_id", unix_micros($"ts").as("ts_us"),
-          $"event_id", $"value").as[TlRow]
-        .groupByKey(_.user_id)
-        .transformWithState(new TwsLastN,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-        .toDF()
-      val collected = Streams.runToTable(spark, "tws_list", "update", out)
-      val w = Window.partitionBy($"user_id").orderBy($"n_seen".desc)
-      collected
-        .withColumn("rn", row_number().over(w))
-        .where($"rn" === 1)
-        .select($"user_id", $"n_seen", $"last3_ids", $"last3_sum")
-        .orderBy($"user_id")
-    }
+    val out = Streams.eventsStream(spark, dir)
+      .select($"user_id", unix_micros($"ts").as("ts_us"),
+        $"event_id", $"value").as[TlRow]
+      .groupByKey(_.user_id)
+      .transformWithState(new TwsLastN,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF()
+    val collected = Streams.runToTable(spark, "tws_list", "update", out,
+      confs = Seq(Streams.rocksDb))
+    val w = Window.partitionBy($"user_id").orderBy($"n_seen".desc)
+    collected
+      .withColumn("rn", row_number().over(w))
+      .where($"rn" === 1)
+      .select($"user_id", $"n_seen", $"last3_ids", $"last3_sum")
+      .orderBy($"user_id")
   }
 
   private val streamTwsListSql = """

@@ -155,17 +155,18 @@ object Streams {
   }
 
   /** The one memory-sink run: drains `stream` into a memory sink
-    * (`trigger` and `await` as in [[drain]]) and returns the sink
-    * contents as a batch DataFrame. The sink's temp view is dropped
+    * (`confs`, `trigger` and `await` as in [[drain]]) and returns the
+    * sink contents as a batch DataFrame. The sink's temp view is dropped
     * before returning — the DataFrame keeps the sink's rows, and a
     * registered view would pin them for the session's lifetime. */
   def runToTable(spark: SparkSession, base: String, mode: String,
       stream: DataFrame, trigger: Trigger = Trigger.AvailableNow(),
-      await: StreamingQuery => Unit = _.awaitTermination()): DataFrame = {
+      await: StreamingQuery => Unit = _.awaitTermination(),
+      confs: Seq[(String, String)] = Nil): DataFrame = {
     val name = s"${base}_${seq.incrementAndGet()}"
     try {
       drain(spark, stream.writeStream.format("memory").queryName(name)
-        .outputMode(mode), await = await, trigger = trigger)
+        .outputMode(mode), confs, await = await, trigger = trigger)
       spark.table(name)
     } finally { spark.catalog.dropTempView(name): Unit }
   }
@@ -383,7 +384,7 @@ object Streams {
     * split guarantees no restart row is late: wm₁ = max(early)−10min <
     * cut ≤ every late ts. */
   private def streamRecovery(spark: SparkSession, dir: String): DataFrame =
-    recoveryDrain(spark, dir, "recov", providerClass = None)
+    recoveryDrain(spark, dir, "recov", confs = Nil)
 
   /** q_stream_rocksdb — the identical stop→restart recovery drain run
     * under `RocksDBStateStoreProvider` (rocksdbjni ships with Spark):
@@ -398,15 +399,16 @@ object Streams {
     * progress (rocksdb* custom metrics) and frame-equality against
     * the default-provider run. */
   private def streamRocksdb(spark: SparkSession, dir: String): DataFrame =
-    recoveryDrain(spark, dir, "rocksdb", providerClass = Some(
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider"))
+    recoveryDrain(spark, dir, "rocksdb", Seq(rocksDb))
 
-  /** The state-store backend override of the RocksDB witnesses, passed
-    * to [[drain]] as an extra conf (its scope restores it). */
-  private def providerConfs(providerClass: Option[String])
-      : Seq[(String, String)] =
-    providerClass.toSeq.map("spark.sql.streaming.stateStore.providerClass" -> _)
+  /** The RocksDB state-store backend, as a [[drain]] conf. Spark reads
+    * it when the query starts, inside drain's scope: the stream runs on
+    * a clone of the session taken at start, and transformWithState's
+    * RocksDB check is made when its operator is planned
+    * (TransformWithStateExec). */
+  private[streamline] val rocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** An explicit state-partition count for [[drain]], overriding the
     * knob: the rescale and rewrite oracles assert the counts they run
@@ -415,7 +417,7 @@ object Streams {
     Seq("spark.sql.shuffle.partitions" -> parts.toString)
 
   private[streamline] def recoveryDrain(spark: SparkSession, dir: String,
-      tag: String, providerClass: Option[String]): DataFrame = {
+      tag: String, confs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
     val root = streamline.util.Scratch.fresh(tag, dir)
     val (stage, ckpt, out) = (s"$root/in", s"$root/ck", s"$root/out")
@@ -438,7 +440,7 @@ object Streams {
         .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           df.withColumn("batch_id", lit(id))
             .write.mode("append").parquet(out): Unit
-        }, providerConfs(providerClass), Some(ckpt)): Unit
+        }, confs, Some(ckpt)): Unit
     events.where($"ts" < lit(cut)).repartition(2).write.parquet(stage)
     run() // run 1: early half only, then STOP
     events.where($"ts" >= lit(cut)).repartition(2)
@@ -465,7 +467,7 @@ object Streams {
     * stream. */
   private def streamStateReader(spark: SparkSession,
                                 dir: String): DataFrame =
-    stateReaderDrain(spark, dir, "statereader", providerClass = None)
+    stateReaderDrain(spark, dir, "statereader", confs = Nil)
 
   /** q_stream_rocksdb_reader — OFFLINE STATE INSPECTION of a RocksDB
     * checkpoint: the q_stream_state_reader witness with the drain run
@@ -480,12 +482,10 @@ object Streams {
     * in the shared drain. */
   private def streamRocksdbReader(spark: SparkSession,
                                   dir: String): DataFrame =
-    stateReaderDrain(spark, dir, "rocksreader", providerClass = Some(
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider"))
+    stateReaderDrain(spark, dir, "rocksreader", Seq(rocksDb))
 
   private def stateReaderDrain(spark: SparkSession, dir: String,
-      tag: String, providerClass: Option[String]): DataFrame = {
+      tag: String, confs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
     val ckpt = s"${streamline.util.Scratch.fresh(tag, dir)}/ck"
     drain(spark, eventsStream(spark, dir)
@@ -493,7 +493,7 @@ object Streams {
       .groupBy(window($"ts", "1 day"), $"event_type")
       .agg(dsum("value").as("sum_val"), count(lit(1)).as("n"))
       .writeStream.outputMode("append").format("noop"),
-      providerConfs(providerClass), Some(ckpt))
+      confs, Some(ckpt))
     // Buffer layout (pinned by the probe in SURVEY §7 r9 notes):
     // key = the groupBy key struct, value = the agg buffer (sum
     // decimal, isEmpty, count).
@@ -1003,10 +1003,9 @@ object Streams {
     * oracles differ exactly by least↔greatest. */
   private def streamWmMax(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    streamline.batch.SkewJoin.withConfs(spark,
-        Seq("spark.sql.streaming.multipleWatermarkPolicy" -> "max")) {
-      runToTable(spark, "wm_max", "append", wmPolicyAgg(spark, dir))
-    }.orderBy($"w_start", $"event_type")
+    runToTable(spark, "wm_max", "append", wmPolicyAgg(spark, dir),
+      confs = Seq("spark.sql.streaming.multipleWatermarkPolicy" -> "max"))
+      .orderBy($"w_start", $"event_type")
   }
 
   private val streamWmMaxSql = """

@@ -17,7 +17,7 @@ class CepKleeneSpec extends SparkSuite {
     CepEv(u, id, t, m * MIN)
 
   private def run(evs: Seq[CepEv]): Seq[CepMatch] =
-    Cep.kleeneMatches(evs.toDS(), "click", "purchase", 10 * MIN)
+    Cep.matches(evs.toDS(), Cep.Kleene(10 * MIN))
       .collect().toSeq.sortBy(m => (m.user_id, m.purchase_id))
 
   test("a run of clicks then a purchase matches with the full run length") {
@@ -68,11 +68,11 @@ class CepRelaxedSpec extends graft.SparkSuite {
     CepEv(u, id, t, tsMin * MIN)
 
   private def rel(evs: Seq[CepEv]): Seq[CepRel] =
-    Cep.followedByMatches(evs.toDS(), "click", "purchase", 10 * MIN)
+    Cep.matches(evs.toDS(), Cep.FollowedBy(10 * MIN))
       .collect().toSeq.sortBy(m => (m.user_id, m.click_id))
 
   private def abs(evs: Seq[CepEv]): Seq[CepAbs] =
-    Cep.absenceMatches(evs.toDS(), "click", "purchase", 10 * MIN)
+    Cep.matches(evs.toDS(), Cep.Absence(10 * MIN))
       .collect().toSeq.sortBy(m => (m.user_id, m.click_id))
 
   test("followedBy skips irrelevant events between click and purchase") {

@@ -65,8 +65,8 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     (1L to 8L).foreach { seed =>
       val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-      val got = Cep.followedByMatches(evs.toDS(), "click", "purchase",
-        withinUs).collect().toSet
+      val got = Cep.matches(evs.toDS(),
+        Cep.FollowedBy(withinUs)).collect().toSet
       assert(got == refFollowedBy(evs), s"seed $seed")
     }
   }
@@ -75,8 +75,8 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     (1L to 8L).foreach { seed =>
       val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-      val got = Cep.absenceMatches(evs.toDS(), "click", "purchase",
-        withinUs).collect().toSet
+      val got = Cep.matches(evs.toDS(),
+        Cep.Absence(withinUs)).collect().toSet
       assert(got == refAbsence(evs), s"seed $seed")
     }
   }
@@ -137,8 +137,8 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     (1L to 8L).foreach { seed =>
       val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-      val got = Cep.optionalMatches(evs.toDS(), "click", "view",
-        "purchase", withinUs).collect().toSet
+      val got = Cep.matches(evs.toDS(),
+        Cep.Optional(withinUs)).collect().toSet
       assert(got == refOptional(evs), s"seed $seed")
     }
   }
@@ -146,10 +146,10 @@ class CepPropertySpec extends SparkSuite {
   test("optional's match spine is exactly followedBy") {
     val sp = spark; import sp.implicits._
     val evs = evsGen(Gen.Parameters.default, Seed(7L)).get
-    val opt = Cep.optionalMatches(evs.toDS(), "click", "view", "purchase",
-      withinUs).collect().map(o => (o.click_id, o.purchase_id)).toSet
-    val fb = Cep.followedByMatches(evs.toDS(), "click", "purchase",
-      withinUs).collect().map(r => (r.click_id, r.purchase_id)).toSet
+    val opt = Cep.matches(evs.toDS(), Cep.Optional(withinUs)).collect()
+      .map(o => (o.click_id, o.purchase_id)).toSet
+    val fb = Cep.matches(evs.toDS(), Cep.FollowedBy(withinUs)).collect()
+      .map(r => (r.click_id, r.purchase_id)).toSet
     assert(opt == fb)
   }
 
@@ -157,8 +157,8 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     (1L to 8L).foreach { seed =>
       val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-      val got = Cep.followedByAnyMatches(evs.toDS(), "click", "purchase",
-        withinUs).collect().toSet
+      val got = Cep.matches(evs.toDS(),
+        Cep.FollowedBy(withinUs, any = true)).collect().toSet
       assert(got == refFollowedByAny(evs), s"seed $seed")
     }
   }
@@ -167,8 +167,8 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     (1L to 8L).foreach { seed =>
       val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-      val got = Cep.timesMatches(evs.toDS(), "click", "purchase", 3,
-        withinUs).collect().toSet
+      val got = Cep.matches(evs.toDS(),
+        Cep.Times(withinUs)).collect().toSet
       assert(got == refTimes(evs), s"seed $seed")
     }
   }
@@ -176,10 +176,10 @@ class CepPropertySpec extends SparkSuite {
   test("followedByAny is a superset of followedBy (first match is a match)") {
     val sp = spark; import sp.implicits._
     val evs = evsGen(Gen.Parameters.default, Seed(42L)).get
-    val any = Cep.followedByAnyMatches(evs.toDS(), "click", "purchase",
-      withinUs).collect().toSet
-    val first = Cep.followedByMatches(evs.toDS(), "click", "purchase",
-      withinUs).collect().toSet
+    val any = Cep.matches(evs.toDS(),
+      Cep.FollowedBy(withinUs, any = true)).collect().toSet
+    val first = Cep.matches(evs.toDS(),
+      Cep.FollowedBy(withinUs)).collect().toSet
     assert(first.subsetOf(any))
   }
 
@@ -243,6 +243,9 @@ class CepPropertySpec extends SparkSuite {
       }.flatten
     }.toSet
 
+  private val until: Cep.OneOrMore =
+    Cep.OneOrMore(withinUs, greedy = true, Cep.NoSkip, until = true)
+
   private val strategies = Seq[(Boolean, Cep.AfterMatchSkip)](
     (true, Cep.NoSkip), (false, Cep.NoSkip), (false, Cep.SkipToNext),
     (true, Cep.SkipPastLastEvent))
@@ -252,8 +255,8 @@ class CepPropertySpec extends SparkSuite {
     strategies.foreach { case (greedy, skip) =>
       (1L to 6L).foreach { seed =>
         val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-        val got = Cep.oneOrMoreMatches(evs.toDS(), "click", "purchase",
-          withinUs, greedy, skip).collect().toSet
+        val got = Cep.matches(evs.toDS(),
+          Cep.OneOrMore(withinUs, greedy, skip)).collect().toSet
         assert(got == refOneOrMore(evs, greedy, skip),
           s"seed $seed greedy=$greedy skip=$skip")
       }
@@ -264,8 +267,7 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     (1L to 8L).foreach { seed =>
       val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
-      val got = Cep.untilMatches(evs.toDS(), "click", "view", "purchase",
-        withinUs).collect().toSet
+      val got = Cep.matches(evs.toDS(), until).collect().toSet
       assert(got == refUntil(evs), s"seed $seed")
     }
   }
@@ -274,8 +276,8 @@ class CepPropertySpec extends SparkSuite {
     val sp = spark; import sp.implicits._
     val evs = evsGen(Gen.Parameters.default, Seed(5L)).get
     def run(g: Boolean, s: Cep.AfterMatchSkip) =
-      Cep.oneOrMoreMatches(evs.toDS(), "click", "purchase", withinUs,
-        g, s).collect().toSet
+      Cep.matches(evs.toDS(),
+        Cep.OneOrMore(withinUs, g, s)).collect().toSet
     val greedy = run(true, Cep.NoSkip)
     val noskip = run(false, Cep.NoSkip)
     val toNext = run(false, Cep.SkipToNext)
@@ -285,8 +287,7 @@ class CepPropertySpec extends SparkSuite {
     assert(toNext == noskip.groupBy(r => (r.user_id, r.first_click_id))
       .values.map(_.minBy(_.n_clicks)).toSet)
     // until never lengthens a run beyond greedy's
-    val untilRuns = Cep.untilMatches(evs.toDS(), "click", "view",
-      "purchase", withinUs).collect()
+    val untilRuns = Cep.matches(evs.toDS(), until).collect()
       .map(r => (r.first_click_id, r.n_clicks)).toMap
     val greedyRuns = greedy.map(r => (r.first_click_id, r.n_clicks)).toMap
     untilRuns.foreach { case (id, n) => assert(n <= greedyRuns(id)) }
@@ -300,10 +301,10 @@ class CepPropertySpec extends SparkSuite {
     // matched ∪ absent = clicks whose first following purchase decides
     // inside/outside the window (i.e. all clicks)
     val evs = evsGen(Gen.Parameters.default, Seed(99L)).get
-    val matched = Cep.followedByMatches(evs.toDS(), "click", "purchase",
-      withinUs).collect().map(_.click_id).toSet
-    val absent = Cep.absenceMatches(evs.toDS(), "click", "purchase",
-      withinUs).collect().map(_.click_id).toSet
+    val matched = Cep.matches(evs.toDS(),
+      Cep.FollowedBy(withinUs)).collect().map(_.click_id).toSet
+    val absent = Cep.matches(evs.toDS(),
+      Cep.Absence(withinUs)).collect().map(_.click_id).toSet
     val clicks = evs.filter(_.event_type == "click").map(_.event_id).toSet
     assert((matched & absent).isEmpty)
     assert((matched | absent) == clicks)

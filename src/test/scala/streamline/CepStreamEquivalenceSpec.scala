@@ -1,12 +1,15 @@
 package streamline
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 import graft.SparkSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import streamline.batch.Cep
-import streamline.batch.Cep.CepEv
+import streamline.batch.Cep.{CepEv, Pattern}
 import streamline.stream.CepStream
+import streamline.stream.CepStream.CepState
 
 /** Randomized incremental ≡ batch equivalence for EVERY streaming CEP
   * operator: random event sequences, random monotone watermark
@@ -22,10 +25,6 @@ class CepStreamEquivalenceSpec extends SparkSuite {
 
   private val MIN_US = 60L * 1000 * 1000
   private val MIN_MS = 60L * 1000
-  private val fbWin = 10 * MIN_US          // followedBy/any + kleene window
-  private val optWin = 4L * 3600 * 1000 * 1000   // optional (4 h)
-  private val timesWin = 24L * 3600 * 1000 * 1000 // times (1 day)
-  private val skipWin = 24L * 3600 * 1000 * 1000  // skip family (1 day)
 
   // Single-key sequences: the operators are per-key, so per-key
   // equivalence is the whole property. ts ≥ 1 min keeps every event
@@ -80,71 +79,53 @@ class CepStreamEquivalenceSpec extends SparkSuite {
       steps(i) -> assigned.collect { case (b, e) if b == i => e })
   }
 
+  /** One streamed pattern against its batch scan: `sealedBy(o, wmUs)`
+    * says whether the final watermark `wmUs` decided the match `o`. */
+  private case class Twin[S, O <: Product : TypeTag](label: String,
+      p: Pattern[S, O], sealedBy: (O, Long) => Boolean) {
+    def check(evs: List[CepEv], sched: List[(Long, List[CepEv])],
+              finalWmUs: Long, ctx: String): Unit = {
+      val sp = spark; import sp.implicits._
+      val got =
+        runIncremental[CepState[S], O](CepStream.update(p), sched).toSet
+      val exp = Cep.matches(evs.toDS(), p).collect()
+        .filter(sealedBy(_, finalWmUs)).toSet
+      assert(got == exp, s"$label $ctx")
+    }
+  }
+
+  // A match is decided when its purchase seals; absence, once the
+  // watermark (or a sealed later event) proves the window closed without
+  // a purchase — strict bound.
+  private val twins = Seq[Twin[_, _]](
+    Twin("kleene", Cep.kleene,
+      (m: Cep.CepMatch, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("followedBy", Cep.followedBy,
+      (m: Cep.CepRel, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("followedByAny", Cep.followedByAny,
+      (m: Cep.CepRel, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("times", Cep.times,
+      (m: Cep.CepTimes, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("optional", Cep.optional,
+      (m: Cep.CepOpt, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("absence", Cep.absence,
+      (m: Cep.CepAbs, wm: Long) => m.click_ts_us + Cep.absence.withinUs < wm),
+    Twin("greedy", Cep.greedy,
+      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("noskip", Cep.noSkip,
+      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("skip_to_next", Cep.skipToNext,
+      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("skip_past", Cep.skipPast,
+      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+    Twin("until", Cep.until,
+      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm))
+
   private def checkAll(seed: Long, wmMaxMin: Long): Unit = {
-    val sp = spark; import sp.implicits._
     val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
     val sched = schedule(evs, seed * 31 + wmMaxMin, wmMaxMin)
-    val finalWmUs = wmMaxMin * MIN_US
-
-    val kGot = runIncremental(CepStream.updateCepStream, sched).toSet
-    val kExp = Cep.kleeneMatches(evs.toDS(), "click", "purchase", fbWin)
-      .collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-    assert(kGot == kExp, s"kleene seed=$seed wmMax=$wmMaxMin")
-
-    val fGot = runIncremental(CepStream.updateFollowedByStream, sched).toSet
-    val fExp = Cep.followedByMatches(evs.toDS(), "click", "purchase", fbWin)
-      .collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-    assert(fGot == fExp, s"followedBy seed=$seed wmMax=$wmMaxMin")
-
-    val aGot = runIncremental(CepStream.updateFollowedByAnyStream, sched).toSet
-    val aExp = Cep.followedByAnyMatches(evs.toDS(), "click", "purchase",
-      fbWin).collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-    assert(aGot == aExp, s"followedByAny seed=$seed wmMax=$wmMaxMin")
-
-    val tGot = runIncremental(CepStream.updateTimesStream, sched).toSet
-    val tExp = Cep.timesMatches(evs.toDS(), "click", "purchase", 3,
-      timesWin).collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-    assert(tGot == tExp, s"times seed=$seed wmMax=$wmMaxMin")
-
-    val oGot = runIncremental(CepStream.updateOptionalStream, sched).toSet
-    val oExp = Cep.optionalMatches(evs.toDS(), "click", "view", "purchase",
-      optWin).collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-    assert(oGot == oExp, s"optional seed=$seed wmMax=$wmMaxMin")
-
-    // absence: emitted once the watermark (or a sealed later event)
-    // proves the window closed without a purchase — strict bound
-    val bGot = runIncremental(CepStream.updateAbsenceStream, sched).toSet
-    val bExp = Cep.absenceMatches(evs.toDS(), "click", "purchase", fbWin)
-      .collect().filter(_.click_ts_us + fbWin < finalWmUs).toSet
-    assert(bGot == bExp, s"absence seed=$seed wmMax=$wmMaxMin")
-
-    // r9 after-match-skip family: the four strategy twins share ONE
-    // updater with (greedy, skip) closure parameters — drive each
-    // through the same random schedule against its batch runner. The
-    // stream updater's window is pinned at 1 day (matching the
-    // registered witnesses), so the batch side gets the same window.
-    Seq((true, Cep.NoSkip, "greedy"),
-        (false, Cep.NoSkip, "noskip"),
-        (false, Cep.SkipToNext, "skip_to_next"),
-        (true, Cep.SkipPastLastEvent, "skip_past")).foreach {
-      case (greedy, skip, label) =>
-        val got = runIncremental[CepStream.RunBuf, Cep.CepRun](
-          (uid, rows, st) =>
-            CepStream.updateOneOrMoreStream(uid, rows, st, greedy, skip),
-          sched).toSet
-        val exp = Cep.oneOrMoreMatches(evs.toDS(), "click", "purchase",
-            skipWin, greedy, skip)
-          .collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-        assert(got == exp, s"$label seed=$seed wmMax=$wmMaxMin")
-    }
-
-    // until: run-extent truncation by the 'view' sentinel
-    val uGot = runIncremental[CepStream.UntilBuf, Cep.CepRun](
-      CepStream.updateUntilStream, sched).toSet
-    val uExp = Cep.untilMatches(evs.toDS(), "click", "view", "purchase",
-        skipWin)
-      .collect().filter(_.purchase_ts_us <= finalWmUs).toSet
-    assert(uGot == uExp, s"until seed=$seed wmMax=$wmMaxMin")
+    twins.foreach(_.check(evs, sched, wmMaxMin * MIN_US,
+      s"seed=$seed wmMax=$wmMaxMin"))
   }
 
   test("streamed CEP equals sealed-restricted batch when everything seals") {
