@@ -41,9 +41,8 @@ object SparkEntry {
   /** Runs `body` on the session Bench and Verify drive:
     * `local[SPARK_GRAFT_CPUS]` with as many shuffle partitions, UTC, no
     * UI, and a JVM-unique `spark.local.dir` and streaming checkpoint
-    * root under Knobs.fastTmp (tmpfs when available: the harness host
-    * intermittently throttles block-device writes; a reused checkpoint
-    * root would replay committed offsets). Both roots are deleted
+    * root under Knobs.fastTmp (a reused checkpoint root would replay
+    * committed offsets). Both roots are deleted
     * after the session stops. */
   private[graft] def withDriverSession[T](tag: String)(
       body: SparkSession => T): T = {

@@ -1,9 +1,8 @@
 package streamline.agg
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import streamline.util.Det.dec4
 
 /** Typed UDAF witness (SURVEY.md §2.10): weighted average of price by
   * quantity, the Flink `AggregateFunction` equivalent as a Spark
@@ -18,9 +17,6 @@ import org.apache.spark.sql.expressions.Aggregator
 case class WBuf(num: BigDecimal, den: BigDecimal)
 
 object WeightedAvg extends Aggregator[(Double, Double), WBuf, Double] {
-
-  private def dec4(v: Double): BigDecimal =
-    BigDecimal(v).setScale(4, RoundingMode.HALF_UP)
 
   override def zero: WBuf = WBuf(BigDecimal(0), BigDecimal(0))
 

@@ -1977,6 +1977,26 @@ object Aggregates {
       CAST(7 * c - n AS BIGINT) AS dev7
     FROM t ORDER BY event_type, dow"""
 
+  /** The dense daily count grid of q_agg_corr_matrix, q_agg_runs_test,
+    * q_agg_forecast_baseline and four q_win_* series: one checkpointed
+    * (event_type, day) count pass — the grid spine's branches re-read
+    * it — cross-joined onto every (type, day) pair, a missing day
+    * counting 0. */
+  private[batch] def dailyCounts(spark: SparkSession,
+                                 dir: String): DataFrame = {
+    import spark.implicits._
+    val e = Tables.events(spark, dir)
+      .groupBy($"event_type",
+        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
+          .cast("long").as("day"))
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint(true)
+    e.select($"event_type").distinct()
+      .crossJoin(e.select($"day").distinct())
+      .join(e, Seq("event_type", "day"), "left")
+      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+  }
+
   /** q_agg_corr_matrix — EXACT pairwise correlation matrix over the
     * event types' daily-count series: for every type pair, the signed
     * integer covariance/variance NUMERATORS (n·Σxy − Σx·Σy etc.) and
@@ -1998,16 +2018,7 @@ object Aggregates {
     * cov² never exceeds 38 digits — see the inline bound. */
   private def aggCorrMatrix(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = dailyCounts(spark, dir)
     // c² and the moment cross-products in DECIMAL(38) BEFORE any
     // multiply — daily counts hit ~10¹² at 100 TB, where c² and
     // n·Σxy − Σx·Σx overflow long (ADVICE r15; q_agg_basket discipline)
@@ -2607,16 +2618,7 @@ object Aggregates {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     def d38(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // grid spine branches re-read it
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = dailyCounts(spark, dir)
       .localCheckpoint(true) // median + sign walk both read it
     val byT = Window.partitionBy($"event_type")
     val ranked = grid
@@ -2987,16 +2989,7 @@ object Aggregates {
                                   dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // grid spine branches re-read it
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = dailyCounts(spark, dir)
     val ord = Window.partitionBy($"event_type").orderBy($"day")
     grid.select($"event_type", $"c",
         lag($"c", 1).over(ord).as("l1"),

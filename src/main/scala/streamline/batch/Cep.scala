@@ -34,7 +34,7 @@ object Cep {
   // public: Spark's generated row (de)serializers instantiate these
   // from codegen'd classes, which cannot see private members.
   case class CepEv(user_id: Long, event_id: Long,
-                   event_type: String, ts_us: Long)
+                   event_type: String, ts_us: Long, value: Double = 0.0)
   case class CepMatch(user_id: Long, n_clicks: Long,
                       first_click_id: Long, purchase_id: Long,
                       first_ts_us: Long, purchase_ts_us: Long)
@@ -51,9 +51,12 @@ object Cep {
                     purchase_id: Long, first_ts_us: Long,
                     purchase_ts_us: Long)
 
-  /** One CEP pattern over one key's events, fed in (ts, id) order. `S`
-    * is the per-key state, `O` the match row. A state that equals
-    * `empty` holds nothing. */
+  /** A keyed event-time fold over one key's events, fed in (ts, id)
+    * order: a CEP pattern, or a running fold with nothing to expire
+    * (stream/Stateful.scala's `SealedFold`). `S` is the per-key state,
+    * `O` the output row. A state that equals `empty` holds nothing. The
+    * batch scan ([[matches]]) and the sealed-replay operator
+    * (`CepStream.update`) run the same value. */
   trait Pattern[S, O] extends Serializable {
     def empty: S
     def step(s: S, e: CepEv): (S, Seq[O])
@@ -375,7 +378,7 @@ object Cep {
     import spark.implicits._
     Tables.events(spark, dir)
       .select($"user_id", $"event_id", $"event_type",
-        unix_micros($"ts").as("ts_us"))
+        unix_micros($"ts").as("ts_us"), $"value")
       .as[CepEv]
   }
 

@@ -576,11 +576,7 @@ object Joins {
     orders.cogroup(cust) { (k, os, cs) =>
       var n = 0L
       var sum = BigDecimal(0)
-      os.foreach { o =>
-        n += 1
-        sum += BigDecimal(o._2)
-          .setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP)
-      }
+      os.foreach { o => n += 1; sum += dec4(o._2) }
       Iterator((k, n, sum.toDouble, cs.nonEmpty))
     }.toDF("custkey", "n_orders", "sum_price", "has_customer")
       .orderBy($"custkey")

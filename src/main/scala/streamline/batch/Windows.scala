@@ -1616,16 +1616,7 @@ object Windows {
     * long-safe by five orders. */
   private def winMaCross(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // grid spine branches re-read it
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = Aggregates.dailyCounts(spark, dir)
     val ord = Window.partitionBy($"event_type").orderBy($"day")
     val m = grid.select($"event_type", $"day",
       sum($"c").over(ord.rowsBetween(-2, 0)).as("s3"),
@@ -1734,16 +1725,7 @@ object Windows {
     * sort; 100·G at 10¹² daily counts is ~10¹⁶, long-safe. */
   private def winRsi(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // grid spine branches re-read it
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = Aggregates.dailyCounts(spark, dir)
     val ord = Window.partitionBy($"event_type").orderBy($"day")
     val df = grid.select($"event_type", $"day",
       ($"c" - lag($"c", 1).over(ord)).as("d"),
@@ -1811,16 +1793,7 @@ object Windows {
   private def winAcf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def d38(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // grid spine branches re-read it
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = Aggregates.dailyCounts(spark, dir)
     val st = grid.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"c").as("s"))
     val ord = Window.partitionBy($"event_type").orderBy($"day")
@@ -1912,16 +1885,7 @@ object Windows {
   private def winBollinger(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def d38(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val e = Tables.events(spark, dir)
-      .groupBy($"event_type",
-        floor(unix_micros($"ts").cast("double") / lit(86400000000.0))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // grid spine branches re-read it
-    val grid = e.select($"event_type").distinct()
-      .crossJoin(e.select($"day").distinct())
-      .join(e, Seq("event_type", "day"), "left")
-      .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
+    val grid = Aggregates.dailyCounts(spark, dir)
     val ord = Window.partitionBy($"event_type").orderBy($"day")
     val frame = ord.rowsBetween(-19, 0)
     val m = grid.select($"event_type", $"day", $"c",

@@ -28,6 +28,11 @@ import streamline.batch.Cep.{CepEv, Pattern}
   * On finite input a twin's result is its batch query's result
   * restricted to the matches the final watermark sealed — which is each
   * oracle below. The split into micro-batches does not change it.
+  *
+  * [[update]] is the engine's one keyed event-time operator: the running
+  * folds of q_stream_over, q_stream_zscore and q_stream_attrib
+  * (Stateful.scala) are Patterns too, built through [[twin]], so the
+  * watermark and timer policy lives here only.
   */
 object CepStream {
 
@@ -35,13 +40,17 @@ object CepStream {
     * the watermark at the last invocation) plus the pattern's state. */
   case class CepState[S](buf: Vector[CepEv], st: S)
 
+  /** Exact µs from a Timestamp's ms + nanos, floored: a pre-1970 time
+    * with a fractional second stays below its whole second. */
+  private[stream] def micros(ts: java.sql.Timestamp): Long =
+    math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
   /** Stream row: keeps the watermarked `ts` column itself (the analyzer
     * requires the event-time column to reach the stateful operator for
-    * EventTimeTimeout). Exact µs from the Timestamp's ms + nanos. */
+    * EventTimeTimeout). */
   case class CepRow(user_id: Long, event_id: Long, event_type: String,
-                    ts: java.sql.Timestamp) {
-    def toEv: CepEv = CepEv(user_id, event_id, event_type,
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L)
+                    ts: java.sql.Timestamp, value: Double) {
+    def toEv: CepEv = CepEv(user_id, event_id, event_type, micros(ts), value)
   }
 
   /** The streaming operator of `p`, per key: merge the buffered suffix
@@ -81,16 +90,17 @@ object CepStream {
     out.result().iterator
   }
 
-  /** The q_stream_cep* twin of `p`'s batch query: the event stream under a
+  /** The streaming twin of `p`'s batch query: the event stream under a
     * 10-minute watermark, keyed by user through [[update]], drained into
-    * a memory sink and projected as the batch query is. */
-  private def twin[S: TypeTag, O <: Product : TypeTag](name: String,
+    * the memory sink `name` without its `q_stream_` prefix and
+    * projected as the batch query is. */
+  private[stream] def twin[S: TypeTag, O <: Product : TypeTag](name: String,
       p: Pattern[S, O], sql: String): Q =
     Q(name, (spark: SparkSession, dir: String) => {
       import spark.implicits._
       val matches = Streams.eventsStream(spark, dir)
         .withWatermark("ts", "10 minutes")
-        .select($"user_id", $"event_id", $"event_type", $"ts")
+        .select($"user_id", $"event_id", $"event_type", $"ts", $"value")
         .as[CepRow]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append,

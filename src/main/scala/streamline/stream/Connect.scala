@@ -1,11 +1,10 @@
 package streamline.stream
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import streamline.Q
+import streamline.util.Det.dec4
 
 /** §2.16 connected streams / broadcast-state pattern.
   *
@@ -46,9 +45,6 @@ object Connect {
   case class CsRule(ts_us: Long, rule_id: Long, threshold: Double)
   case class CsOut(user_id: Long, event_id: Long, ts_us: Long,
                    value: Double, rule_id: Long, threshold: Double)
-
-  private def dec4(v: Double): BigDecimal =
-    BigDecimal(v).setScale(4, RoundingMode.HALF_UP)
 
   /** Per-key co-process: fold control rows into the rule state, sweep
     * data rows in (ts, id) order against the latest rule at or before

@@ -1,13 +1,13 @@
 package streamline.stream
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   Trigger}
 import streamline.Q
+import streamline.batch.Cep.{CepEv, Pattern}
+import streamline.util.Det.dec4
 
 /** §2.9 keyed state + timers surface — the Flink KeyedProcessFunction /
   * ValueState equivalent: `flatMapGroupsWithState` with a typed
@@ -19,15 +19,17 @@ import streamline.Q
   * row per key is selected by the monotone event counter, so the query
   * is correct even if AvailableNow splits the input into several
   * micro-batches (each key's updates strictly increase in n_events).
+  *
+  * The event-time running folds (q_stream_over, q_stream_zscore,
+  * q_stream_attrib) are [[SealedFold]] patterns run by the one
+  * sealed-replay operator, `CepStream.update`; the other operators
+  * here fold their rows as they arrive.
   */
 object Stateful {
 
   case class EvRow(user_id: Long, value: Double)
   case class UState(n: Long, sum: BigDecimal)
   case class UOut(user_id: Long, n_events: Long, sum_val: Double)
-
-  private def dec4(v: Double): BigDecimal =
-    BigDecimal(v).setScale(4, RoundingMode.HALF_UP)
 
   private def updateUser(uid: Long, rows: Iterator[EvRow],
                          state: GroupState[UState]): Iterator[UOut] = {
@@ -459,75 +461,40 @@ object Stateful {
     GROUP BY user_id, rn // 5
     ORDER BY user_id, win_id"""
 
-  case class OvRow(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
-                   value: Double) {
-    /** Exact µs from the Timestamp's ms + nanos (same recovery as
-      * CepStream.CepRow). */
-    def tsUs: Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+  /** A keyed event-time fold with nothing to expire, one row per sealed
+    * event in (user_id, event_id) order. [[CepStream.twin]] runs it:
+    * each key's arrivals are buffered until the watermark seals them,
+    * then replayed in (ts, id) order, so on finite input the result is
+    * the batch query restricted to rows the final watermark sealed —
+    * later rows sort strictly after, so sealed prefixes are final and
+    * per-element append emission is sound. */
+  private[streamline] abstract class SealedFold[S, O] extends Pattern[S, O] {
+    def expire(s: S, user: Long, t: Long): (S, Seq[O]) = (s, Nil)
+    def nextExpiry(s: S): Option[Long] = None
+    def project(m: DataFrame): DataFrame = m.orderBy("user_id", "event_id")
   }
-  /** Above-watermark suffix + the O(1) running accumulator. */
-  case class OvBuf(buf: List[(Long, Long, Double)], // (ts_us, event_id, value)
-                   n: Long, sum: BigDecimal)
+
+  /** The O(1) running accumulator. */
+  case class OvSt(n: Long, sum: BigDecimal)
   case class OvOut(user_id: Long, event_id: Long, running_n: Long,
                    running_sum: Double)
 
-  /** Per-key event-time OVER aggregation — the Flink SQL unbounded
-    * over-window on a stream (upstream `flink-table/.../runtime/over/
-    * RowTimeUnboundedOverProcessFunction`): buffer arrivals until the
-    * watermark passes them, then feed them to the running accumulator
-    * in (ts, id) order, emitting ONE ROW PER ELEMENT carrying the
-    * aggregate over that element's full event-time prefix. The buffer
-    * is bounded by the watermark delay; the accumulator is O(1) per
-    * key and lives for the key's lifetime — exactly Flink's
-    * over-window state shape (production deployments bound idle keys
-    * with state TTL / idle-state retention; a finite harness input
-    * doesn't need it). */
-  private[streamline] def updateOver(uid: Long, rows: Iterator[OvRow],
-      state: GroupState[OvBuf]): Iterator[OvOut] = {
-    val prev = state.getOption.getOrElse(OvBuf(Nil, 0L, BigDecimal(0)))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.map(r => (r.tsUs, r.event_id, r.value)))
-      .sortBy { case (t, id, _) => (t, id) }
-    val (ready, future) = all.partition(_._1 <= wmUs)
-    var n = prev.n
-    var sum = prev.sum
-    val out = ready.map { case (_, id, v) =>
-      n += 1; sum += dec4(v)
-      OvOut(uid, id, n, sum.toDouble)
-    }
-    state.update(OvBuf(future, n, sum))
-    // Drain by pure watermark progress: with a non-empty buffer, fire
-    // just above the earliest buffered event (timers fire on strict <;
-    // clamped above the current watermark). An empty buffer needs no
-    // timer — the accumulator is passive until the next arrival.
-    future.headOption.foreach { case (t, _, _) =>
-      state.setTimeoutTimestamp(math.max(t / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
   /** q_stream_over — `sum/count OVER (PARTITION BY user ORDER BY ts
-    * ROWS UNBOUNDED PRECEDING)` on the unbounded event stream. Spark's
-    * analytic windows are batch-only; the streaming form is the keyed
-    * buffer-and-replay operator above. On finite input the result is
-    * the batch OVER restricted to rows the final watermark sealed
-    * (later rows sort strictly after, so sealed prefixes are final —
-    * which is why per-element append emission is sound). */
-  private def streamOver(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val updates = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"ts", $"value")
-      .as[OvRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(updateOver)
-      .toDF()
-    Streams.runToTable(spark, "over", "append", updates)
-      .orderBy($"user_id", $"event_id")
+    * ROWS UNBOUNDED PRECEDING)` on the unbounded event stream, the
+    * Flink SQL unbounded over-window (upstream `flink-table/.../
+    * runtime/over/RowTimeUnboundedOverProcessFunction`). Spark's
+    * analytic windows are batch-only. Each sealed element emits ONE
+    * ROW carrying the aggregate over its full event-time prefix. The
+    * accumulator is O(1) per key and lives for the key's lifetime —
+    * exactly Flink's over-window state shape (production deployments
+    * bound idle keys with state TTL / idle-state retention; a finite
+    * harness input doesn't need it). */
+  private[streamline] object Over extends SealedFold[OvSt, OvOut] {
+    def empty: OvSt = OvSt(0L, BigDecimal(0))
+    def step(s: OvSt, e: CepEv): (OvSt, Seq[OvOut]) = {
+      val next = OvSt(s.n + 1, s.sum + dec4(e.value))
+      (next, Seq(OvOut(e.user_id, e.event_id, next.n, next.sum.toDouble)))
+    }
   }
 
   /** Oracle: the batch window function over the watermark-sealed rows;
@@ -548,75 +515,43 @@ object Stateful {
     FROM e WHERE tsu <= (SELECT w FROM wm)
     ORDER BY user_id, event_id"""
 
-  case class ZsRow(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
-                   value: Double) {
-    def tsUs: Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-  }
-  /** Above-watermark suffix + the last ≤20 sealed scaled values
-    * (oldest first) — the trailing baseline ring. */
-  case class ZsBuf(buf: List[(Long, Long, Double)], ring: List[Long])
+  /** The last ≤20 sealed scaled values (oldest first) — the trailing
+    * baseline ring. */
+  case class ZsSt(ring: List[Long])
   case class ZsOut(user_id: Long, event_id: Long, v: Long, n: Long,
                    s: Long, dev2n2: Long, var9n2: Long)
 
-  /** Streaming twin of q_win_zscore (batch Windows.scala) — per-key
-    * event-time rolling 3σ anomaly flags on the unbounded stream: the
-    * q_stream_over buffer-and-replay shape (arrivals buffered until
-    * the watermark seals them, then replayed in (ts, id) order), with
-    * the O(1) accumulator replaced by a 20-slot ring of the trailing
-    * sealed values. Each sealed reading is tested against the ring
-    * BEFORE joining it (current row excluded — the prior-baseline
-    * form), with the identical pure-INTEGER cross-multiplication
-    * (n·v − s)² > 9·(n·q − s²) as the batch twin, so the emitted rows
-    * are exactly the batch query's on the sealed prefix. State is the
-    * watermark-bounded buffer + 20 longs per key — O(1) per key. */
-  private[streamline] def updateZscore(uid: Long, rows: Iterator[ZsRow],
-      state: GroupState[ZsBuf]): Iterator[ZsOut] = {
-    val prev = state.getOption.getOrElse(ZsBuf(Nil, Nil))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.map(r => (r.tsUs, r.event_id, r.value)))
-      .sortBy { case (t, id, _) => (t, id) }
-    val (ready, future) = all.partition(_._1 <= wmUs)
-    var ring = prev.ring
-    val out = ready.flatMap { case (_, id, value) =>
+  /** q_stream_zscore, streaming twin of q_win_zscore (batch
+    * Windows.scala) — per-key event-time rolling 3σ anomaly flags: the
+    * [[Over]] fold with the accumulator replaced by a 20-slot ring of
+    * the trailing sealed values. Each sealed reading is tested against
+    * the ring BEFORE joining it (current row excluded — the
+    * prior-baseline form), with the identical pure-INTEGER
+    * cross-multiplication (n·v − s)² > 9·(n·q − s²) as the batch twin,
+    * so the emitted rows are exactly the batch query's on the sealed
+    * prefix. State is the watermark-bounded buffer + 20 longs per
+    * key. */
+  private[streamline] object Zscore extends SealedFold[ZsSt, ZsOut] {
+    def empty: ZsSt = ZsSt(Nil)
+    def step(st: ZsSt, e: CepEv): (ZsSt, Seq[ZsOut]) = {
       // HALF_UP (away from zero), matching SQL round() and the batch
       // twin q_win_zscore — Scala math.round is half-toward-+∞, which
       // diverges on negative exact .00005 ties (ADVICE r15)
-      val v = BigDecimal(value * 10000)
+      val v = BigDecimal(e.value * 10000)
         .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
-      val res =
+      val ring = st.ring
+      val flag =
         if (ring.length == 20) {
           val s = ring.sum
           val q = ring.map(x => x * x).sum
           val dev2 = (20L * v - s) * (20L * v - s)
           val var9 = 9L * (20L * q - s * s)
-          if (dev2 > var9) Some(ZsOut(uid, id, v, 20L, s, dev2, var9))
-          else None
-        } else None
-      ring = (ring :+ v).takeRight(20)
-      res
+          if (dev2 > var9)
+            Seq(ZsOut(e.user_id, e.event_id, v, 20L, s, dev2, var9))
+          else Nil
+        } else Nil
+      (ZsSt((ring :+ v).takeRight(20)), flag)
     }
-    state.update(ZsBuf(future, ring))
-    future.headOption.foreach { case (t, _, _) =>
-      state.setTimeoutTimestamp(math.max(t / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  private def streamZscore(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val updates = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"ts", $"value")
-      .as[ZsRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(updateZscore)
-      .toDF()
-    Streams.runToTable(spark, "zscore", "append", updates)
-      .orderBy($"user_id", $"event_id")
   }
 
   /** Oracle: the batch trailing-20 window restricted to
@@ -642,66 +577,34 @@ object Stateful {
     FROM f WHERE n = 20 AND (n*v - s)*(n*v - s) > 9*(n*q - s*s)
     ORDER BY user_id, event_id"""
 
-  case class AtRow(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
-                   event_type: String) {
-    def tsUs: Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-  }
-  /** Above-watermark suffix + the latest SEALED click's µs (MinValue
-    * when the user has no sealed click yet). */
-  case class AtBuf(buf: List[(Long, Long, String)], lastClickUs: Long)
+  /** The latest SEALED click's µs (MinValue when the user has no
+    * sealed click yet). */
+  case class AtSt(lastClickUs: Long)
   case class AtOut(user_id: Long, event_id: Long, day: Long, attr: Long)
 
-  /** Streaming twin of q_win_attrib's per-purchase attribution step —
-    * last-touch attribution on the live stream: the q_stream_over
-    * buffer-and-replay shape with the accumulator replaced by ONE
-    * long per key (the latest sealed click's µs). Each sealed
-    * purchase emits its day and whether a click preceded it within
-    * the 7-day lookback — BEFORE the row itself can update state
-    * (purchases don't attribute to themselves), clicks update the
-    * carried µs after emission, identical to the batch window's
-    * 1-PRECEDING frame. Emitted rows are exactly the batch
-    * attribution rows on the sealed prefix; the day rollup stays a
-    * downstream batch agg (foreachBatch upsert in production). */
-  private[streamline] def updateAttrib(uid: Long, rows: Iterator[AtRow],
-      state: GroupState[AtBuf]): Iterator[AtOut] = {
-    val prev = state.getOption.getOrElse(AtBuf(Nil, Long.MinValue))
-    val wmMs = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }
-    val wmUs = wmMs * 1000L
-    val all = (prev.buf ++ rows.map(r => (r.tsUs, r.event_id, r.event_type)))
-      .sortBy { case (t, id, _) => (t, id) }
-    val (ready, future) = all.partition(_._1 <= wmUs)
-    var lastClick = prev.lastClickUs
-    val out = ready.flatMap { case (us, id, typ) =>
-      val res = if (typ == "purchase") {
-        val attr = lastClick != Long.MinValue && us - lastClick <= 604800000000L
-        Some(AtOut(uid, id,
-          math.floor(us.toDouble / 86400000000.0).toLong,
-          if (attr) 1L else 0L))
-      } else None
-      if (typ == "click") lastClick = us
-      res
+  /** q_stream_attrib, streaming twin of q_win_attrib's per-purchase
+    * attribution step — last-touch attribution on the live stream: the
+    * [[Over]] fold with the accumulator replaced by ONE long per key.
+    * Each sealed purchase emits its day and whether a click preceded
+    * it within the 7-day lookback — BEFORE the row itself can update
+    * state (purchases don't attribute to themselves), clicks update
+    * the carried µs after emission, identical to the batch window's
+    * 1-PRECEDING frame. Emitted rows are exactly the batch attribution
+    * rows on the sealed prefix; the day rollup stays a downstream
+    * batch agg (foreachBatch upsert in production). */
+  private[streamline] object Attrib extends SealedFold[AtSt, AtOut] {
+    def empty: AtSt = AtSt(Long.MinValue)
+    def step(st: AtSt, e: CepEv): (AtSt, Seq[AtOut]) = {
+      val out =
+        if (e.event_type == "purchase") {
+          val attr = st.lastClickUs != Long.MinValue &&
+            e.ts_us - st.lastClickUs <= 604800000000L
+          Seq(AtOut(e.user_id, e.event_id,
+            math.floor(e.ts_us.toDouble / 86400000000.0).toLong,
+            if (attr) 1L else 0L))
+        } else Nil
+      (if (e.event_type == "click") AtSt(e.ts_us) else st, out)
     }
-    state.update(AtBuf(future, lastClick))
-    future.headOption.foreach { case (t, _, _) =>
-      state.setTimeoutTimestamp(math.max(t / 1000L + 1L, wmMs + 1L))
-    }
-    out.iterator
-  }
-
-  private def streamAttrib(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val updates = Streams.eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", $"event_id", $"ts", $"event_type")
-      .as[AtRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(updateAttrib)
-      .toDF()
-    Streams.runToTable(spark, "attrib", "append", updates)
-      .orderBy($"user_id", $"event_id")
   }
 
   /** Oracle: the batch attribution restricted to watermark-sealed
@@ -735,14 +638,11 @@ object Stateful {
   case class DlOut(user_id: Long, event_id: Long, ts_us: Long,
                    event_type: String, value: Double)
 
-  private def dlUs(t: java.sql.Timestamp): Long =
-    t.getTime / 1000 * 1000000 + t.getNanos / 1000
-
   private[streamline] def updateDedupLast(uid: Long, rows: Iterator[DlRow],
       state: GroupState[DlState]): Iterator[DlOut] = {
     var best = state.getOption.getOrElse(DlState(Long.MinValue, Long.MinValue, "", 0.0))
     rows.foreach { r =>
-      val us = dlUs(r.ts)
+      val us = CepStream.micros(r.ts)
       if (us > best.tsUs || (us == best.tsUs && r.event_id > best.event_id))
         best = DlState(r.event_id, us, r.event_type, r.value)
     }
@@ -1198,9 +1098,9 @@ object Stateful {
     Q("q_stream_tws_ttl", streamTwsTtl _, streamStatefulSql),
     Q("q_stream_dedup_last", streamDedupLast _, streamDedupLastSql),
     Q("q_stream_stateful", streamStateful _, streamStatefulSql),
-    Q("q_stream_over", streamOver _, streamOverSql),
-    Q("q_stream_zscore", streamZscore _, streamZscoreSql),
-    Q("q_stream_attrib", streamAttrib _, streamAttribSql),
+    CepStream.twin("q_stream_over", Over, streamOverSql),
+    CepStream.twin("q_stream_zscore", Zscore, streamZscoreSql),
+    CepStream.twin("q_stream_attrib", Attrib, streamAttribSql),
     Q("q_stream_count_window", streamCountWindow _, streamCountWindowSql),
     Q("q_stream_funnel", streamFunnel _,
       streamline.batch.Aggregates.aggFunnelSql),

@@ -108,10 +108,8 @@ object Streams {
     * progress. `await` is the wait between start and cleanup; a query
     * still active after it is stopped.
     *
-    * Checkpoint: by default a JVM-unique directory on the fast
-    * ephemeral root (Knobs.fastTmp: every micro-batch fsyncs its
-    * offset/commit WAL and state files, which rides the throttled
-    * block device otherwise), deleted afterwards — a REUSED path would
+    * Checkpoint: by default a JVM-unique directory under
+    * Knobs.fastTmp, deleted afterwards — a REUSED path would
     * replay committed offsets and silently emit nothing, and a query
     * given no location would leave a directory under the session's
     * `spark.sql.streaming.checkpointLocation` per execution. A caller

@@ -24,6 +24,11 @@ object Det {
   /** Exact fixed-point literal (e.g. the `1` in `1 - discount`). */
   def decLit(v: Int): Column = lit(v).cast(DecimalType(18, 4))
 
+  /** One double quantized like `CAST(x AS DECIMAL(18,4))` (HALF_UP to
+    * 4 dp): [[dec]] for values folded row by row in typed state. */
+  def dec4(v: Double): BigDecimal =
+    BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+
   /** Final output conversion for an exact decimal aggregate. */
   def asDouble(c: Column): Column = c.cast("double")
 

@@ -114,45 +114,13 @@ object Knobs {
     * exact verify join keeps correctness either way. */
   val bloomShinglesPerDoc: Long = 1024L
 
-  /** Fast ephemeral root for single-node harness I/O — shuffle local
-    * dirs and streaming checkpoints. The harness host intermittently
-    * throttles block-device writes to ~40 MB/s (measured), which
-    * inflates every shuffle write and micro-batch checkpoint fsync by
-    * 2-4×; tmpfs takes that variance out. This is HARNESS posture, not
-    * cluster posture: on a real deployment spark.local.dir stays on
-    * instance storage and checkpoints go to reliable shared storage —
-    * both are plain confs this helper never overrides
-    * (`graft.fastTmp` = explicit override; unset ⇒ /dev/shm when
-    * writable, else java.io.tmpdir). */
-  /** tmpfs is RAM: scratch placed there competes with the JVM heap and
-    * the OS page cache. The auto-pick therefore requires
-    * [[fastTmpMinFreeBytes]] of usable space on /dev/shm and falls
-    * back to java.io.tmpdir below it. Resolved ONCE per JVM so a run whose
-    * scratch grows never splits across two roots mid-flight; an
-    * explicit `graft.fastTmp` is honored unconditionally. Durability
-    * note: tmpfs does not survive a host restart — the recovery
-    * witnesses exercise stop/restart of the QUERY within one host
-    * lifetime, which tmpfs supports; a deployment that needs
-    * restart-durable checkpoints points `graft.fastTmp` (or the plain
-    * Spark confs) at reliable shared storage. */
-  private[streamline] def pickFastTmp(shm: java.io.File,
-                                minFree: Long): Option[String] =
-    if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= minFree)
-      Some(shm.getPath + "/graft")
-    else None
-
-  /** 16 GiB: several times the harness's worst observed scratch
-    * footprint, so tmpfs scratch never crowds out the heap. */
-  private val fastTmpMinFreeBytes: Long = 16L << 30
-
-  private lazy val autoTmp: String =
-    pickFastTmp(new java.io.File("/dev/shm"), fastTmpMinFreeBytes)
-      .getOrElse(sys.props("java.io.tmpdir"))
-
+  /** Root for single-node scratch I/O — shuffle local dirs, streaming
+    * checkpoints and staged sources: `graft.fastTmp` when set, else
+    * java.io.tmpdir. A deployment points it (or the plain Spark confs
+    * this helper never overrides) at instance or shared storage. */
   def fastTmp: String = {
-    val pick = sys.props.get("graft.fastTmp").getOrElse(autoTmp)
-    val f = new java.io.File(pick)
-    f.mkdirs()
+    val pick = sys.props.getOrElse("graft.fastTmp", sys.props("java.io.tmpdir"))
+    new java.io.File(pick).mkdirs()
     pick
   }
 }

@@ -5,20 +5,9 @@ package streamline.util
   * at different scale factors on one machine never clobber each
   * other's files.
   *
-  * Rooted at the fast ephemeral root ([[Knobs.fastTmp]] — tmpfs when
-  * available, `graft.fastTmp` to override, plain java.io.tmpdir
-  * otherwise): the harness host intermittently throttles block-device
-  * writes to ~40 MB/s, and the explicit per-witness scratch roots
-  * (sink rewrites, staged sources, streaming checkpoints passed as
-  * `checkpointLocation`) were the one I/O class still riding it after
-  * Bench moved `spark.local.dir` and the session checkpoint default
-  * to tmpfs — observed as the throttled-window 3–6× readings on
-  * exactly the state-heavy witnesses (BENCH_r20:
-  * q_stream_state_rewrite 15.4 s vs a 3.9 s quiet min). Same
-  * harness-vs-cluster posture as Knobs.fastTmp: a deployment stages
-  * scratch/checkpoints on reliable shared storage by pointing
-  * `graft.fastTmp` (or leaving tmpfs absent), nothing here overrides
-  * that choice.
+  * Rooted at [[Knobs.fastTmp]] (`graft.fastTmp`, else java.io.tmpdir);
+  * a deployment stages scratch and checkpoints on reliable shared
+  * storage by pointing `graft.fastTmp` there.
   *
   * Key contract: a scratch name must encode every knob that shapes
   * what is written under it (shard, bucket and band counts — e.g.

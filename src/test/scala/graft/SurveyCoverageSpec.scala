@@ -98,4 +98,33 @@ class SurveyCoverageSpec extends AnyFunSuite {
       .map(_.map(_._2).sorted.mkString(" = ")).toSeq.sorted
     assert(copies.isEmpty, s"oracle text declared twice: ${copies.mkString("; ")}")
   }
+
+  /** One keyed event-time operator: every sealed-replay fold runs
+    * through `CepStream.twin`, so its watermark and timer policy lives
+    * in one place. The only other event-time timer is q_stream_timeout's
+    * idle flush. Code lines only; each hit is named by its enclosing
+    * `def`. */
+  test("EventTimeTimeout is used only by CepStream.twin and the idle flush") {
+    import scala.jdk.CollectionConverters._
+    val defLine = "^\\s*(?:private(?:\\[\\w+\\])?\\s+)?def\\s+(\\w+)".r
+    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+    val sites = try files.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+        lines.indices.filter { i =>
+          val t = lines(i).trim
+          t.contains("GroupStateTimeout.EventTimeTimeout") &&
+            !t.startsWith("*") && !t.startsWith("/")
+        }.map { i =>
+          val enclosing = (i to 0 by -1).iterator
+            .flatMap(j => defLine.findFirstMatchIn(lines(j)).map(_.group(1)))
+            .nextOption().getOrElse("?")
+          s"${p.getFileName}:$enclosing"
+        }
+      } finally files.close()
+    assert(sites.sorted ==
+      Seq("CepStream.scala:twin", "Stateful.scala:streamTimeout"),
+      s"event-time timers outside the sealed-replay operator: $sites")
+  }
 }

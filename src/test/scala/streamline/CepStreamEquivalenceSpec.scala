@@ -10,6 +10,7 @@ import streamline.batch.Cep
 import streamline.batch.Cep.{CepEv, Pattern}
 import streamline.stream.CepStream
 import streamline.stream.CepStream.CepState
+import streamline.stream.Stateful
 
 /** Randomized incremental ≡ batch equivalence for EVERY streaming CEP
   * operator: random event sequences, random monotone watermark
@@ -28,15 +29,18 @@ class CepStreamEquivalenceSpec extends SparkSuite {
 
   // Single-key sequences: the operators are per-key, so per-key
   // equivalence is the whole property. ts ≥ 1 min keeps every event
-  // above the first watermark step.
+  // above the first watermark step. Values are mostly flat with rare
+  // spikes, so the z-score ring both fills and flags.
   private def evsGen: Gen[List[CepEv]] = for {
     n <- Gen.choose(20, 60)
     evs <- Gen.listOfN(n, for {
       t <- Gen.oneOf("click", "purchase", "view")
       ts <- Gen.choose(1L, 25L).map(_ * MIN_US)
-    } yield (t, ts))
-  } yield evs.zipWithIndex.map { case ((t, ts), i) =>
-    CepEv(1L, i.toLong + 1, t, ts)
+      v <- Gen.frequency(12 -> Gen.const(1.0),
+        1 -> Gen.choose(-40000L, 40000L).map(_ / 10000.0))
+    } yield (t, ts, v))
+  } yield evs.zipWithIndex.map { case ((t, ts, v), i) =>
+    CepEv(1L, i.toLong + 1, t, ts, v)
   }
 
   /** Drive an updater across batches of (watermarkMs, arrivals). */
@@ -96,35 +100,45 @@ class CepStreamEquivalenceSpec extends SparkSuite {
 
   // A match is decided when its purchase seals; absence, once the
   // watermark (or a sealed later event) proves the window closed without
-  // a purchase — strict bound.
-  private val twins = Seq[Twin[_, _]](
-    Twin("kleene", Cep.kleene,
-      (m: Cep.CepMatch, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("followedBy", Cep.followedBy,
-      (m: Cep.CepRel, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("followedByAny", Cep.followedByAny,
-      (m: Cep.CepRel, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("times", Cep.times,
-      (m: Cep.CepTimes, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("optional", Cep.optional,
-      (m: Cep.CepOpt, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("absence", Cep.absence,
-      (m: Cep.CepAbs, wm: Long) => m.click_ts_us + Cep.absence.withinUs < wm),
-    Twin("greedy", Cep.greedy,
-      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("noskip", Cep.noSkip,
-      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("skip_to_next", Cep.skipToNext,
-      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("skip_past", Cep.skipPast,
-      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
-    Twin("until", Cep.until,
-      (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm))
+  // a purchase — strict bound; a running fold's row, when the event that
+  // emitted it seals.
+  private def twins(evs: List[CepEv]): Seq[Twin[_, _]] = {
+    val tsOf = evs.map(e => e.event_id -> e.ts_us).toMap
+    Seq[Twin[_, _]](
+      Twin("kleene", Cep.kleene,
+        (m: Cep.CepMatch, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("followedBy", Cep.followedBy,
+        (m: Cep.CepRel, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("followedByAny", Cep.followedByAny,
+        (m: Cep.CepRel, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("times", Cep.times,
+        (m: Cep.CepTimes, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("optional", Cep.optional,
+        (m: Cep.CepOpt, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("absence", Cep.absence,
+        (m: Cep.CepAbs, wm: Long) => m.click_ts_us + Cep.absence.withinUs < wm),
+      Twin("greedy", Cep.greedy,
+        (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("noskip", Cep.noSkip,
+        (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("skip_to_next", Cep.skipToNext,
+        (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("skip_past", Cep.skipPast,
+        (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("until", Cep.until,
+        (m: Cep.CepRun, wm: Long) => m.purchase_ts_us <= wm),
+      Twin("over", Stateful.Over,
+        (m: Stateful.OvOut, wm: Long) => tsOf(m.event_id) <= wm),
+      Twin("zscore", Stateful.Zscore,
+        (m: Stateful.ZsOut, wm: Long) => tsOf(m.event_id) <= wm),
+      Twin("attrib", Stateful.Attrib,
+        (m: Stateful.AtOut, wm: Long) => tsOf(m.event_id) <= wm))
+  }
 
   private def checkAll(seed: Long, wmMaxMin: Long): Unit = {
     val evs = evsGen(Gen.Parameters.default, Seed(seed)).get
     val sched = schedule(evs, seed * 31 + wmMaxMin, wmMaxMin)
-    twins.foreach(_.check(evs, sched, wmMaxMin * MIN_US,
+    twins(evs).foreach(_.check(evs, sched, wmMaxMin * MIN_US,
       s"seed=$seed wmMax=$wmMaxMin"))
   }
 

@@ -27,6 +27,7 @@ class CepStreamIntegrationSpec extends SparkSuite {
     val name = s"cep_it_${System.identityHashCode(input)}"
     val matches = input.toDS()
       .toDF("user_id", "event_id", "event_type", "ts")
+      .withColumn("value", org.apache.spark.sql.functions.lit(0.0))
       .withWatermark("ts", "10 minutes")
       .as[CepStream.CepRow]
       .groupByKey(_.user_id)

@@ -52,6 +52,14 @@ class DedupLastSpec extends SparkSuite {
     assert(oneShot.event_id == 9L) // ts=3000 tie -> larger id wins
   }
 
+  test("pre-1970 fractional-second timestamps keep their (ts, id) order") {
+    // -1.5 s and -1.0 s: a truncating ms→s conversion puts the earlier
+    // row at -0.5 s, after the later one.
+    val rows = Seq(row(1, -1500, "view", 1.0), row(2, -1000, "click", 2.0))
+    assert(runBatches(Seq(rows)) == DlState(2L, -1000000L, "click", 2.0))
+    assert(runBatches(Seq(rows.reverse)).event_id == 2L)
+  }
+
   test("streaming keep-last equals the batch argmax") {
     val got = graft.SparkEntry.queries("q_stream_dedup_last")(spark, sfDir)
       .select(col("user_id"), col("last_event_id")).collect()

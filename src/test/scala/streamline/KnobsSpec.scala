@@ -122,24 +122,10 @@ class KnobsSpec extends SparkSuite {
     } finally stream.Streams.deleteRec(stage)
   }
 
-  test("fast-tmp auto-pick guards tmpfs headroom") {
-    // tmpfs is RAM — the auto-pick must refuse /dev/shm when its free
-    // space is under the floor (fallback to java.io.tmpdir) and accept
-    // it when above; a missing/unwritable dir also falls back.
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      assert(Knobs.pickFastTmp(shm, 1L) == Some("/dev/shm/graft"))
-      assert(Knobs.pickFastTmp(shm, Long.MaxValue).isEmpty)
-    }
-    assert(Knobs.pickFastTmp(new java.io.File("/nonexistent_graft"), 1L)
-      .isEmpty)
-  }
-
   test("scratch roots at the fast ephemeral dir") {
     // The explicit per-witness scratch (sink rewrites, staged sources,
-    // checkpointLocation roots) must share Bench's fast-tmp posture —
-    // a regression back to bare java.io.tmpdir puts every staged write
-    // and state checkpoint back on the throttled block device.
+    // checkpointLocation roots) must share the session's root, so one
+    // `graft.fastTmp` moves every staged write and state checkpoint.
     assert(Scratch.root == Knobs.fastTmp)
     assert(Scratch.dir("x", "/d").startsWith(Knobs.fastTmp + "/"))
   }

@@ -2,8 +2,9 @@ package streamline
 
 import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 import graft.SparkSuite
-import streamline.stream.Stateful
-import streamline.stream.Stateful.{ZsBuf, ZsOut, ZsRow}
+import streamline.stream.CepStream
+import streamline.stream.CepStream.{CepRow, CepState}
+import streamline.stream.Stateful.{ZsOut, ZsSt, Zscore}
 
 /** Incremental semantics of the streaming rolling-z-score operator
   * (SURVEY.md §2.9 stream form of q_win_zscore): watermark-gated
@@ -14,7 +15,9 @@ class ZscoreStreamSpec extends SparkSuite {
   private val MIN_MS = 60L * 1000
 
   private def row(id: Long, m: Long, v: Double) =
-    ZsRow(1L, id, new java.sql.Timestamp(m * MIN_MS), v)
+    CepRow(1L, id, "view", new java.sql.Timestamp(m * MIN_MS), v).toEv
+
+  private type ZsBuf = CepState[ZsSt]
 
   private def state(prev: Option[ZsBuf], wmMs: Long): TestGroupState[ZsBuf] =
     TestGroupState.create[ZsBuf](
@@ -29,18 +32,18 @@ class ZscoreStreamSpec extends SparkSuite {
   test("a spike against a constant 20-reading baseline flags exactly") {
     val st = state(None, wmMs = 100 * MIN_MS)
     val warm = (1L to 20L).map(i => row(i, i, 1.0))
-    val out = Stateful.updateZscore(1L,
+    val out = CepStream.update(Zscore)(1L,
       (warm :+ row(21, 21, 2.0)).iterator, st).toList
     // v=20000 vs ring of 20×10000: dev2=(20·20000−200000)²=4e10, var9=0
     assert(out ==
       List(ZsOut(1L, 21, 20000L, 20L, 200000L, 40000000000L, 0L)))
     // the spike itself joined the ring afterwards
-    assert(st.get.ring.last == 20000L && st.get.ring.length == 20)
+    assert(st.get.st.ring.last == 20000L && st.get.st.ring.length == 20)
   }
 
   test("warmup rows (ring < 20) never flag, whatever the deviation") {
     val st = state(None, wmMs = 100 * MIN_MS)
-    val out = Stateful.updateZscore(1L,
+    val out = CepStream.update(Zscore)(1L,
       ((1L to 19L).map(i => row(i, i, 1.0)) :+ row(20, 20, 99.0)).iterator,
       st).toList
     assert(out.isEmpty)
@@ -48,20 +51,20 @@ class ZscoreStreamSpec extends SparkSuite {
 
   test("rows above the watermark buffer and do not enter the ring") {
     val st = state(None, wmMs = 5 * MIN_MS)
-    val out = Stateful.updateZscore(1L,
+    val out = CepStream.update(Zscore)(1L,
       Iterator(row(1, 1, 1.0), row(2, 50, 2.0)), st).toList
     assert(out.isEmpty)
-    assert(st.get.ring == List(10000L), "only the sealed row joined")
-    assert(st.get.buf.map(_._2) == List(2L))
+    assert(st.get.st.ring == List(10000L), "only the sealed row joined")
+    assert(st.get.buf.map(_.event_id) == List(2L))
     assert(st.getTimeoutTimestampMs.get == 50 * MIN_MS + 1)
   }
 
   test("the ring carries across batches (baseline built in batch 1)") {
     val st1 = state(None, wmMs = 100 * MIN_MS)
-    Stateful.updateZscore(1L,
+    CepStream.update(Zscore)(1L,
       (1L to 20L).map(i => row(i, i, 1.0)).iterator, st1).toList
     val st2 = state(Some(st1.get), wmMs = 200 * MIN_MS)
-    val out = Stateful.updateZscore(1L,
+    val out = CepStream.update(Zscore)(1L,
       Iterator(row(21, 101, 3.0)), st2).toList
     assert(out.map(o => (o.event_id, o.v)) == List((21L, 30000L)),
       "batch-2 spike must be judged against batch-1's ring")
