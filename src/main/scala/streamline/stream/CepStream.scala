@@ -30,9 +30,12 @@ import streamline.batch.Cep.{CepEv, Pattern}
   * oracle below. The split into micro-batches does not change it.
   *
   * [[update]] is the engine's one keyed event-time operator: the running
-  * folds of q_stream_over, q_stream_zscore and q_stream_attrib
-  * (Stateful.scala) are Patterns too, built through [[twin]], so the
-  * watermark and timer policy lives here only.
+  * folds of q_stream_over, q_stream_zscore, q_stream_attrib and
+  * q_stream_count_window and the as-of joins of q_join_temporal and
+  * q_stream_connect (Stateful.scala, Connect.scala) are Patterns too,
+  * built through [[twin]], so the watermark and timer policy lives here
+  * only. The one other event-time timer is q_stream_timeout's idle
+  * flush.
   */
 object CepStream {
 

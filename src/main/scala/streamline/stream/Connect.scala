@@ -2,9 +2,9 @@ package streamline.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import streamline.Q
-import streamline.util.Det.dec4
+import streamline.batch.Cep.CepEv
+import streamline.util.Det.{dec4, tsSec}
 
 /** §2.16 connected streams / broadcast-state pattern.
   *
@@ -14,25 +14,26 @@ import streamline.util.Det.dec4
   * of rule updates and a DATA stream of records flow into one keyed
   * operator; each data record is evaluated against the latest rule in
   * effect at its event time. Structured Streaming has no two-input
-  * keyed operator, so the Spark-native composition is: tag each
-  * source, union them (legal because the tag carries both schemas),
-  * key by the shared key, and run `flatMapGroupsWithState` whose state
-  * holds the rules still reachable by future data under the event-time
-  * watermark — one sealed rule + those above the watermark — matching
-  * Flink's broadcast-state bound (latest effective rule) once the
-  * watermark passes a rule's publication time.
+  * keyed operator, so the Spark-native composition reads both from one
+  * event stream, keys it by the shared key, and runs the as-of fold
+  * `Stateful.AsOf` through the one sealed-replay operator
+  * (`CepStream.update`): arrivals are buffered until the watermark seals
+  * them, then replayed in (ts, id) order, so a rule delivered in a later
+  * micro-batch than the data it governs still applies.
   *
   * Witness wiring on the events table: `error` events are the control
   * stream (their value = an alert threshold for that user), `view`
   * events are the data stream; a data row becomes an alert when its
   * value exceeds the threshold of the latest rule at or before its
-  * event time.
+  * event time (a rule at the row's own µs applies, whatever its id).
   *
-  * Scale posture: one shuffle on the key; state per key is one sealed
-  * rule plus the rules within the watermark delay (RuleStateBoundSpec
-  * pins this), so state size is O(distinct keys) once the watermark
-  * advances — the property that lets the operator run unbounded. Rule fan-out to all keys (true broadcast) would
-  * replace the keyed union with a `crossJoin(broadcast(rules))` at
+  * Scale posture: one shuffle on the key; state per key is the events
+  * above the watermark, one sealed rule and the data rows held at one µs
+  * (RuleStateBoundSpec pins this) — Flink's broadcast-state bound
+  * (latest effective rule) once the watermark passes a rule's
+  * publication time, so state size is O(distinct keys) as the watermark
+  * advances. Rule fan-out to all keys (true broadcast) would replace the
+  * keyed stream with a `crossJoin(broadcast(rules))` at
   * rule-publication time; the per-key variant here is the general
   * (keyed) form.
   */
@@ -40,83 +41,39 @@ object Connect {
 
   // public: Spark's generated row (de)serializers cannot see private
   // classes.
-  case class CsRow(user_id: Long, ts_us: Long, event_id: Long,
-                   is_ctrl: Boolean, value: Double)
-  case class CsRule(ts_us: Long, rule_id: Long, threshold: Double)
   case class CsOut(user_id: Long, event_id: Long, ts_us: Long,
                    value: Double, rule_id: Long, threshold: Double)
 
-  /** Per-key co-process: fold control rows into the rule state, sweep
-    * data rows in (ts, id) order against the latest rule at or before
-    * each row's time (ties → the rule wins; among same-ts rules the
-    * max id wins, i.e. last publication). Emits alerts only.
-    *
-    * State retention: keeping only the newest rule would be wrong under
-    * multi-batch execution — a data row arriving in a LATER batch with
-    * event time before the newest rule must still match the rule in
-    * effect at its time. The event-time watermark gives the safe prune
-    * bound: any future data row has ts > watermark, so every rule except
-    * the newest one at-or-below the watermark can never be "the latest
-    * rule at or before" a future row's time. Retained state = that one
-    * rule + all rules above the watermark — the minimal correct set,
-    * still bounded because the watermark advances past published rules. */
-  private[streamline] def updateConnect(uid: Long, rows: Iterator[CsRow],
-      state: GroupState[List[CsRule]]): Iterator[CsOut] = {
-    val batch = rows.toList
-    val newRules = batch.filter(_.is_ctrl)
-      .map(r => CsRule(r.ts_us, r.event_id, r.value))
-    val rules = (state.getOption.getOrElse(Nil) ++ newRules)
-      .sortBy(r => (r.ts_us, r.rule_id))
-    val data = batch.filterNot(_.is_ctrl).sortBy(r => (r.ts_us, r.event_id))
-    val out = data.flatMap { d =>
-      rules.takeWhile(r => r.ts_us <= d.ts_us).lastOption.collect {
-        // exact-decimal compare so the alert predicate agrees with the
-        // oracle bit-for-bit on boundary values.
-        case r if dec4(d.value) > dec4(r.threshold) =>
-          CsOut(uid, d.event_id, d.ts_us, d.value, r.rule_id, r.threshold)
-      }
-    }
-    // No watermark configured (unit-test harness) ⇒ 0: prune nothing.
-    val wmUs = (try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => 0L }) * 1000L
-    val (sealed_, live) = rules.partition(_.ts_us <= wmUs)
-    state.update(sealed_.takeRight(1) ::: live)
-    out.iterator
-  }
-
   /** q_stream_connect — the connected-streams witness (control stream
-    * reconfiguring a keyed data stream; see object doc). */
-  private def streamConnect(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val tagged = Streams.eventsStream(spark, dir)
-      .where($"event_type".isin("error", "view"))
-      // The watermark is the rule-state prune bound (see updateConnect);
-      // the column itself is carried on as ts_us.
-      .withWatermark("ts", "10 minutes")
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
-        ($"event_type" === "error").as("is_ctrl"), $"value")
-      .as[CsRow]
-    val alerts = tagged
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(updateConnect)
-      .toDF()
-    Streams.runToTable(spark, "connect", "append", alerts)
-      .select($"user_id", $"event_id",
-        date_trunc("second", timestamp_micros($"ts_us"))
-          .cast("timestamp_ntz").as("ts"),
-        $"value", $"rule_id", $"threshold")
-      .orderBy($"user_id", $"event_id")
+    * reconfiguring a keyed data stream; see object doc). Emits alerts
+    * only; the exact-decimal compare agrees with the oracle bit-for-bit
+    * on boundary values. */
+  private[streamline] object Rules
+      extends Stateful.AsOf[CsOut]("error", "view") {
+    def out(d: CepEv, r: Option[CepEv]): Option[CsOut] =
+      r.filter(r => dec4(d.value) > dec4(r.value)).map(r =>
+        CsOut(d.user_id, d.event_id, d.ts_us, d.value, r.event_id, r.value))
+    def project(m: DataFrame): DataFrame =
+      m.select(col("user_id"), col("event_id"),
+        tsSec(timestamp_micros(col("ts_us"))).as("ts"),
+        col("value"), col("rule_id"), col("threshold"))
+        .orderBy("user_id", "event_id")
   }
 
+  /** Oracle: the as-of rule application restricted to data rows strictly
+    * below the final watermark (a row at the watermark itself is still
+    * held). */
   private val streamConnectSql = """
     WITH c AS (SELECT user_id, event_id AS rule_id,
                  date_trunc('microseconds', ts) AS r_ts,
                  value AS threshold
                FROM events WHERE event_type = 'error'),
+    wm AS (SELECT date_trunc('millisecond', max(ts))
+             - INTERVAL 10 MINUTE AS w FROM events),
     d AS (SELECT user_id, event_id,
             date_trunc('microseconds', ts) AS d_ts, value
-          FROM events WHERE event_type = 'view'),
+          FROM events WHERE event_type = 'view'
+            AND date_trunc('microseconds', ts) < (SELECT w FROM wm)),
     j AS (SELECT d.user_id AS user_id, d.event_id AS event_id, d.d_ts,
             d.value AS value, c.rule_id, c.threshold,
             row_number() OVER (PARTITION BY d.event_id
@@ -257,7 +214,7 @@ object Connect {
     ORDER BY user_id, event_id"""
 
   val all: Seq[Q] = Seq(
-    Q("q_stream_connect", streamConnect _, streamConnectSql),
+    CepStream.twin("q_stream_connect", Rules, streamConnectSql),
     Q("q_stream_connect_broadcast", streamConnectBroadcast _,
       streamConnectBroadcastSql))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   Trigger}
 import streamline.Q
 import streamline.batch.Cep.{CepEv, Pattern}
-import streamline.util.Det.dec4
+import streamline.util.Det.{dec4, tsSec}
 
 /** §2.9 keyed state + timers surface — the Flink KeyedProcessFunction /
   * ValueState equivalent: `flatMapGroupsWithState` with a typed
@@ -20,10 +20,14 @@ import streamline.util.Det.dec4
   * is correct even if AvailableNow splits the input into several
   * micro-batches (each key's updates strictly increase in n_events).
   *
-  * The event-time running folds (q_stream_over, q_stream_zscore,
-  * q_stream_attrib) are [[SealedFold]] patterns run by the one
-  * sealed-replay operator, `CepStream.update`; the other operators
-  * here fold their rows as they arrive.
+  * The event-time keyed folds are Patterns run by the one sealed-replay
+  * operator, `CepStream.update`: the running folds (q_stream_over,
+  * q_stream_zscore, q_stream_attrib, q_stream_count_window) are
+  * [[SealedFold]]s and q_join_temporal is an [[AsOf]] join. Of the other
+  * operators here, q_stream_stateful, q_stream_funnel and
+  * q_stream_dedup_last fold their rows as they arrive, which their
+  * order-free answers allow, and q_stream_timeout flushes idle keys on
+  * its own event-time timer.
   */
 object Stateful {
 
@@ -195,72 +199,42 @@ object Stateful {
              < (SELECT w FROM wm)
     ORDER BY user_id"""
 
-  case class TjRow(user_id: Long, ts_us: Long, event_id: Long,
-                   is_dim: Boolean, value: Double)
-  case class TjVer(ts_us: Long, event_id: Long, value: Double)
   case class TjOut(user_id: Long, p_id: Long, p_ts_us: Long,
                    dim_val: Option[Double], v_id: Option[Long])
-
-  /** Temporal-table join callback — the Flink TemporalRowTimeJoinOperator
-    * shape: per key, buffer dimension versions, and join each probe row
-    * with the latest version at or before its event time (ties → max
-    * event_id). One merged (ts, kind, id) sweep per batch — the same
-    * last-value composition as the batch as-of join, but incremental:
-    * after the batch only the single latest version is retained (the
-    * only one a later in-order probe can need), which is the bounded-
-    * state property; Flink's operator keeps versions until the
-    * watermark passes for out-of-order probes, same bound. */
-  private def updateTj(uid: Long, rows: Iterator[TjRow],
-                       state: GroupState[List[TjVer]]): Iterator[TjOut] = {
-    val batch = rows.toList
-    val newVers = batch.filter(_.is_dim)
-      .map(r => TjVer(r.ts_us, r.event_id, r.value))
-    val vers = (state.getOption.getOrElse(Nil) ++ newVers)
-      .sortBy(v => (v.ts_us, v.event_id))
-    val probes = batch.filterNot(_.is_dim).sortBy(r => (r.ts_us, r.event_id))
-    val out = probes.map { p =>
-      val m = vers.takeWhile(v => v.ts_us <= p.ts_us).lastOption
-      TjOut(uid, p.event_id, p.ts_us, m.map(_.value), m.map(_.event_id))
-    }
-    state.update(vers.takeRight(1))
-    out.iterator
-  }
 
   /** q_join_temporal — versioned-dimension (temporal table) join: an
     * unbounded probe stream joined against a *changing* dimension,
     * each probe seeing the dimension value that was current at its own
-    * event time (Flink 1.7 temporal table functions). `view` events are
-    * the dimension versions (value = the versioned attribute), `purchase`
-    * events the probes. Composed from keyed state — Spark's stream-stream
-    * join has no "latest version" semantics — with state bounded to one
-    * retained version per key. Oracle: the ANSI as-of formulation over
-    * the same two event slices. */
-  private def joinTemporal(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val updates = Streams.eventsStream(spark, dir)
-      .where($"event_type".isin("view", "purchase"))
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
-        ($"event_type" === "view").as("is_dim"), $"value")
-      .as[TjRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(updateTj)
-      .toDF()
-    Streams.runToTable(spark, "temporal", "append", updates)
-      .select($"user_id", $"p_id",
-        date_trunc("second", timestamp_micros($"p_ts_us"))
-          .cast("timestamp_ntz").as("p_ts"),
-        $"dim_val", $"v_id")
-      .orderBy($"user_id", $"p_id")
+    * event time (Flink 1.7 temporal table functions; upstream
+    * TemporalRowTimeJoinOperator). `view` events are the dimension
+    * versions (value = the versioned attribute), `purchase` events the
+    * probes; a probe with no earlier version gets nulls. Spark's
+    * stream-stream join has no "latest version" semantics, so this is
+    * the [[AsOf]] fold, state bounded to one sealed version per key. */
+  private[streamline] object Temporal extends AsOf[TjOut]("view", "purchase") {
+    def out(p: CepEv, v: Option[CepEv]): Option[TjOut] =
+      Some(TjOut(p.user_id, p.event_id, p.ts_us, v.map(_.value),
+        v.map(_.event_id)))
+    def project(m: DataFrame): DataFrame =
+      m.select(col("user_id"), col("p_id"),
+        tsSec(timestamp_micros(col("p_ts_us"))).as("p_ts"),
+        col("dim_val"), col("v_id"))
+        .orderBy("user_id", "p_id")
   }
 
+  /** Oracle: the ANSI as-of formulation over the same two event slices,
+    * restricted to probes strictly below the final watermark (a probe
+    * at the watermark itself is still held, see [[AsOf]]). */
   private val joinTemporalSql = """
-    WITH d AS (SELECT event_id AS v_id, user_id,
+    WITH wm AS (SELECT date_trunc('millisecond', max(ts))
+                  - INTERVAL 10 MINUTE AS w FROM events),
+         d AS (SELECT event_id AS v_id, user_id,
                       date_trunc('microseconds', ts) AS v_ts, value
                FROM events WHERE event_type = 'view'),
          p AS (SELECT event_id AS p_id, user_id,
                       date_trunc('microseconds', ts) AS p_ts
-               FROM events WHERE event_type = 'purchase'),
+               FROM events WHERE event_type = 'purchase'
+                 AND date_trunc('microseconds', ts) < (SELECT w FROM wm)),
          j AS (SELECT p.user_id, p.p_id, p.p_ts, d.value AS dim_val,
                       d.v_id,
                  row_number() OVER (PARTITION BY p.p_id
@@ -312,30 +286,6 @@ object Stateful {
     FROM lenient l LEFT JOIN strict s ON l.w = s.w
     WHERE l.n - coalesce(s.n, 0) > 0
     ORDER BY w_start"""
-
-  case class CwRow(user_id: Long, ts: Long, event_id: Long, value: Double)
-  case class CwState(buf: List[CwRow], nextWin: Long)
-  case class CwOut(user_id: Long, win_id: Long, n: Long, sum_val: Double)
-
-  private val winSize = 5
-
-  /** Per-key count-window fire: buffer rows, emit one aggregate per
-    * COMPLETE window of `winSize` events in (ts, event_id) order —
-    * Flink's `countWindow(n)` semantics (trailing partial windows never
-    * fire). Rows within a batch are sorted before windowing so the
-    * result is scan-order independent. */
-  private def updateCw(uid: Long, rows: Iterator[CwRow],
-                       state: GroupState[CwState]): Iterator[CwOut] = {
-    val prev = state.getOption.getOrElse(CwState(Nil, 0L))
-    val all = (prev.buf ++ rows.toList).sortBy(r => (r.ts, r.event_id))
-    val (complete, rest) = all.splitAt(all.length - all.length % winSize)
-    val outs = complete.grouped(winSize).zipWithIndex.map { case (w, i) =>
-      val sum = w.foldLeft(BigDecimal(0))((a, r) => a + dec4(r.value))
-      CwOut(uid, prev.nextWin + i, winSize.toLong, sum.toDouble)
-    }.toList
-    state.update(CwState(rest, prev.nextWin + outs.length))
-    outs.iterator
-  }
 
   case class FnRow(user_id: Long, ts: Long, event_type: String)
   case class FnState(minSignup: Long, views: List[Long],
@@ -427,40 +377,6 @@ object Stateful {
       .orderBy($"step")
   }
 
-  /** q_stream_count_window — Flink `DataStream.countWindow(5)`: a window
-    * type Spark has no built-in for, composed from keyed state
-    * (`flatMapGroupsWithState`). State holds only the open (partial)
-    * window per key — bounded by winSize rows per key at any moment, so
-    * it scales like any keyed state op. Oracle: complete windows of the
-    * (ts, event_id)-ordered per-key sequence via row_number arithmetic. */
-  private def streamCountWindow(spark: SparkSession,
-                                dir: String): DataFrame = {
-    import spark.implicits._
-    val updates = Streams.eventsStream(spark, dir)
-      .select($"user_id", unix_micros($"ts").as("ts"), $"event_id", $"value")
-      .as[CwRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(updateCw)
-      .toDF()
-    Streams.runToTable(spark, "cw", "append", updates)
-      .orderBy($"user_id", $"win_id")
-  }
-
-  private val streamCountWindowSql = """
-    WITH e AS (SELECT user_id, value, event_id,
-                 date_trunc('microseconds', ts) AS tsu FROM events),
-    o AS (SELECT user_id, value,
-            row_number() OVER (PARTITION BY user_id
-              ORDER BY tsu, event_id) - 1 AS rn,
-            count(*) OVER (PARTITION BY user_id) AS total
-          FROM e)
-    SELECT user_id, rn // 5 AS win_id, count(*) AS n,
-      CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_val
-    FROM o WHERE rn < total - (total % 5)
-    GROUP BY user_id, rn // 5
-    ORDER BY user_id, win_id"""
-
   /** A keyed event-time fold with nothing to expire, one row per sealed
     * event in (user_id, event_id) order. [[CepStream.twin]] runs it:
     * each key's arrivals are buffered until the watermark seals them,
@@ -473,6 +389,46 @@ object Stateful {
     def nextExpiry(s: S): Option[Long] = None
     def project(m: DataFrame): DataFrame = m.orderBy("user_id", "event_id")
   }
+
+  /** The open window: its event count and exact sum, and its index. */
+  case class CwSt(n: Long, sum: BigDecimal, win: Long)
+  case class CwOut(user_id: Long, win_id: Long, n: Long, sum_val: Double)
+
+  /** q_stream_count_window — Flink `DataStream.countWindow(5)`, a window
+    * type Spark has no built-in for: each key's sealed events in
+    * (ts, event_id) order, one row per COMPLETE window of 5 (a trailing
+    * partial window never fires). Fed in that order, the state is O(1)
+    * per key: the open window's count and exact sum, and its index. */
+  private[streamline] object CountWindow extends SealedFold[CwSt, CwOut] {
+    private val size = 5L
+    def empty: CwSt = CwSt(0L, BigDecimal(0), 0L)
+    def step(s: CwSt, e: CepEv): (CwSt, Seq[CwOut]) = {
+      val sum = s.sum + dec4(e.value)
+      if (s.n + 1 < size) (CwSt(s.n + 1, sum, s.win), Nil)
+      else (CwSt(0L, BigDecimal(0), s.win + 1),
+        Seq(CwOut(e.user_id, s.win, size, sum.toDouble)))
+    }
+    override def project(m: DataFrame): DataFrame =
+      m.orderBy("user_id", "win_id")
+  }
+
+  /** Oracle: complete windows of the (ts, event_id)-ordered per-key
+    * sequence of watermark-sealed events, via row_number arithmetic. */
+  private val streamCountWindowSql = """
+    WITH e AS (SELECT user_id, value, event_id,
+                 date_trunc('microseconds', ts) AS tsu FROM events),
+    wm AS (SELECT date_trunc('millisecond', max(tsu))
+             - INTERVAL 10 MINUTE AS w FROM e),
+    o AS (SELECT user_id, value,
+            row_number() OVER (PARTITION BY user_id
+              ORDER BY tsu, event_id) - 1 AS rn,
+            count(*) OVER (PARTITION BY user_id) AS total
+          FROM e WHERE tsu <= (SELECT w FROM wm))
+    SELECT user_id, rn // 5 AS win_id, count(*) AS n,
+      CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_val
+    FROM o WHERE rn < total - (total % 5)
+    GROUP BY user_id, rn // 5
+    ORDER BY user_id, win_id"""
 
   /** The O(1) running accumulator. */
   case class OvSt(n: Long, sum: BigDecimal)
@@ -631,6 +587,32 @@ object Stateful {
     FROM lc WHERE event_type = 'purchase'
     ORDER BY user_id, event_id"""
 
+  /** The latest dimension event fed so far, and the probes fed at one
+    * µs that still wait for it. */
+  case class AsOfSt(dim: Option[CepEv], held: Vector[CepEv])
+
+  /** Each `probeType` event joined with the latest `dimType` event at or
+    * before its µs — the as-of (temporal) join as a keyed fold in
+    * (ts, id) order. Among dimension events at one µs the max id wins,
+    * and one at the probe's own µs applies whatever its id: a probe is
+    * held until the fold moves past its µs (an event at a later µs, the
+    * watermark, or the end of the key), then resolved by `out`. State
+    * per key is one dimension event plus the probes at one µs.
+    * q_join_temporal and q_stream_connect are its two instances. */
+  private[streamline] abstract class AsOf[O](dimType: String,
+      probeType: String) extends Pattern[AsOfSt, O] {
+    def out(probe: CepEv, dim: Option[CepEv]): Option[O]
+    def empty: AsOfSt = AsOfSt(None, Vector.empty)
+    def step(s: AsOfSt, e: CepEv): (AsOfSt, Seq[O]) =
+      if (e.event_type == dimType) (s.copy(dim = Some(e)), Nil)
+      else if (e.event_type == probeType) (s.copy(held = s.held :+ e), Nil)
+      else (s, Nil)
+    def expire(s: AsOfSt, user: Long, t: Long): (AsOfSt, Seq[O]) =
+      if (s.held.forall(_.ts_us >= t)) (s, Nil)
+      else (s.copy(held = Vector.empty), s.held.flatMap(out(_, s.dim)))
+    def nextExpiry(s: AsOfSt): Option[Long] = s.held.headOption.map(_.ts_us)
+  }
+
   case class DlRow(user_id: Long, event_id: Long,
                    ts: java.sql.Timestamp, event_type: String, value: Double)
   case class DlState(event_id: Long, tsUs: Long,
@@ -700,8 +682,8 @@ object Stateful {
   /** StatefulProcessor for q_stream_tws: one (count, 4-dp-scaled-sum)
     * ValueState cell per key, updated per batch, running totals
     * emitted. The scaled-long sum keeps the accumulation exact and
-    * merge-order free (same dec4 discipline as the mapGroupsWithState
-    * witnesses). */
+    * merge-order free (the same dec4 discipline as q_stream_stateful's
+    * [[updateUser]]). */
   private class TwsCount(
       ttl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE)
@@ -1101,11 +1083,12 @@ object Stateful {
     CepStream.twin("q_stream_over", Over, streamOverSql),
     CepStream.twin("q_stream_zscore", Zscore, streamZscoreSql),
     CepStream.twin("q_stream_attrib", Attrib, streamAttribSql),
-    Q("q_stream_count_window", streamCountWindow _, streamCountWindowSql),
+    CepStream.twin("q_stream_count_window", CountWindow,
+      streamCountWindowSql),
     Q("q_stream_funnel", streamFunnel _,
       streamline.batch.Aggregates.aggFunnelSql),
     Q("q_stream_timeout", streamTimeout _, streamTimeoutSql),
-    Q("q_join_temporal", joinTemporal _, joinTemporalSql),
+    CepStream.twin("q_join_temporal", Temporal, joinTemporalSql),
     Q("q_stream_late", streamLate _, streamLateSql),
     Q("q_stream_late_side", streamLateSide _, streamLateSideSql))
 }

@@ -101,12 +101,16 @@ class SurveyCoverageSpec extends AnyFunSuite {
 
   /** One keyed event-time operator: every sealed-replay fold runs
     * through `CepStream.twin`, so its watermark and timer policy lives
-    * in one place. The only other event-time timer is q_stream_timeout's
-    * idle flush. Code lines only; each hit is named by its enclosing
-    * `def`. */
+    * in one place. Every `*GroupsWithState` call site is listed with its
+    * output mode and timeout: the only other event-time timer is
+    * q_stream_timeout's idle flush, and the only folds that see rows as
+    * they arrive are the three whose answers are order-free (updates
+    * reduced to the last per key). Code lines only; each call is named
+    * by its enclosing `def`. */
   test("EventTimeTimeout is used only by CepStream.twin and the idle flush") {
     import scala.jdk.CollectionConverters._
     val defLine = "^\\s*(?:private(?:\\[\\w+\\])?\\s+)?def\\s+(\\w+)".r
+    val arg = "(OutputMode|GroupStateTimeout)\\.(\\w+)".r
     val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
     val sites = try files.iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
@@ -114,17 +118,23 @@ class SurveyCoverageSpec extends AnyFunSuite {
         val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
         lines.indices.filter { i =>
           val t = lines(i).trim
-          t.contains("GroupStateTimeout.EventTimeTimeout") &&
+          t.contains("GroupsWithState(") &&
             !t.startsWith("*") && !t.startsWith("/")
         }.map { i =>
           val enclosing = (i to 0 by -1).iterator
             .flatMap(j => defLine.findFirstMatchIn(lines(j)).map(_.group(1)))
             .nextOption().getOrElse("?")
-          s"${p.getFileName}:$enclosing"
+          val args = arg.findAllMatchIn(lines.slice(i, i + 2).mkString(" "))
+            .map(_.group(2)).mkString(" ")
+          s"${p.getFileName}:$enclosing $args"
         }
       } finally files.close()
-    assert(sites.sorted ==
-      Seq("CepStream.scala:twin", "Stateful.scala:streamTimeout"),
-      s"event-time timers outside the sealed-replay operator: $sites")
+    assert(sites.sorted == Seq(
+      "CepStream.scala:twin Append EventTimeTimeout",
+      "Stateful.scala:streamDedupLast Update NoTimeout",
+      "Stateful.scala:streamFunnel Update NoTimeout",
+      "Stateful.scala:streamStateful Update NoTimeout",
+      "Stateful.scala:streamTimeout Append EventTimeTimeout"),
+      s"keyed-state operators outside the sealed-replay operator: $sites")
   }
 }

@@ -10,10 +10,11 @@ import streamline.batch.Cep
 import streamline.batch.Cep.{CepEv, Pattern}
 import streamline.stream.CepStream
 import streamline.stream.CepStream.CepState
-import streamline.stream.Stateful
+import streamline.stream.{Connect, Stateful}
 
-/** Randomized incremental ≡ batch equivalence for EVERY streaming CEP
-  * operator: random event sequences, random monotone watermark
+/** Randomized incremental ≡ batch equivalence for EVERY pattern the
+  * sealed-replay operator runs (the CEP patterns, the running folds and
+  * the as-of joins): random event sequences, random monotone watermark
   * schedules, and random per-event delivery batches (any batch whose
   * watermark the event's time still exceeds — the same admission rule
   * Spark's late-row filter enforces). The streamed output must equal
@@ -29,12 +30,13 @@ class CepStreamEquivalenceSpec extends SparkSuite {
 
   // Single-key sequences: the operators are per-key, so per-key
   // equivalence is the whole property. ts ≥ 1 min keeps every event
-  // above the first watermark step. Values are mostly flat with rare
-  // spikes, so the z-score ring both fills and flags.
+  // above the first watermark step; whole minutes make ts ties common.
+  // Values are mostly flat with rare spikes, so the z-score ring both
+  // fills and flags; `error` events are the connect rules.
   private def evsGen: Gen[List[CepEv]] = for {
     n <- Gen.choose(20, 60)
     evs <- Gen.listOfN(n, for {
-      t <- Gen.oneOf("click", "purchase", "view")
+      t <- Gen.oneOf("click", "purchase", "view", "error")
       ts <- Gen.choose(1L, 25L).map(_ * MIN_US)
       v <- Gen.frequency(12 -> Gen.const(1.0),
         1 -> Gen.choose(-40000L, 40000L).map(_ / 10000.0))
@@ -101,9 +103,12 @@ class CepStreamEquivalenceSpec extends SparkSuite {
   // A match is decided when its purchase seals; absence, once the
   // watermark (or a sealed later event) proves the window closed without
   // a purchase — strict bound; a running fold's row, when the event that
-  // emitted it seals.
+  // emitted it seals; a count window, when its fifth event in (ts, id)
+  // order seals; an as-of row, once the watermark passes its probe —
+  // strict bound, since a dimension row at the probe's µs still applies.
   private def twins(evs: List[CepEv]): Seq[Twin[_, _]] = {
     val tsOf = evs.map(e => e.event_id -> e.ts_us).toMap
+    val ordered = evs.sortBy(e => (e.ts_us, e.event_id)).toVector
     Seq[Twin[_, _]](
       Twin("kleene", Cep.kleene,
         (m: Cep.CepMatch, wm: Long) => m.purchase_ts_us <= wm),
@@ -132,7 +137,14 @@ class CepStreamEquivalenceSpec extends SparkSuite {
       Twin("zscore", Stateful.Zscore,
         (m: Stateful.ZsOut, wm: Long) => tsOf(m.event_id) <= wm),
       Twin("attrib", Stateful.Attrib,
-        (m: Stateful.AtOut, wm: Long) => tsOf(m.event_id) <= wm))
+        (m: Stateful.AtOut, wm: Long) => tsOf(m.event_id) <= wm),
+      Twin("count_window", Stateful.CountWindow,
+        (m: Stateful.CwOut, wm: Long) =>
+          ordered((m.win_id * 5 + 4).toInt).ts_us <= wm),
+      Twin("temporal", Stateful.Temporal,
+        (m: Stateful.TjOut, wm: Long) => m.p_ts_us < wm),
+      Twin("connect", Connect.Rules,
+        (m: Connect.CsOut, wm: Long) => m.ts_us < wm))
   }
 
   private def checkAll(seed: Long, wmMaxMin: Long): Unit = {
@@ -148,5 +160,40 @@ class CepStreamEquivalenceSpec extends SparkSuite {
 
   test("streamed CEP equals sealed-restricted batch under PARTIAL sealing") {
     (1L to 6L).foreach(checkAll(_, wmMaxMin = 20L))
+  }
+
+  /** The same rows delivered in one batch, or in two with the earlier
+    * row second (both at watermark 0, so it is on time), must give the
+    * same output once a final watermark seals them all. */
+  private def splitInvariant[S, O](p: Pattern[S, O], late: CepEv,
+                                   rest: List[CepEv]): List[O] = {
+    val sealAll = 1000 * MIN_MS -> Nil
+    val one = runIncremental[CepState[S], O](CepStream.update(p),
+      List(0L -> (rest :+ late), sealAll))
+    val two = runIncremental[CepState[S], O](CepStream.update(p),
+      List(0L -> rest, 0L -> List(late), sealAll))
+    assert(one == two)
+    one
+  }
+
+  private def ev(id: Long, t: String, min: Long, v: Double) =
+    CepEv(1L, id, t, min * MIN_US, v)
+
+  test("count window: an earlier event delivered later joins its window") {
+    val out = splitInvariant(Stateful.CountWindow, ev(6, "view", 5, 5.0),
+      (10L to 14L).toList.map(m => ev(m - 9, "view", m, m.toDouble)))
+    assert(out == List(Stateful.CwOut(1L, 0L, 5L, 51.0)))
+  }
+
+  test("temporal join: a probe delivered after a later version sees its own") {
+    val out = splitInvariant(Stateful.Temporal, ev(3, "purchase", 50, 0.0),
+      List(ev(1, "view", 10, 1.0), ev(2, "view", 90, 2.0)))
+    assert(out == List(Stateful.TjOut(1L, 3L, 50 * MIN_US, Some(1.0), Some(1L))))
+  }
+
+  test("connect: a rule delivered after its data still applies") {
+    val out = splitInvariant(Connect.Rules, ev(2, "error", 50, 1.0),
+      List(ev(1, "view", 100, 5.0)))
+    assert(out == List(Connect.CsOut(1L, 1L, 100 * MIN_US, 5.0, 2L, 1.0)))
   }
 }
