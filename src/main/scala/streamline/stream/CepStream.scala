@@ -60,12 +60,13 @@ object CepStream {
     * with this batch's arrivals, feed the sealed prefix (ts ≤ watermark)
     * through the pattern's fold in (ts, id) order, then expire at the
     * watermark — every event fed later has ts above it. The state is
-    * removed once nothing is buffered or held. Otherwise a timer just
-    * above min(buffer head, earliest expiry) forces a pass when the
-    * watermark passes it with no new data for the key (Spark fires
-    * event-time timers on `timer < watermark`,
-    * FlatMapGroupsWithStateExec.processTimedOutState, and rejects timers
-    * at or below the watermark). */
+    * removed once nothing is buffered or held. Otherwise a timer at the
+    * last watermark at which min(buffer head, earliest expiry) is still
+    * pending forces a pass at the first watermark that resolves it, with
+    * no new data for the key (Spark fires event-time timers on
+    * `timer < watermark`, FlatMapGroupsWithStateExec
+    * .processTimedOutState, and accepts timers from the current
+    * watermark up, if positive: GroupStateImpl.setTimeoutTimestamp). */
   private[streamline] def update[S, O](p: Pattern[S, O])(uid: Long,
       rows: Iterator[CepEv], state: GroupState[CepState[S]]): Iterator[O] = {
     val prev = state.getOption.getOrElse(CepState(Vector.empty, p.empty))
@@ -86,9 +87,14 @@ object CepStream {
     if (future.isEmpty && st == p.empty) state.remove()
     else {
       state.update(CepState(future, st))
-      (future.headOption.map(_.ts_us) ++ p.nextExpiry(st)).minOption
-        .foreach(us => state.setTimeoutTimestamp(
-          math.max(us / 1000L + 1L, wmMs + 1L)))
+      // The last watermark ms at which the head is still pending. A
+      // buffered event at µs u is sealed from wm = ceil_ms(u), so its
+      // timer is ceil_ms(u) - 1 = floorDiv(u - 1, 1000); an expiry at µs
+      // e applies from wm = floor_ms(e) + 1, so its timer is floor_ms(e).
+      (future.headOption.map(e => math.floorDiv(e.ts_us - 1L, 1000L)) ++
+        p.nextExpiry(st).map(math.floorDiv(_, 1000L))).minOption
+        .foreach(ms => state.setTimeoutTimestamp(
+          math.max(ms, math.max(wmMs, 1L))))
     }
     out.result().iterator
   }

@@ -13,10 +13,13 @@ import org.apache.spark.sql.SparkSession
   *    witness (co-located joins); size to cluster parallelism at
   *    ingest time.
   *  - `graft.stream.statePartitions` — state-store partition count for
-  *    streaming queries; each micro-batch pays a fixed per-partition
-  *    state-store cost, so size to the executor count (harness: 4).
-  *    Applied by Streams.withStreamConfs to every drain and MemoryStream
-  *    witness; only the rescale, state-rewrite and state-evolve
+  *    streaming queries (default 1). Streams.drain pins it when a
+  *    checkpoint first starts, and every micro-batch, the trailing
+  *    no-data one included, then loads and commits every partition's
+  *    store, so a count above what the state needs is pure fixed cost:
+  *    every harness input is a few MB of state rows. On a cluster whose
+  *    stateful streams hold more state than one task should, size it to
+  *    the executor count. The rescale, state-rewrite and state-evolve
   *    witnesses pass explicit counts instead.
   *  - `graft.iter.partitions` — shuffle partition count inside iterative
   *    fixpoint loops (default: min(8, session shuffle partitions)). A
@@ -39,7 +42,7 @@ object Knobs {
   def bucketCount(spark: SparkSession): Int =
     spark.conf.get("graft.bucket.count", "8").toInt
   def statePartitions(spark: SparkSession): Int =
-    spark.conf.get("graft.stream.statePartitions", "4").toInt
+    spark.conf.get("graft.stream.statePartitions", "1").toInt
   def iterPartitions(spark: SparkSession): Int =
     spark.conf.get("graft.iter.partitions",
       // default 4 (was 8): harness label tables are a few thousand

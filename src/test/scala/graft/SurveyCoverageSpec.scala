@@ -99,36 +99,42 @@ class SurveyCoverageSpec extends AnyFunSuite {
     assert(copies.isEmpty, s"oracle text declared twice: ${copies.mkString("; ")}")
   }
 
+  /** The code lines of src/main/scala containing `needle` (comment
+    * lines skipped), each as `File.scala:enclosingDef` plus the line and
+    * the one after it. */
+  private def codeSites(needle: String): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val defLine = "^\\s*(?:private(?:\\[\\w+\\])?\\s+)?def\\s+(\\w+)".r
+    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+    try files.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+        lines.indices.filter { i =>
+          val t = lines(i).trim
+          t.contains(needle) && !t.startsWith("*") && !t.startsWith("/")
+        }.map { i =>
+          val enclosing = (i to 0 by -1).iterator
+            .flatMap(j => defLine.findFirstMatchIn(lines(j)).map(_.group(1)))
+            .nextOption().getOrElse("?")
+          s"${p.getFileName}:$enclosing" ->
+            lines.slice(i, i + 2).mkString(" ")
+        }
+      } finally files.close()
+  }
+
   /** One keyed event-time operator: every sealed-replay fold runs
     * through `CepStream.twin`, so its watermark and timer policy lives
     * in one place. Every `*GroupsWithState` call site is listed with its
     * output mode and timeout: the only other event-time timer is
     * q_stream_timeout's idle flush, and the only folds that see rows as
     * they arrive are the three whose answers are order-free (updates
-    * reduced to the last per key). Code lines only; each call is named
-    * by its enclosing `def`. */
+    * reduced to the last per key). */
   test("EventTimeTimeout is used only by CepStream.twin and the idle flush") {
-    import scala.jdk.CollectionConverters._
-    val defLine = "^\\s*(?:private(?:\\[\\w+\\])?\\s+)?def\\s+(\\w+)".r
     val arg = "(OutputMode|GroupStateTimeout)\\.(\\w+)".r
-    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
-    val sites = try files.iterator().asScala.toSeq
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
-        lines.indices.filter { i =>
-          val t = lines(i).trim
-          t.contains("GroupsWithState(") &&
-            !t.startsWith("*") && !t.startsWith("/")
-        }.map { i =>
-          val enclosing = (i to 0 by -1).iterator
-            .flatMap(j => defLine.findFirstMatchIn(lines(j)).map(_.group(1)))
-            .nextOption().getOrElse("?")
-          val args = arg.findAllMatchIn(lines.slice(i, i + 2).mkString(" "))
-            .map(_.group(2)).mkString(" ")
-          s"${p.getFileName}:$enclosing $args"
-        }
-      } finally files.close()
+    val sites = codeSites("GroupsWithState(").map { case (site, code) =>
+      s"$site ${arg.findAllMatchIn(code).map(_.group(2)).mkString(" ")}"
+    }
     assert(sites.sorted == Seq(
       "CepStream.scala:twin Append EventTimeTimeout",
       "Stateful.scala:streamDedupLast Update NoTimeout",
@@ -136,5 +142,16 @@ class SurveyCoverageSpec extends AnyFunSuite {
       "Stateful.scala:streamStateful Update NoTimeout",
       "Stateful.scala:streamTimeout Append EventTimeTimeout"),
       s"keyed-state operators outside the sealed-replay operator: $sites")
+  }
+
+  /** One finite-stream lifecycle: every streaming query in the engine
+    * is started by `Streams.drain`, the one place that scopes its confs,
+    * pins its state partitions and owns its checkpoint. A query starts
+    * through `DataStreamWriter.start` (with or without a path) or
+    * `toTable`. */
+  test("streaming queries are started only by Streams.drain") {
+    val sites = Seq(".start(", ".toTable(").flatMap(codeSites).map(_._1)
+    assert(sites == Seq("Streams.scala:drain"),
+      s"streaming queries started outside Streams.drain: $sites")
   }
 }

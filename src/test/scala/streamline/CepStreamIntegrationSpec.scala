@@ -2,11 +2,13 @@ package streamline
 
 import java.sql.Timestamp
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import streamline.batch.Cep
-import streamline.stream.CepStream
+import streamline.stream.{CepStream, Stateful}
 
 /** End-to-end multi-batch run of the streaming CEP operator through the
   * real micro-batch engine (MemoryStream → flatMapGroupsWithState with
@@ -15,17 +17,16 @@ import streamline.stream.CepStream
   * TIMER batch (no new data for the key) once the watermark passes it. */
 class CepStreamIntegrationSpec extends SparkSuite {
 
-  /** Feeds each delivery as one micro-batch into the Kleene operator
-    * under a 10-minute watermark; returns the matches as (user_id,
-    * n_clicks, first_click_id, purchase_id). */
-  private def kleene(deliveries: Seq[(Long, Long, String, Timestamp)]*)
-      : Seq[(Long, Long, Long, Long)] = {
+  /** Feeds each delivery as one micro-batch into `p`'s operator under a
+    * 10-minute watermark; returns every emitted row. */
+  private def run[S: TypeTag, O <: Product : TypeTag](p: Cep.Pattern[S, O],
+      deliveries: Seq[(Long, Long, String, Timestamp)]*): Seq[O] = {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, Long, String, Timestamp)]
     val name = s"cep_it_${System.identityHashCode(input)}"
-    val matches = input.toDS()
+    val out = input.toDS()
       .toDF("user_id", "event_id", "event_type", "ts")
       .withColumn("value", org.apache.spark.sql.functions.lit(0.0))
       .withWatermark("ts", "10 minutes")
@@ -34,18 +35,23 @@ class CepStreamIntegrationSpec extends SparkSuite {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, rows: Iterator[CepStream.CepRow],
-         state: GroupState[CepStream.CepState[Cep.NfaSt]]) =>
-          CepStream.update(Cep.kleene)(uid, rows.map(_.toEv), state)
+         state: GroupState[CepStream.CepState[S]]) =>
+          CepStream.update(p)(uid, rows.map(_.toEv), state)
       }
-    val q = matches.toDF().writeStream.format("memory").queryName(name)
+    val q = out.toDF().writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try deliveries.foreach { d => input.addData(d); q.processAllAvailable() }
     finally q.stop()
-    try spark.table(name)
-      .select($"user_id", $"n_clicks", $"first_click_id", $"purchase_id")
-      .as[(Long, Long, Long, Long)].collect().toSeq
+    try spark.table(name).as[O].collect().toSeq
     finally spark.catalog.dropTempView(name): Unit
   }
+
+  /** The Kleene matches as (user_id, n_clicks, first_click_id,
+    * purchase_id). */
+  private def kleene(deliveries: Seq[(Long, Long, String, Timestamp)]*)
+      : Seq[(Long, Long, Long, Long)] =
+    run(Cep.kleene, deliveries: _*)
+      .map(m => (m.user_id, m.n_clicks, m.first_click_id, m.purchase_id))
 
   test("a click run buffered in batch 1 matches its purchase after the watermark passes") {
     def ts(t: String) = Timestamp.valueOf(t)
@@ -79,5 +85,32 @@ class CepStreamIntegrationSpec extends SparkSuite {
       Seq((2L, 11L, "view", at(40))), // watermark → 30 min
       Seq((2L, 12L, "view", at(40))))
     assert(out.isEmpty, s"split delivery matched: $out")
+  }
+
+  // The final watermark w = 10:00:00.001 is set by user 4's rows at
+  // w + 10 min; the users below get no data after batch 1, so only
+  // their timers can drain them. Spark fires a timer once it is below
+  // the watermark, so each must be armed below w for a row at w.
+  private def ts(t: String) = Timestamp.valueOf(s"2024-03-01 $t")
+  private val setsWatermark = Seq((4L, 9L, "view", ts("10:10:00.001")))
+  private val afterWatermark = Seq((4L, 10L, "view", ts("10:10:00.001")))
+
+  test("rows sealed within 2 ms of the final watermark drain on their timers") {
+    val out = run(Stateful.Over,
+      Seq((1L, 1L, "view", ts("09:59:59.998")), // w - 3 ms
+        (2L, 2L, "view", ts("10:00:00.0005")),  // w - 0.5 ms
+        (3L, 3L, "view", ts("10:00:00.001"))),  // w
+      setsWatermark, afterWatermark)
+    assert(out.map(_.event_id).sorted == Seq(1L, 2L, 3L),
+      s"every row at or below the final watermark must be emitted, got $out")
+  }
+
+  test("an as-of probe just below the final watermark resolves on its timer") {
+    val out = run(Stateful.Temporal,
+      Seq((5L, 1L, "view", ts("09:00:00")),
+        (5L, 2L, "purchase", ts("10:00:00.0005"))), // w - 0.5 ms
+      setsWatermark, afterWatermark)
+    assert(out.map(o => (o.user_id, o.p_id, o.v_id)) == Seq((5L, 2L, Some(1L))),
+      s"the held probe must resolve against its version, got $out")
   }
 }

@@ -64,7 +64,7 @@ class CepStreamRelaxedSpec extends SparkSuite {
     // absence not yet proven at wm=1min — armed, timer at the expiry
     assert(out1.isEmpty)
     assert(st1.get.st.pending == List((1L, 0L)))
-    assert(st1.getTimeoutTimestampMs.get == 10 * MIN_MS + 1)
+    assert(st1.getTimeoutTimestampMs.get == 10 * MIN_MS)
     // watermark passes the window end with no data at all: emit
     val st2 = fresh(Some(st1.get), wmMs = 11 * MIN_MS)
     val out2 = CepStream.update(Cep.absence)(1L, Iterator.empty, st2).toList

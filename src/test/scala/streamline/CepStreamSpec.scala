@@ -43,8 +43,9 @@ class CepStreamSpec extends SparkSuite {
     val s = state.get
     assert(s.st.n == 1L && s.st.firstId == 1L)
     assert(s.buf.map(_.event_id) == List(2L, 3L))
-    // timer armed just above the earliest buffered event (2 min)
-    assert(state.getTimeoutTimestampMs.get == 2 * MIN_MS + 1)
+    // timer armed at the last watermark before the earliest buffered
+    // event (2 min) is sealed
+    assert(state.getTimeoutTimestampMs.get == 2 * MIN_MS - 1)
   }
 
   test("a run started in one batch completes in a later batch") {

@@ -17,7 +17,7 @@ class KnobsSpec extends SparkSuite {
     spark.conf.unset("graft.iter.aqe")
     assert(Knobs.dedupBlocks(spark) == 8)
     assert(Knobs.bucketCount(spark) == 8)
-    assert(Knobs.statePartitions(spark) == 4)
+    assert(Knobs.statePartitions(spark) == 1)
     // iteration loops default to min(8, session shuffle partitions)
     // and AQE off (fixed plan shape, per-superstep replan is latency)
     assert(Knobs.iterPartitions(spark) ==
@@ -57,17 +57,60 @@ class KnobsSpec extends SparkSuite {
   }
 
   test("streaming result is independent of the state-partition count") {
-    // graft.stream.statePartitions sizes the state store to the
-    // cluster; it must never reach the answer. Witnessed on the
-    // checkpoint-recovery query — the most state-machinery-heavy flow
-    // (two runs, restore, foreachBatch) — at 2 vs the default 4.
-    val q = SparkEntry.queries("q_stream_recovery")
-    val base = q(spark, sfDir).collect().map(_.toSeq).toSet
-    assert(base.nonEmpty)
+    // The state-partition count sizes the state store to the cluster;
+    // it must never reach the answer. Witnessed on the state-heaviest
+    // drains: checkpoint recovery (two runs, restore, foreachBatch), the
+    // cumulating window, transformWithState on RocksDB, and the state
+    // reader over a RocksDB checkpoint.
+    Seq("q_stream_recovery", "q_stream_cumulate", "q_stream_tws",
+        "q_stream_rocksdb_reader").foreach { name =>
+      val q = SparkEntry.queries(name)
+      val byParts = try Seq(1, 2, 4).map { n =>
+        spark.conf.set("graft.stream.statePartitions", n.toString)
+        n -> q(spark, sfDir).collect().map(_.toSeq).toSet
+      } finally spark.conf.unset("graft.stream.statePartitions")
+      val base = byParts.head._2
+      assert(base.nonEmpty, s"$name is empty")
+      byParts.foreach { case (n, rows) =>
+        assert(rows == base, s"$name at $n state partitions")
+      }
+    }
+  }
+
+  test("drain pins the knob's count unless a conf or the checkpoint overrides it") {
+    val stage = java.nio.file.Files.createTempDirectory("graft_parts").toFile
+    val ck = s"${stage.getPath}_ck"
     try {
-      spark.conf.set("graft.stream.statePartitions", "2")
-      assert(q(spark, sfDir).collect().map(_.toSeq).toSet == base)
-    } finally spark.conf.unset("graft.stream.statePartitions")
+      val s = spark
+      import s.implicits._
+      def write(ids: Seq[Long]) =
+        ids.toDF("id").write.mode("append").parquet(stage.getPath)
+      // the state-partition count of the drain's one stateful operator
+      def parts(confs: Seq[(String, String)] = Nil,
+          checkpoint: Option[String] = None): Long =
+        stream.Streams.drain(spark,
+          spark.readStream.schema("id LONG").parquet(stage.getPath)
+            .groupBy($"id" % 3).count()
+            .writeStream.outputMode("update").format("noop"),
+          confs, checkpoint)
+          .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+          .map(_.numShufflePartitions).max
+      write(1L to 20L)
+      assert(parts() == 1L, "the default drains with one partition")
+      try {
+        spark.conf.set("graft.stream.statePartitions", "2")
+        assert(parts() == 2L, "the knob sets the count")
+        assert(parts(Seq("spark.sql.shuffle.partitions" -> "3")) == 3L,
+          "an explicit drain conf wins over the knob")
+        assert(parts(checkpoint = Some(ck)) == 2L)
+      } finally spark.conf.unset("graft.stream.statePartitions")
+      write(21L to 30L)
+      assert(parts(checkpoint = Some(ck)) == 2L,
+        "a restarted checkpoint keeps the count it first started with")
+    } finally {
+      stream.Streams.deleteRec(stage)
+      stream.Streams.deleteRec(new java.io.File(ck))
+    }
   }
 
   test("scratch paths encode the source dir") {

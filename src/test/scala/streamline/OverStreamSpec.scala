@@ -54,8 +54,9 @@ class OverStreamSpec extends SparkSuite {
     val s = state.get
     assert(s.buf.map(_.event_id) == List(2L),
       "t=5min > wm=1min stays buffered")
-    // drain timer armed just above the earliest buffered event
-    assert(state.getTimeoutTimestampMs.get == 5 * MIN_MS + 1)
+    // drain timer armed at the last watermark before the earliest
+    // buffered event is sealed
+    assert(state.getTimeoutTimestampMs.get == 5 * MIN_MS - 1)
   }
 
   test("the running accumulator carries across batches") {

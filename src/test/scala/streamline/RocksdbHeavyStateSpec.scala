@@ -1,7 +1,6 @@
 package streamline
 
 import graft.{SparkEntry, SparkSuite}
-import org.apache.spark.sql.streaming.Trigger
 
 /** r19 judge item 3: the RocksDB witnesses (q_stream_rocksdb /
   * _reader) cover the backend on the recovery AGGREGATE only, but the
@@ -19,7 +18,8 @@ import org.apache.spark.sql.streaming.Trigger
   *  3. conf hygiene: the provider override never leaks out. */
 class RocksdbHeavyStateSpec extends SparkSuite {
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb = streamline.stream.Streams.rocksDb
+  private val providerKey = rocksDb._1
 
   private def stateFiles(ck: String): Seq[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -28,37 +28,27 @@ class RocksdbHeavyStateSpec extends SparkSuite {
     walk(new java.io.File(s"$ck/state")).map(_.getName)
   }
 
-  /** Drain a declared streaming plan into a memory sink with a
-    * retained checkpoint; returns (rows, checkpointDir). Caller
-    * deletes. */
-  private def drainPlan(tag: String, provider: Option[String],
+  /** Drain a declared streaming plan into a memory sink through
+    * Streams.drain, with the provider in `confs` and a retained
+    * checkpoint; returns (rows, checkpointDir). The sink's temp view is
+    * dropped before returning. Caller deletes the checkpoint. */
+  private def drainPlan(tag: String, confs: Seq[(String, String)],
       plan: org.apache.spark.sql.DataFrame, sortCols: Seq[String]) = {
     val ck = streamline.util.Knobs.fastTmp +
       s"/ck_rocksheavy_${tag}_" +
       java.util.UUID.randomUUID().toString.take(8)
-    val before = spark.conf.getOption(providerKey)
-    provider.foreach(spark.conf.set(providerKey, _))
+    val name = s"rocksheavy_$tag"
     try {
-      val name = s"rocksheavy_$tag"
-      streamline.stream.Streams.withStreamConfs(spark) {
-        val q = plan
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      streamline.stream.Streams.drain(spark, plan.writeStream
+        .format("memory").queryName(name).outputMode("append"),
+        confs, Some(ck))
       (spark.table(name).orderBy(sortCols.head, sortCols.tail: _*)
         .collect().toSeq, ck)
-    } finally before match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
-    }
+    } finally spark.catalog.dropTempView(name): Unit
   }
 
-  private def drain(tag: String, provider: Option[String]) =
-    drainPlan(tag, provider,
+  private def drain(tag: String, confs: Seq[(String, String)]) =
+    drainPlan(tag, confs,
       streamline.stream.Streams.joinStreamStreamPlan(spark, sfDir),
       Seq("user_id", "id1", "id2"))
 
@@ -70,11 +60,10 @@ class RocksdbHeavyStateSpec extends SparkSuite {
     // ADVICE: the first drain's retained checkpoint used to leak then)
     val created = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
-      val (hdfsRows, ckHdfs) = drain("hdfs", None)
+      val (hdfsRows, ckHdfs) = drain("hdfs", Nil)
       created += ckHdfs
-      val (rocksRows, ckRocks) = drain("rocks", Some(
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"))
+      val (rocksRows, ckRocks) =
+        drain("rocks", Seq(rocksDb))
       created += ckRocks
       assert(rocksRows.nonEmpty && rocksRows == hdfsRows,
         "RocksDB join drain must emit the identical matched pairs")
@@ -100,18 +89,17 @@ class RocksdbHeavyStateSpec extends SparkSuite {
     // second keyed-state TYPE: dropDuplicatesWithinWatermark keeps a
     // (key -> expiry) store, no value rows — exercises a different
     // column-family layout than the join's four stores
-    def run(tag: String, provider: Option[String]) =
-      drainPlan(tag, provider,
+    def run(tag: String, confs: Seq[(String, String)]) =
+      drainPlan(tag, confs,
         streamline.stream.Streams.streamDedupPlan(spark, sfDir),
         Seq("user_id", "event_type"))
     // same one-finally cleanup discipline as the join test above
     val created = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
-      val (hdfsRows, ckHdfs) = run("dedup_hdfs", None)
+      val (hdfsRows, ckHdfs) = run("dedup_hdfs", Nil)
       created += ckHdfs
-      val (rocksRows, ckRocks) = run("dedup_rocks", Some(
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"))
+      val (rocksRows, ckRocks) =
+        run("dedup_rocks", Seq(rocksDb))
       created += ckRocks
       assert(rocksRows.nonEmpty && rocksRows == hdfsRows,
         "RocksDB dedup drain must emit the identical distinct keys")

@@ -112,7 +112,7 @@ class RuleStateBoundSpec extends SparkSuite {
     val st1 = state(wmMs = Some(100L))
     assert(run(st1, ctrl(1, 50, 5.0), data(10, 100, 9.0)).isEmpty)
     assert(st1.get.st.held.map(_.event_id) == Vector(10L))
-    assert(st1.getTimeoutTimestampMs.get == 101L)
+    assert(st1.getTimeoutTimestampMs.get == 100L)
     val out = run(state(wmMs = Some(101L), Some(st1.get)))
     assert(out.map(o => (o.event_id, o.rule_id)) == List((10L, 1L)))
   }

@@ -56,7 +56,7 @@ class ZscoreStreamSpec extends SparkSuite {
     assert(out.isEmpty)
     assert(st.get.st.ring == List(10000L), "only the sealed row joined")
     assert(st.get.buf.map(_.event_id) == List(2L))
-    assert(st.getTimeoutTimestampMs.get == 50 * MIN_MS + 1)
+    assert(st.getTimeoutTimestampMs.get == 50 * MIN_MS - 1)
   }
 
   test("the ring carries across batches (baseline built in batch 1)") {
