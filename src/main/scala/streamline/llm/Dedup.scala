@@ -704,26 +704,14 @@ object Dedup {
     * `base` index, and accumulates the per-batch verdicts. */
   private[streamline] def streamIncrementalDrain(
       spark: SparkSession, stage: String, base: DataFrame): DataFrame = {
-    // The probe inside foreachBatch is STATELESS batch work — the
-    // small state-store partition count the drain pins (sized to
-    // per-partition state-store fixed cost) starves its six keyed
-    // joins of parallelism for no state in return. Capture the
-    // session's batch shuffle sizing here and scope it around each
-    // probe; batches run sequentially on the execution thread, and the
-    // streaming plan itself (file scan -> foreachBatch) has no
-    // exchange, so the engine never reads the conf mid-flight.
-    val probeParts = Seq("spark.sql.shuffle.partitions" ->
-      spark.conf.get("spark.sql.shuffle.partitions"))
     streamline.stream.Streams.foldFiles[DataFrame](spark, stage,
         "doc_id LONG, text STRING") { (acc, df) =>
       // The shingled delta is checkpointed FIRST (r22): the probe
       // references it in three join sites (md5 probe, gram explode,
       // verify re-attach), each of which would otherwise re-read the
       // shard and re-run the interpreted shingle lambdas.
-      val verdicts = streamline.batch.SkewJoin.withConfs(spark, probeParts) {
-        val delta = incShingled(df).localCheckpoint(true)
-        incrementalProbe(spark, delta, base).localCheckpoint(true)
-      }
+      val delta = incShingled(df).localCheckpoint(true)
+      val verdicts = incrementalProbe(spark, delta, base).localCheckpoint(true)
       acc.fold(verdicts)(_.unionByName(verdicts))
     }
   }

@@ -80,6 +80,12 @@ object Streams {
   private val checksumKey =
     "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
+  /** Read by Spark's `CheckpointFileManager.create` from the Hadoop
+    * conf of the session (offset and commit logs) and of each state
+    * store when the query starts. */
+  private[streamline] val fileManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
   /** The one finite-stream lifecycle: runs `writer` to completion under
     * `trigger` (`Trigger.AvailableNow` unless the witness needs a
     * schedule or feeds its source after start) and returns the query's
@@ -100,6 +106,17 @@ object Streams {
     *    `exec.task_ms` from 4,897 to 2,123 ms, and the retained heap by
     *    about 3.5 MB;
     *  - the checksum manager off (checksumKey above);
+    *  - the checkpoint file manager, [[NioCheckpointFileManager]]
+    *    (fileManagerKey above): without the native Hadoop library,
+    *    Spark's default manager forks a `chmod` and four `readlink`
+    *    processes per offset, commit, state and metadata file it writes.
+    *    At sf0.1 (4 vCPUs) a warm q_stream_cumulate started 111
+    *    processes, q_stream_rocksdb_reader 132 and q_stream_tws 89;
+    *    with this manager 0, 21 and 7 (left: RocksDB's upload and
+    *    Spark's own `rm -rf`). On the traced `stream_stateful` pass
+    *    (seed 1) `stream.wal_ms` fell from 284 to 10 ms,
+    *    `stream.self_ms` from 710 to 135 ms and `stream.plan_ms` from
+    *    309 to 98 ms;
     *  - `confs`, applied last, so a caller's explicit partition count
     *    wins. A restarted checkpoint keeps the count it was first
     *    started with, whatever the session says.
@@ -122,7 +139,8 @@ object Streams {
     try streamline.batch.SkewJoin.withConfs(spark, Seq(
         "spark.sql.shuffle.partitions" ->
           streamline.util.Knobs.statePartitions(spark).toString,
-        checksumKey -> "false") ++ confs) {
+        checksumKey -> "false",
+        fileManagerKey -> classOf[NioCheckpointFileManager].getName) ++ confs) {
       val q = writer.option("checkpointLocation", ckpt)
         .trigger(trigger).start()
       try await(q) finally if (q.isActive) q.stop()
@@ -137,7 +155,11 @@ object Streams {
     * through foreachBatch under [[drain]]. `step` must materialize
     * what it keeps — the batch frame is invalid once the micro-batch
     * commits. foreachBatch runs on the stream thread, so the state is
-    * handed to the caller through an AtomicReference. */
+    * handed to the caller through an AtomicReference. A fold has no
+    * state store, so its drain runs at the caller's batch shuffle
+    * count, not the state count: the batch frame's session is the
+    * stream's clone, taken at start, and every keyed join and
+    * aggregate `step` plans on it shuffles at that count. */
   private[streamline] def foldFiles[S](spark: SparkSession, stage: String,
       schema: String)(step: (Option[S], DataFrame) => S): S = {
     val acc = new java.util.concurrent.atomic.AtomicReference[Option[S]](None)
@@ -146,7 +168,7 @@ object Streams {
       .writeStream.outputMode("append")
       .foreachBatch { (df: Dataset[Row], _: Long) =>
         acc.set(Some(step(acc.get(), df.toDF())))
-      })
+      }, partsConf(spark.conf.get("spark.sql.shuffle.partitions").toInt))
     acc.get().getOrElse(throw new IllegalArgumentException(
       "stream fed no batches (stale checkpoint?)"))
   }
@@ -407,14 +429,20 @@ object Streams {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** An explicit state-partition count for [[drain]], overriding the
-    * knob: the rescale and rewrite oracles assert the counts they run
-    * with, and evolve keeps the count of its rewrite path. */
+  /** An explicit partition count for [[drain]], overriding the knob:
+    * the rescale and rewrite oracles assert the counts they run with,
+    * evolve keeps the count of its rewrite path, and [[foldFiles]]
+    * keeps the caller's batch count. */
   private def partsConf(parts: Int): Seq[(String, String)] =
     Seq("spark.sql.shuffle.partitions" -> parts.toString)
 
+  /** The two-run drain of q_stream_recovery and q_stream_rocksdb.
+    * `restartConfs`, when given, replace `confs` for the restart:
+    * CheckpointFileManagerSpec restarts a checkpoint under the other
+    * checkpoint file manager. */
   private[streamline] def recoveryDrain(spark: SparkSession, dir: String,
-      tag: String, confs: Seq[(String, String)]): DataFrame = {
+      tag: String, confs: Seq[(String, String)],
+      restartConfs: Option[Seq[(String, String)]] = None): DataFrame = {
     import spark.implicits._
     val root = streamline.util.Scratch.fresh(tag, dir)
     val (stage, ckpt, out) = (s"$root/in", s"$root/ck", s"$root/out")
@@ -423,7 +451,7 @@ object Streams {
     val b = events.agg(min($"ts"), max($"ts")).head()
     val cut = new java.sql.Timestamp(
       (b.getTimestamp(0).getTime + b.getTimestamp(1).getTime) / 2)
-    def run(): Unit =
+    def run(confs: Seq[(String, String)]): Unit =
       drain(spark, spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1") // several micro-batches/run
         .parquet(stage)
@@ -439,10 +467,11 @@ object Streams {
             .write.mode("append").parquet(out): Unit
         }, confs, Some(ckpt)): Unit
     events.where($"ts" < lit(cut)).repartition(2).write.parquet(stage)
-    run() // run 1: early half only, then STOP
+    run(confs) // run 1: early half only, then STOP
     events.where($"ts" >= lit(cut)).repartition(2)
       .write.mode("append").parquet(stage)
-    run() // run 2: RESTART from the same checkpoint, drain the rest
+    // run 2: RESTART from the same checkpoint, drain the rest
+    run(restartConfs.getOrElse(confs))
     spark.read.parquet(out)
       .select($"w_start", $"event_type", $"sum_val", $"n")
       .orderBy($"w_start", $"event_type")

@@ -22,6 +22,7 @@ class ConfHygieneSpec extends SparkSuite {
     "spark.sql.sources.partitionOverwriteMode",
     "spark.sql.parquet.outputTimestampType",
     "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+    "spark.sql.streaming.checkpointFileManagerClass",
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.adaptive.coalescePartitions.enabled",
     "spark.sql.scripting.enabled")
@@ -43,8 +44,8 @@ class ConfHygieneSpec extends SparkSuite {
     "q_stream_rescale", "q_stream_state_rewrite", "q_stream_state_evolve",
     "q_stream_late_metric", "q_sink_upsert", "q_stream_sketch",
     "q_stream_connect_broadcast", "q_stream_proctime",
-    // the scripting-conf scope and the probe-partition scope inside a
-    // foreachBatch fold
+    // the scripting-conf scope and a foreachBatch fold, whose drain
+    // scopes the batch shuffle count
     "q_sql_script", "q_stream_dedup_incremental")
 
   test("conf-touching queries restore every sensitive conf") {

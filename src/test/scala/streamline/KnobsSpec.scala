@@ -1,6 +1,8 @@
 package streamline
 
 import graft.{SparkEntry, SparkSuite}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import streamline.util.{Knobs, Scratch}
 
 /** Cluster-size knobs flow from spark conf (SURVEY.md §2.12): defaults
@@ -111,6 +113,30 @@ class KnobsSpec extends SparkSuite {
       stream.Streams.deleteRec(stage)
       stream.Streams.deleteRec(new java.io.File(ck))
     }
+  }
+
+  test("a fold step plans its batch work at the session's shuffle count") {
+    // A fold has no state store: the batch frame's session (the
+    // stream's clone) must carry the caller's batch count, not the
+    // state count drain pins for stateful streams.
+    val stage = java.nio.file.Files.createTempDirectory("graft_foldparts").toFile
+    try {
+      val s = spark
+      import s.implicits._
+      (1L to 20L).toDF("id").coalesce(1).write.mode("append")
+        .parquet(stage.getPath)
+      val helper = new AdaptiveSparkPlanHelper {}
+      val parts = stream.Streams.foldFiles[Seq[Int]](spark, stage.getPath,
+          "id LONG") { (acc, df) =>
+        val plan = df.groupBy($"id" % 3).count().queryExecution.executedPlan
+        acc.getOrElse(Nil) ++
+          helper.collect(plan) { case e: ShuffleExchangeLike => e.numPartitions }
+      }
+      assert(parts.nonEmpty, "the groupBy planned no shuffle")
+      assert(parts.forall(
+        _ == spark.conf.get("spark.sql.shuffle.partitions").toInt),
+        s"fold shuffles at $parts partitions")
+    } finally stream.Streams.deleteRec(stage)
   }
 
   test("scratch paths encode the source dir") {
